@@ -45,7 +45,8 @@ object Dedup extends QueryModule {
     * flood — mass-identical boilerplate — is exact dedup's job, and its
     * bucket is quadratic pair work); the oracle applies the same cap. */
   /** (doc_id, fp) 48-bit SimHash fingerprints — one aggregation pass. */
-  private def simHashFingerprints(docs: DataFrame): DataFrame =
+  private def simHashFingerprints(docs: DataFrame): DataFrame = {
+    graft.functions.Md5Hi60.register(docs.sparkSession)
     Tables.spread(docs, "doc_id") // shingle+md5 must not run single-split
       .select(col("doc_id"), split(lower(col("text")), " ").as("w"))
       // <3-word docs yield no shingles; unguarded, sequence(1, size(w)-2)
@@ -54,7 +55,7 @@ object Dedup extends QueryModule {
       .select(col("doc_id"), explode(expr(
         "array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', element_at(w,i), element_at(w,i+1), element_at(w,i+2))))"))
         .as("t"))
-      .withColumn("hv", expr("CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("hv", expr("md5_hi60(t)"))
       // one aggregation pass, 48 conditional sums — NOT an explode(48)
       // (which would 48× the shuffle and add a second aggregation)
       .groupBy("doc_id")
@@ -66,6 +67,7 @@ object Dedup extends QueryModule {
         (0 until SimBits).map(b =>
           when(col(s"s$b") >= 0, lit(1L << b)).otherwise(0L))
           .reduce(_ + _).as("fp"))
+  }
 
   /** (doc_id, fp, j, band) SimHash band rows, uncapped. */
   private def simHashBands(docs: DataFrame): DataFrame =
@@ -108,6 +110,7 @@ object Dedup extends QueryModule {
       bandBits: Int): DataFrame = {
     val simBits = nBands * bandBits
     val words = (simBits + 59) / 60
+    graft.functions.Md5Hi60.register(docs.sparkSession)
     val withHv = docs
       .select(col("doc_id"), split(lower(col("text")), " ").as("w"))
       .filter(size(col("w")) >= 3)
@@ -115,7 +118,7 @@ object Dedup extends QueryModule {
         "array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', element_at(w,i), element_at(w,i+1), element_at(w,i+2))))"))
         .as("t"))
       .select(col("doc_id") +: (0 until words).map(k =>
-        expr(s"CAST(conv(substr(md5(concat('$k|', t)), 1, 15), 16, 10) AS BIGINT)")
+        expr(s"md5_hi60(concat('$k|', t))")
           .as(s"hv$k")): _*)
     withHv
       .groupBy("doc_id")

@@ -9,8 +9,10 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §2.2 l01-l05 + text-analysis extensions l06-l09).
   *
   * Everything here is expressed in relational Spark (no UDFs): hashing via
-  * md5-hex→bigint (portable to DuckDB: CAST('0x'||substr(md5(..),1,15) AS
-  * BIGINT) ≡ conv(substr(md5(..),1,15),16,10)), folds via higher-order
+  * md5_hi60(x), the top 60 bits of md5(x) as a BIGINT (the codegen'd
+  * [[graft.functions.Md5Hi60]], equal to the built-in md5 → 15 hex digits
+  * → conv(.., 16, 10) → BIGINT chain; the DuckDB oracle side is unchanged,
+  * CAST('0x'||substr(md5(..),1,15) AS BIGINT)), folds via higher-order
   * array functions (left-to-right in both engines).
   *
   * Scale posture: l02's MinHash-LSH is the standard shingle → K minhashes →
@@ -101,10 +103,11 @@ object Llm extends QueryModule {
     * map-side: 4 rows per doc, no extra shuffle before the candidate
     * equi-join. */
   private[llm] def bandSignatures(sh: DataFrame): DataFrame = {
+    graft.functions.Md5Hi60.register(sh.sparkSession)
     val minsig = sh.groupBy("doc_id").agg(
-      min(expr(s"CAST(conv(substr(md5(concat('0|', sh)), 1, 15), 16, 10) AS BIGINT)")).as("mh0"),
+      min(expr("md5_hi60(concat('0|', sh))")).as("mh0"),
       (1 until NumHashes).map(h =>
-        min(expr(s"CAST(conv(substr(md5(concat('$h|', sh)), 1, 15), 16, 10) AS BIGINT)")).as(s"mh$h")): _*)
+        min(expr(s"md5_hi60(concat('$h|', sh))")).as(s"mh$h")): _*)
     minsig.select(col("doc_id"), explode(array(
       (0 until NumHashes / RowsPerBand).map(j => struct(
         lit(j).as("band"),
@@ -150,8 +153,8 @@ object Llm extends QueryModule {
     * streaming caller keeps its event-time column). Docs under 3 words
     * have no shingles and are dropped, same as [[shinglesOf]]. */
   private[graft] def withBandSignatures(docs: DataFrame): DataFrame = {
-    def mh(h: Int) = s"array_min(transform(_shs, s -> " +
-      s"CAST(conv(substr(md5(concat('$h|', s)), 1, 15), 16, 10) AS BIGINT)))"
+    graft.functions.Md5Hi60.register(docs.sparkSession)
+    def mh(h: Int) = s"array_min(transform(_shs, s -> md5_hi60(concat('$h|', s))))"
     docs
       .withColumn("_w", split(lower(col("text")), " "))
       .filter(size(col("_w")) >= 3)
@@ -794,20 +797,22 @@ object Llm extends QueryModule {
 
   /** Document fingerprinting: order-independent 64-bit sketches over the
     * token multiset (min-hash + xor-fold + unique count). */
-  def l09(spark: SparkSession, dir: String): DataFrame =
+  def l09(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.Md5Hi60.register(spark)
     // spread (§2.5): the per-TOKEN md5 below is the heavy stage and ran
     // on the single-split documents scan (measured ~1 s serial); the
     // explode preserves the pinned partitioning and the doc_id groupBy
     // reuses it — no second exchange. At-scale no-op.
     Tables.spread(Tables.documents(spark, dir), "doc_id")
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("t"))
-      .withColumn("hv", expr("CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("hv", expr("md5_hi60(t)"))
       .groupBy("doc_id")
       .agg(
         min("hv").as("minhash"),
         expr("bit_xor(DISTINCT hv)").as("xor_fingerprint"),
         countDistinct(col("t")).as("n_uniq_tokens"))
       .orderBy("doc_id")
+  }
 
   /** l10: deterministic seeded global shuffle — the pre-training
     * permutation. Order key = md5(seed || doc_id): uniform, reproducible,
@@ -832,11 +837,12 @@ object Llm extends QueryModule {
     * handoff check (trainer vs curator). ONE map-side-combinable
     * aggregate: every stat here merges associatively+commutatively, so
     * the shuffle carries 8 partial rows per partition at any scale. */
-  def l47(spark: SparkSession, dir: String): DataFrame =
+  def l47(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.Md5Hi60.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"),
-        expr("CAST(conv(substr(md5(concat('shard:', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % 8").as("shard"),
-        expr("CAST(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT)").as("h"))
+        expr("md5_hi60(concat('shard:', CAST(doc_id AS STRING))) % 8").as("shard"),
+        expr("md5_hi60(text)").as("h"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(col("text"), "\\s+")).cast("bigint")).as("total_ws_tokens"),
@@ -845,21 +851,24 @@ object Llm extends QueryModule {
         min("doc_id").as("min_doc_id"),
         max("doc_id").as("max_doc_id"))
       .orderBy("shard")
+  }
 
   /** l11: hash-based train/val/test split (80/10/10). Assignment is a pure
     * function of the example id, so it is stable under re-runs,
     * repartitioning, and incremental appends — the property random splits
     * lack. Map-only: no shuffle before the deterministic ORDER BY. */
-  def l11(spark: SparkSession, dir: String): DataFrame =
+  def l11(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.Md5Hi60.register(spark)
     Tables.documents(spark, dir)
       .withColumn("bucket", expr(
-        "CAST(conv(substr(md5(concat('split:', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % 100"))
+        "md5_hi60(concat('split:', CAST(doc_id AS STRING))) % 100"))
       .withColumn("split",
         when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "val")
           .otherwise("test"))
       .select("doc_id", "bucket", "split")
       .orderBy("doc_id")
+  }
 
   /** l36: leakage-safe split assignment — the train/test-contamination
     * guard l11 lacks: two IDENTICAL documents must never land in
@@ -879,12 +888,13 @@ object Llm extends QueryModule {
     * and add a second exchange plus the join; capBuckets learned the
     * same lesson). */
   def leakageSafeSplit(docs: DataFrame): DataFrame = {
+    graft.functions.Md5Hi60.register(docs.sparkSession)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("h")
     docs
       .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
       .withColumn("rep", min("doc_id").over(w))
       .withColumn("bucket", expr(
-        "CAST(conv(substr(md5(concat('split:', CAST(rep AS STRING))), 1, 15), 16, 10) AS BIGINT) % 100"))
+        "md5_hi60(concat('split:', CAST(rep AS STRING))) % 100"))
       .withColumn("split",
         when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "val")

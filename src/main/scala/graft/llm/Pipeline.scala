@@ -23,9 +23,10 @@ object Pipeline extends QueryModule {
 
   private def r6(c: Column): Column = floor(c * 1000000.0 + 0.5) / 1000000.0
 
-  /** Portable uniform bucket in [0, 100) from a seeded md5 of the id. */
+  /** Portable uniform bucket in [0, 100) from a seeded md5 of the id.
+    * Callers must Md5Hi60.register(spark) first. */
   private def hashBucket(seed: String): Column = expr(
-    s"CAST(conv(substr(md5(concat('$seed', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % 100")
+    s"md5_hi60(concat('$seed', CAST(doc_id AS STRING))) % 100")
 
   /** Distinct word-8-gram hashes per document. 8 words is the standard
     * contamination shingle (large enough that shared grams imply copied
@@ -37,7 +38,8 @@ object Pipeline extends QueryModule {
 
   /** Distinct word-8-gram hashes per `key` (doc_id for the per-document
     * operators, source for the corpus-level overlap matrix). */
-  private def gramsBy(spark: SparkSession, dir: String, key: String): DataFrame =
+  private def gramsBy(spark: SparkSession, dir: String, key: String): DataFrame = {
+    graft.functions.Md5Hi60.register(spark)
     // spread by doc_id (high-cardinality) even when keyed by source: the
     // gram hashing below is the expensive stage and must not run on the
     // one task a single-split fixture scan yields (Tables.spread doc)
@@ -47,9 +49,9 @@ object Pipeline extends QueryModule {
       .filter(size(col("w")) >= 8) // sequence(1, size-7) turns descending below 8 words
       .select(col(key), explode(expr(
         "transform(sequence(1, size(w)-7), i -> concat_ws(' ', slice(w, i, 8)))")).as("g"))
-      .select(col(key),
-        expr("CAST(conv(substr(md5(g), 1, 15), 16, 10) AS BIGINT)").as("gh"))
+      .select(col(key), expr("md5_hi60(g)").as("gh"))
       .distinct()
+  }
 
   /** l14: benchmark decontamination — flag training documents sharing any
     * word-8-gram with the held-out eval slice (doc_id % 97 == 0 stands in
@@ -113,6 +115,7 @@ object Pipeline extends QueryModule {
     * reproducible, append-stable, and needs no shuffle to draw (the
     * rollup here only verifies achieved rates). */
   def l16(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.Md5Hi60.register(spark)
     val rate = when(col("lang") === "en", 100)
       .when(col("lang") === "de", 50).otherwise(25)
     Tables.documents(spark, dir)
@@ -156,7 +159,8 @@ object Pipeline extends QueryModule {
     * Map-only: threshold features, hash, sequence-explode — the whole op
     * rides the first pass over raw text, zero shuffles before the
     * deterministic ORDER BY. */
-  def l41(spark: SparkSession, dir: String): DataFrame =
+  def l41(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.Md5Hi60.register(spark)
     Tables.documents(spark, dir)
       .withColumn("toks", split(lower(col("text")), " "))
       .withColumn("n_tok", size(col("toks")))
@@ -166,7 +170,7 @@ object Pipeline extends QueryModule {
       .withColumn("wq", expr(
         "2 + IF(uniq_pct >= 60, 2, 0) + IF(n_tok >= 40, 2, 0) + IF(stop_pct >= 8, 2, 0)"))
       .withColumn("u4", expr(
-        "CAST(conv(substr(md5(concat('rs:', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % 4"))
+        "md5_hi60(concat('rs:', CAST(doc_id AS STRING))) % 4"))
       .withColumn("n_copies", expr("wq div 4 + IF(u4 < wq % 4, 1, 0)"))
       .filter(col("n_copies") > 0)
       .select(col("doc_id"), col("wq").cast("long").as("wq"),
@@ -174,6 +178,7 @@ object Pipeline extends QueryModule {
         explode(expr("sequence(1, n_copies)")).as("copy_idx"))
       .withColumn("copy_idx", col("copy_idx").cast("long"))
       .orderBy("doc_id", "copy_idx")
+  }
 
   /** l18: rule-based quality gate (Gopher-style hard filters): word count
     * in [5, 5000], mean word length in [2, 12], digit fraction <= 0.2,
@@ -229,6 +234,7 @@ object Pipeline extends QueryModule {
   }
 
   def l19(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.Md5Hi60.register(spark)
     val gated = Tables.spread(Tables.documents(spark, dir), "doc_id")
       .filter(col("doc_id") % 97 =!= 0) // the eval slice is not training data
       .filter(gatePasses) // regex gates — single-split without the spread
@@ -1286,11 +1292,12 @@ object Pipeline extends QueryModule {
     * pass (the per-source token sum); everything after runs on the
     * parameter-sized domain frame with 1-row broadcast totals. */
   def l57(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.Md5Hi60.register(spark)
     val d0 = Tables.documents(spark, dir)
       .groupBy(col("source"))
       .agg(sum(expr("n_chars div 4")).as("avail"))
       .withColumn("w",
-        expr("CAST(conv(substr(md5(source), 1, 15), 16, 10) AS BIGINT) % 5 + 1"))
+        expr("md5_hi60(source) % 5 + 1"))
     val tot = d0.agg(sum("avail").as("tot_avail"), sum("w").as("tot_w"))
     val r1 = d0.crossJoin(broadcast(tot))
       .withColumn("budget", expr("tot_avail * 4 div 5"))

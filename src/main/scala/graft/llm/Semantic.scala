@@ -133,13 +133,14 @@ object Semantic extends QueryModule {
 
   /** The chunker over any (doc_id, text) frame — SemanticSpec drives it
     * on synthetic edits to prove boundary locality. */
-  def chunkCdc(docs: DataFrame): DataFrame =
+  def chunkCdc(docs: DataFrame): DataFrame = {
+    graft.functions.Md5Hi60.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(lower(col("text")), " ").as("w"))
       .withColumn("nw", size(col("w")))
       .withColumn("bounds", expr(
         s"""filter(sequence(1, nw),
-           |  k -> pmod(CAST(conv(substr(md5(element_at(w, k)), 1, 15), 16, 10) AS BIGINT), $CdcMod) = 0)""".stripMargin))
+           |  k -> pmod(md5_hi60(element_at(w, k)), $CdcMod) = 0)""".stripMargin))
       // starts/ends zip: (1, b1), (b1+1, b2), …, (bk+1, nw); the tail pair
       // is empty iff the last word is itself a boundary — filtered out
       .select(col("doc_id"), col("w"), posexplode(expr(
@@ -153,6 +154,7 @@ object Semantic extends QueryModule {
         (col("p.e") - col("p.s") + 1).cast("long").as("n_words"),
         md5(array_join(expr("slice(w, p.s, p.e - p.s + 1)"), " ")).as("chunk_md5"))
       .orderBy("doc_id", "chunk_idx")
+  }
 
   /** l29: unigram cross-entropy quality score. The corpus's own token
     * distribution is the LM; each doc scores avg(-ln p(token)). Per-doc

@@ -310,8 +310,9 @@ object Aggregates extends QueryModule {
   private[graft] val CmDepth = 4
   private[graft] val CmWidth = 256
 
+  /** Callers must Md5Hi60.register(spark) first. */
   private[graft] def cmCell: String =
-    s"CAST(conv(substr(md5(concat('cm', CAST(d AS STRING), ':', k)), 1, 15), 16, 10) AS BIGINT) % $CmWidth"
+    s"md5_hi60(concat('cm', CAST(d AS STRING), ':', k)) % $CmWidth"
 
   /** a18: Count-Min sketch — the MERGEABLE frequency sketch (the
     * counts-side sibling of a13's HLL cardinality merge, but fully
@@ -325,6 +326,7 @@ object Aggregates extends QueryModule {
     * true count, over-count bounded by collisions) is surfaced by
     * emitting both the exact count and the estimate per key. */
   def a18(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.Md5Hi60.register(spark)
     // the CmDepth-way explode + cell hash is a fan-out stage riding the
     // events scan (ONE split at fixture size → serial). Spread on the
     // uniform event_id BEFORE projecting it away (event_type has only 5

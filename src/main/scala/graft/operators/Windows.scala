@@ -194,15 +194,17 @@ object Windows extends QueryModule {
     * streaming setting. Ranked via the monotone image ln(u)/w (exactly
     * the same total order); selection happens at full double precision,
     * output carries no float columns. */
-  def o08(spark: SparkSession, dir: String): DataFrame =
+  def o08(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.Md5Hi60.register(spark)
     Tables.documents(spark, dir)
       .withColumn("u", expr(
-        "CAST(conv(substr(md5(concat('ws:', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS DOUBLE) / 1152921504606846976.0"))
+        "CAST(md5_hi60(concat('ws:', CAST(doc_id AS STRING))) AS DOUBLE) / 1152921504606846976.0"))
       .withColumn("k", expr("ln(u) / n_chars"))
       .orderBy(col("k").desc, col("doc_id"))
       .limit(50)
       .select("doc_id", "n_chars")
       .orderBy("doc_id")
+  }
 
   /** w07: IGNORE-NULLS gap fill — the sensor/telemetry idiom: a sparse
     * signal (here value surfaces only on every 5th event) forward-fills
