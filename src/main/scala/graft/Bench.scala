@@ -175,7 +175,14 @@ object Bench {
     // assists mechanically.
     case class QueryResult(name: String, best: Either[String, Double],
       gcSec: Double, runs: (Either[String, Double], Either[String, Double]),
-      memoPre: Long, memoCold: Int, taskSec: Double, heapMb: Long)
+      memoPre: Long, memoCold: Int, taskSec: Double, heapMb: Long,
+      compiles: Long)
+    // whole-stage codegen compiles (Janino), one count per generated
+    // class: a pass whose classes outnumber the codegen cache
+    // (spark.sql.codegen.cache.maxEntries, default 100) recompiles them
+    // on every run, so a steady non-zero count marks cache thrash
+    def compileCount(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val loadSweep = loadavg() // load right as the timed loop begins
     val results = SparkEntry.queries.filter(q => only.forall(_(q._1)))
       .toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -185,13 +192,17 @@ object Bench {
       val pre0 = SessionMemos.preHitCount
       val task0 = taskMs.get()
       val gc0 = gcMillis()
+      val cg0 = compileCount()
       val r1 = once(fn, name)
+      val cg1 = compileCount()
       val gc1 = gcMillis()
       val memoPre = SessionMemos.preHitCount - pre0
       val memoCold = SessionMemos.evictSince(mark) // run 2 re-pays run 1's builds
       drain() // run 2 must start from the same clean state run 1 did
       val gc2 = gcMillis()
+      val cg2 = compileCount()
       val r2 = once(fn, name)
+      val cg3 = compileCount()
       val gc3 = gcMillis()
       val best = (r1, r2) match {
         case (Right(a), Right(b)) => Right(math.min(a, b))
@@ -213,11 +224,11 @@ object Bench {
       val heapMb = (Runtime.getRuntime.totalMemory()
         - Runtime.getRuntime.freeMemory()) >> 20
       QueryResult(name, best, gcSec, (r1, r2), memoPre, memoCold,
-        taskSec, heapMb)
+        taskSec, heapMb, (cg1 - cg0) + (cg3 - cg2))
     }
     currentQuery = "post-sweep"
     val ok = results.collect {
-      case QueryResult(n, Right(t), _, _, _, _, _, _) => n -> t }
+      case QueryResult(n, Right(t), _, _, _, _, _, _, _) => n -> t }
     val totalSink = ok.collect { case (n, t) if sinkIds(n) => t }.sum
     val totalRead = ok.collect { case (n, t) if !sinkIds(n) => t }.sum
     // Fresh-JVM re-probe targets (full sweeps only). Two triggers, both
@@ -316,22 +327,25 @@ object Bench {
           }
       }
     val failed = results.collect {
-      case QueryResult(n, Left(_), _, _, _, _, _, _) => n }
+      case QueryResult(n, Left(_), _, _, _, _, _, _, _) => n }
     val errors = results.collect {
-      case QueryResult(n, Left(e), _, _, _, _, _, _) => n -> e }
+      case QueryResult(n, Left(e), _, _, _, _, _, _, _) => n -> e }
     val gcByQuery = results.collect {
-      case QueryResult(n, Right(_), g, _, _, _, _, _) => n -> g }
+      case QueryResult(n, Right(_), g, _, _, _, _, _, _) => n -> g }
     // task_sec / heap_mb: the r16 SF-robustness + inflation-trace columns
     // (see the listener comment above) — additions-only
     val taskByQuery = results.collect {
-      case QueryResult(n, Right(_), _, _, _, _, t, _) => n -> t }
+      case QueryResult(n, Right(_), _, _, _, _, t, _, _) => n -> t }
     val heapByQuery = results.collect {
-      case QueryResult(n, Right(_), _, _, _, _, _, h) => n -> h }
+      case QueryResult(n, Right(_), _, _, _, _, _, h, _) => n -> h }
+    // codegen_compiles: Janino compiles during the two timed runs
+    val compilesByQuery = results.collect {
+      case r if r.best.isRight => r.name -> r.compiles }
     // both timed runs, in order — the between-runs evictSince makes them
     // equally cold wrt the query's OWN memo builds, so a large r1/r2 gap
     // now reads as noise/GC, not a hidden memo hit
     val runsByQuery = results.collect {
-      case QueryResult(n, Right(_), _, (Right(a), Right(b)), _, _, _, _) =>
+      case QueryResult(n, Right(_), _, (Right(a), Right(b)), _, _, _, _, _) =>
         n -> Seq(a, b)
     }
     // memo tags (nonzero only): memo_pre = run 1 lookup hits on state
@@ -395,6 +409,7 @@ object Bench {
       s"""$ctx,"queries":${qsJson(ok)},""" +
       s""""gc_sec":${qsJson(gcByQuery)},"runs":${runsJson(runsByQuery)},""" +
       s""""task_sec":${qsJson(taskByQuery)},"heap_mb":${nJson(heapByQuery)},""" +
+      s""""codegen_compiles":${nJson(compilesByQuery)},""" +
       s""""memo_pre":${nJson(memoPreByQuery)},""" +
       s""""memo_cold":${nJson(memoColdByQuery)},""" +
       s""""fresh_probe":${qsJson(freshProbe.sortBy(_._1))},""" +

@@ -4,6 +4,7 @@ import java.nio.file.{Files, StandardCopyOption}
 
 import graft.functions.Uuid5
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -34,9 +35,10 @@ import org.apache.spark.sql.types._
   * Scale posture: one row per ODM file at the top; every stage is a
   * narrow projection or explode (no shuffle until a sink partitions by
   * file_oid/level). The reference's per-node round-trip gating (R15)
-  * becomes `gate()` — a left_semi join chain against a success-event table,
-  * level by level — so a 100 TB command log replays as joins, not
-  * sequential awaits.
+  * becomes `gatedCommands` — one join of all parent rows with the
+  * success-event table, closed over the tree into one materialized set
+  * of blocked positions that every level anti-joins against — so a
+  * 100 TB command log replays as joins, not sequential awaits.
   */
 object OdmPipeline {
 
@@ -127,10 +129,10 @@ object OdmPipeline {
     * ancestor's id/oid/eff_tx. Children of removed nodes are pruned at each
     * level (R17: remove never cascades).
     *
-    * Batch path caches every level: the consumers (commandsOf's 7 unioned
-    * projections, gatedCommands' join chain) each traverse the whole
+    * Batch path caches every level: the consumers (commandsOf's 5 unioned
+    * projections, gatedCommands' gate union) each traverse the whole
     * cascade, so without the cache the XML parse + uuid5 chain re-executes
-    * once per projection (~13× for c02). The streaming path
+    * once per projection. The streaming path
     * (explodedFrom) stays uncached — caching is illegal on streaming DFs
     * and micro-batches are single-pass anyway. */
   def exploded(spark: SparkSession, path: String): ExplodedLevels =
@@ -239,6 +241,32 @@ object OdmPipeline {
       itemGroups.drop("items"), items)
   }
 
+  /** The four non-leaf levels' command shapes: level number, entity name
+    * (the `<entity>/created|updated` event prefix), whether the verb has
+    * an upsert form (:139-143, :168-172 vs the form/item-group levels),
+    * the entity-id column and the params fields. Shared by [[commandsOf]]
+    * and the gate, so the command a gate acknowledges is the command sent. */
+  private final case class ParentLevel(level: Int, entity: String,
+      withUpsert: Boolean, id: String, params: Seq[String],
+      frame: ExplodedLevels => DataFrame) {
+    def verb: Column = {
+      val v = when(col("tx") === "remove", s"remove-$entity")
+      val v2 = if (withUpsert) v.when(col("tx") === "upsert", s"upsert-$entity") else v
+      concat(lit("odm-import/"), v2.otherwise(s"insert-$entity"))
+    }
+    def paramsStruct: Column = struct(params.map(col): _*)
+  }
+
+  private val parentLevels = Seq(
+    ParentLevel(1, "subject", withUpsert = true, "subject_id",
+      Seq("study_id", "subject_key"), _.subjects),
+    ParentLevel(2, "study-event", withUpsert = true, "study_event_id",
+      Seq("subject_id", "study_event_oid"), _.studyEvents),
+    ParentLevel(3, "form", withUpsert = false, "form_id",
+      Seq("study_event_id", "form_oid"), _.forms),
+    ParentLevel(4, "item-group", withUpsert = false, "item_group_id",
+      Seq("form_id", "item_group_oid"), _.itemGroups))
+
   /** Per-level command projections (R11). `lvls` is any (possibly gated)
     * subset of the exploded levels; emission rules per eff_tx:
     * update emits nothing except at the item leaf; remove emits at its own
@@ -249,45 +277,29 @@ object OdmPipeline {
         to_json(params).as("params_json"), col("file_oid"),
         docPosStr(col("doc_pos")).as("doc_pos"))
 
-    def verb(base: String, withUpsert: Boolean): Column = {
-      val v = when(col("tx") === "remove", s"remove-$base")
-      val v2 = if (withUpsert) v.when(col("tx") === "upsert", s"upsert-$base") else v
-      concat(lit("odm-import/"), v2.otherwise(s"insert-$base"))
-    }
+    val parentCmds = parentLevels.map(p =>
+      p.frame(lvls).filter(col("tx") =!= "update")
+        .transform(cmd(p.level, p.verb, p.paramsStruct)))
 
-    val subjectCmds = lvls.subjects.filter(col("tx") =!= "update")
-      .transform(cmd(1, verb("subject", withUpsert = true),
-        struct(col("study_id"), col("subject_key"))))
-    val studyEventCmds = lvls.studyEvents.filter(col("tx") =!= "update")
-      .transform(cmd(2, verb("study-event", withUpsert = true),
-        struct(col("subject_id"), col("study_event_oid"))))
-    val formCmds = lvls.forms.filter(col("tx") =!= "update")
-      .transform(cmd(3, verb("form", withUpsert = false),
-        struct(col("study_event_id"), col("form_oid"))))
-    val itemGroupCmds = lvls.itemGroups.filter(col("tx") =!= "update")
-      .transform(cmd(4, verb("item-group", withUpsert = false),
-        struct(col("form_id"), col("item_group_oid"))))
+    // the leaf is the one level where update DOES emit (update-item,
+    // :111-114). One branch for all three verbs: to_json drops null
+    // fields, so nulling the fields a verb does not carry leaves each
+    // verb's params byte-identical to its own struct — insert/upsert
+    // (item_group_id, item_oid, value), update (item_id, value), remove
+    // (item_group_id, item_oid). Unknown tx strings emit nothing here.
+    val update = col("tx") === "update"
+    val remove = col("tx") === "remove"
+    val itemValue = Seq("data_type", "value_string", "value_integer",
+      "value_float", "value_datetime").map(c => when(!remove, col(c)).as(c))
+    val itemCmds = lvls.items.filter(col("tx").isin("insert", "upsert", "update", "remove"))
+      .transform(cmd(5,
+        concat(lit("odm-import/"), when(remove, "remove-item")
+          .when(update, "update-item").otherwise("insert-item")),
+        struct(Seq(when(!update, col("item_group_id")).as("item_group_id"),
+          when(!update, col("item_oid")).as("item_oid"),
+          when(update, col("item_id")).as("item_id")) ++ itemValue: _*)))
 
-    // the leaf is the one level where update DOES emit (update-item, :111-114)
-    val itemValue = Seq(col("data_type"), col("value_string"),
-      col("value_integer"), col("value_float"), col("value_datetime"))
-    val itemInserts = lvls.items.filter(col("tx").isin("insert", "upsert"))
-      .transform(cmd(5, lit("odm-import/insert-item"),
-        struct(col("item_group_id") +: col("item_oid") +: itemValue: _*)))
-    val itemUpdates = lvls.items.filter(col("tx") === "update")
-      .transform(cmd(5, lit("odm-import/update-item"),
-        struct(col("item_id") +: itemValue: _*)))
-    val itemRemoves = lvls.items.filter(col("tx") === "remove")
-      .transform(cmd(5, lit("odm-import/remove-item"),
-        struct(col("item_group_id"), col("item_oid"))))
-
-    subjectCmds
-      .unionByName(studyEventCmds)
-      .unionByName(formCmds)
-      .unionByName(itemGroupCmds)
-      .unionByName(itemInserts)
-      .unionByName(itemUpdates)
-      .unionByName(itemRemoves)
+    (parentCmds :+ itemCmds).reduce(_ unionByName _)
   }
 
   /** Success-path command stream for an ODM file (every parent accepted). */
@@ -319,76 +331,81 @@ object OdmPipeline {
 
   /** Dependency gating (R15): given the downstream event log
     * (cid, name), reproduce exactly the set of commands the reference
-    * would SEND — a child level is reached iff its parent entity either
-    * emitted no command (update pass-through, which cascades
-    * unconditionally) or its command's correlated event is
-    * <level>/created (insert path) or additionally <level>/updated
-    * (upsert path). Failed parents prune whole subtrees (test :40-53).
-    * Pure left_semi join chain — no sequential awaits.
+    * would SEND — a child is reached iff its parent entity either emitted
+    * no command (update pass-through, which cascades unconditionally) or
+    * its command's correlated event is <entity>/created (insert path) or
+    * additionally <entity>/updated (upsert path). Failed parents prune
+    * whole subtrees (test :40-53); a parent with a null id (missing OID)
+    * never passes, so its subtree is pruned even under update.
+    *
+    * The rule is batch-wide: a parent entity passes if ANY of its rows in
+    * the batch does. Every entity id is v5(parent_id, oid), so all rows of
+    * one entity share one parent, and the level-by-level rule closes to:
+    * a row is sent iff every proper ancestor entity has at least one
+    * acknowledged row in the batch. Computed in one pass, no sequential
+    * awaits and no level-by-level chain:
+    *  1. one union of the levels 1–4 rows, each with its gate cmd_id;
+    *  2. one broadcast left-outer join with the events → `acked`;
+    *  3. one max(acked) per entity id; the rows of entities that never
+    *     pass become a small set of blocked (file_oid, doc_pos)
+    *     positions, materialized once;
+    *  4. every level drops the rows with a blocked ancestor prefix,
+    *     one broadcast anti-join per ancestor depth on
+    *     slice(doc_pos, 1, k).
+    * Positions stand for rows within one file, so this relies on
+    * file_oid naming one file of the batch — as the command log's
+    * per-file sequencing (CommandApply.sequenced) already does.
     */
   def gatedCommands(spark: SparkSession, path: String, batchCmdId: String,
       sub: String, events: DataFrame): DataFrame = {
     val lv = exploded(spark, path)
-    val ev = events.select(col("cid"), col("name").as("ev_name"))
+    val ev = broadcast(events.select(col("cid"), col("name").as("ev_name")))
 
-    // entities at a level that allow descent into their children
-    def descendants(df: DataFrame, entity: String, cmdName: Column, params: Column): DataFrame = {
-      val withId = df.withColumn("cmd_id",
-        graft.functions.Uuid5Expression.genCmdId(spark,
-          lit(batchCmdId), cmdName, to_json(params), col("file_oid")))
-      val passThrough = withId.filter(col("tx") === "update")
-      val gated = withId.filter(col("tx").isin("insert", "upsert"))
-        .join(ev,
-          col("cmd_id") === col("cid") &&
-            (col("ev_name") === s"$entity/created" ||
-              (col("tx") === "upsert" && col("ev_name") === s"$entity/updated")),
-          "left_semi")
-      passThrough.unionByName(gated)
-    }
+    // remove rows are never acknowledged and have no children, so they
+    // cannot change any entity's verdict
+    val gateRows = parentLevels.map { p =>
+      p.frame(lv).filter(col("tx") =!= "remove").select(
+        col("file_oid"), col("doc_pos"), col(p.id).as("eid"), col("tx"),
+        lit(p.entity).as("entity"),
+        when(col("tx").isin("insert", "upsert"),
+          graft.functions.Uuid5Expression.genCmdId(spark, lit(batchCmdId),
+            p.verb, to_json(p.paramsStruct), col("file_oid"))).as("cmd_id"))
+    }.reduce(_ unionByName _)
+    val acked = gateRows
+      .join(ev, col("cmd_id") === col("cid") &&
+        (col("ev_name") === concat(col("entity"), lit("/created")) ||
+          (col("tx") === "upsert" && col("ev_name") === concat(col("entity"), lit("/updated")))),
+        "left_outer")
+      .select(col("file_oid"), col("doc_pos"), col("eid"),
+        (col("tx") === "update" || col("cid").isNotNull).as("acked"))
 
-    // every *Sent level feeds BOTH the next gate and a command projection
-    // in commandsOf, and itemsSent's lineage would stack four join+UDF
-    // levels — deep enough that Catalyst re-analysis per consumer costs
-    // more than the data. localCheckpoint (eager) truncates the lineage at
-    // each gate: downstream plans see a flat LogicalRDD, and each gate
-    // level executes exactly once. (At scale this trades executor-local
-    // storage for not re-running a 5-level join chain 7×.)
-    //
-    // The chain is 8 eager checkpoints (4 *Ok + 4 *Sent). Each is one
-    // Spark job plus one broadcast job for its semi-join's build side:
-    // 16 of the 25 jobs of one perfbench odm_import pass (~6 k gated
-    // commands, local[4] on a 4-vCPU VM). Two alternatives were measured
-    // there, both passing the generator's expectations:
-    // - no checkpoints (a lazy chain): odm.log_write 2.3 s → 12.8–14.6 s,
-    //   every consumer re-running the join+uuid5 levels;
-    // - a flat gate (ancestor ids carried on each level, one checkpointed
-    //   ok-id set): pass_s 7.57 s vs 7.61 s, one run each — no gain
-    //   for the rewrite.
-    // So the chain stays.
-    def gate(df: DataFrame): DataFrame = df.localCheckpoint()
-    val subjOk = gate(descendants(lv.subjects, "subject",
-      concat(lit("odm-import/"), when(col("tx") === "upsert", "upsert-subject")
-        .otherwise("insert-subject")),
-      struct(col("study_id"), col("subject_key"))))
-    val seSent = gate(lv.studyEvents.join(
-      subjOk.select(col("subject_id").as("p")), col("subject_id") === col("p"), "left_semi"))
-    val seOk = gate(descendants(seSent, "study-event",
-      concat(lit("odm-import/"), when(col("tx") === "upsert", "upsert-study-event")
-        .otherwise("insert-study-event")),
-      struct(col("subject_id"), col("study_event_oid"))))
-    val formsSent = gate(lv.forms.join(
-      seOk.select(col("study_event_id").as("p")), col("study_event_id") === col("p"), "left_semi"))
-    val formsOk = gate(descendants(formsSent, "form", lit("odm-import/insert-form"),
-      struct(col("study_event_id"), col("form_oid"))))
-    val igSent = gate(lv.itemGroups.join(
-      formsOk.select(col("form_id").as("p")), col("form_id") === col("p"), "left_semi"))
-    val igOk = gate(descendants(igSent, "item-group", lit("odm-import/insert-item-group"),
-      struct(col("form_id"), col("item_group_oid"))))
-    val itemsSent = gate(lv.items.join(
-      igOk.select(col("item_group_id").as("p")), col("item_group_id") === col("p"), "left_semi"))
+    // The one materialization. The 8-checkpoint chain it replaces (4 *Ok
+    // + 4 *Sent levels, each an eager localCheckpoint plus a broadcast
+    // job for its semi-join) was 16 of the 25 Spark jobs of one perfbench
+    // odm_import pass; a lazy version of that chain re-ran its join+uuid5
+    // levels in every consumer (odm.log_write 2.3 → 12.8–14.6 s), and the
+    // closed form without this checkpoint more than doubles pass_s (13.0
+    // vs 5.8 s, seed 1). Against the chain, one traced pass (seed 1,
+    // local[4] on a 4-vCPU VM): 25 → 11 jobs, 154 → 51 tasks,
+    // odm.gate_s 3.26 → 1.45 s, odm.log_write_s 2.91 → 1.96 s.
+    val blocked = acked
+      .withColumn("ok", col("eid").isNotNull &&
+        max(col("acked")).over(Window.partitionBy(col("eid"))))
+      .filter(!col("ok"))
+      .select(col("file_oid").as("b_file"), col("doc_pos").as("b_pos"))
+      .localCheckpoint()
 
-    commandsOf(lv.copy(studyEvents = seSent, forms = formsSent,
-      itemGroups = igSent, items = itemsSent))
+    // a level-L row (doc_pos of length L + 1) has ancestor rows at the
+    // prefix lengths 2..L; null file_oids compare equal, like one file
+    def sent(df: DataFrame, level: Int): DataFrame =
+      (2 to level).foldLeft(df) { (d, k) =>
+        d.join(broadcast(blocked), col("file_oid") <=> col("b_file") &&
+          slice(col("doc_pos"), 1, k) === col("b_pos"), "left_anti")
+      }
+
+    commandsOf(lv.copy(studyEvents = sent(lv.studyEvents, 2),
+      forms = sent(lv.forms, 3), itemGroups = sent(lv.itemGroups, 4),
+      items = sent(lv.items, 5)))
       .withColumn("id", graft.functions.Uuid5Expression.genCmdId(spark,
         lit(batchCmdId), col("name"), col("params_json"), col("file_oid")))
       .withColumn("sub", lit(sub))
@@ -479,9 +496,14 @@ object OdmIo {
 
   /** Command-log sink: partitioned by (file_oid, level) so a downstream
     * replay of one file — the reference's unit of work — is a directory
-    * prune, and level ordering is free at read time. */
+    * prune, and level ordering is free at read time. The hash repartition
+    * on the same columns writes one file per directory, and it lets the
+    * optimizer drop an ordered input's global sort (and that sort's
+    * range-sampling job): the log's order is recovered at read time by
+    * CommandApply.sequenced, never taken from the file layout. */
   def writeCommandLog(cmds: DataFrame, path: String): Unit =
-    cmds.write.mode("overwrite").partitionBy("file_oid", "level").parquet(path)
+    cmds.repartition(col("file_oid"), col("level"))
+      .write.mode("overwrite").partitionBy("file_oid", "level").parquet(path)
 
   def readCommandLog(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

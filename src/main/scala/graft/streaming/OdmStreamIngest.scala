@@ -60,8 +60,9 @@ object OdmStreamIngest {
   final case class GatedChild(parent_id: String, child_id: String, status: String)
 
   /** The reference's parent→child dependency gate as STATEFUL streaming:
-    * in the batch pipeline R15 is a left_semi join chain (children kept
-    * only when the parent's command succeeded), which works because batch
+    * in the batch pipeline R15 is one join against the event log closed
+    * over the tree (OdmPipeline.gatedCommands: children kept only when
+    * every ancestor's command succeeded), which works because batch
     * sees the whole level before gating. On a live command stream a child
     * can arrive BEFORE its parent's success event, so the gate needs an
     * ORPHAN BUFFER: children of an unresolved parent wait in keyed state;

@@ -45,7 +45,7 @@ class OdmIoSpec extends SparkSuite {
   }
 
   test("command log: partitioned write, pruned re-read, order-free level recovery") {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_cmdlog"
+    val out = Files.createTempDirectory("graft_cmdlog").toString
     val cmds = OdmPipeline.enveloped(spark, OdmPipeline.fixturePath(),
       OdmQueries.BatchCmdId, "s")
     OdmIo.writeCommandLog(cmds, out)

@@ -22,7 +22,7 @@ class OdmScaleSpec extends SparkSuite {
     }
     val t0 = System.nanoTime()
     val env = OdmPipeline.enveloped(spark, s"$dir/*.xml", OdmQueries.BatchCmdId, "s")
-    val logDir = s"${System.getProperty("java.io.tmpdir")}/graft_scale_cmdlog"
+    val logDir = Files.createTempDirectory("graft_scale_cmdlog").toString
     OdmIo.writeCommandLog(env, logDir)
     val log = CommandApply.sequenced(OdmIo.readCommandLog(spark, logDir))
     val state = CommandApply.itemState(spark, log)
