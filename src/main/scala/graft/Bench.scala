@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query against
@@ -29,15 +31,14 @@ object Bench {
     * own load evidence.
     */
   private def loadavg(): String =
-    try new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
+    try Files.readString(Paths.get("/proc/loadavg"))
       .split("\\s+").take(3).mkString(" ")
     catch { case _: Throwable => "unavailable" }
 
   def main(args: Array[String]): Unit = {
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     // comma-separated id filter for fresh-JVM single-query triage;
     // unset = the full inventory (the driver's mode)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -52,81 +53,76 @@ object Bench {
     // is classified at its definition site, so omission from a central
     // list can no longer silently skew the read-plan class.
     val sinkIds = SparkEntry.sinkQueries
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner frees shuffle files / broadcast blocks only when
-      // driver GC collects their weak refs; with an 8 GB heap a full GC
-      // may not happen for hundreds of query runs, so ~340 executions'
-      // worth of shuffle state accumulates (the default periodic-GC
-      // interval is 30 min — longer than the whole bench). One-minute
-      // periodic GC + the explicit gc() between queries below keep the
-      // cleaner draining, so late queries measure the query, not the
-      // accumulated debt of the 100 before it.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     // Internal-job-failure attribution: a query can SUCCEED while one of
     // its Spark jobs failed and a fallback path recovered (Fixpoint's
     // observe-timeout fallback, adaptive replans). r07's sweep had one
     // such stack trace in the log with no owner — the JSON said 0 failed
-    // and nothing else. This listener pins every failed job to the query
-    // that was running, so a recovered failure is attributed, not lost.
-    val jobFailures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    @volatile var currentQuery: String = "init"
-    // Executor task-time accumulator (r15 VERDICT item 5): at sf0.1 the
-    // scaling block showed wall time under the per-job fixed-cost floor
-    // on nearly every query, so wall deltas no longer evidence read-class
-    // plan work. The per-query TASK-TIME SUM (both timed runs; the
-    // between-runs drain schedules no jobs) is the SF-robust signal —
-    // plan improvements move it even when wall is noise-bound. Published
-    // as `task_sec` in bench_full.json, additions-only; the contract
-    // line is unchanged.
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        e.jobResult match {
-          case org.apache.spark.scheduler.JobFailed(ex) =>
-            jobFailures.merge(currentQuery,
-              s"${ex.getClass.getName}: ${String.valueOf(ex.getMessage).take(200)}",
-              (a, b) => a + " | " + b)
-          case _ => ()
-        }
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null) { taskMs.addAndGet(e.taskInfo.duration); () }
-    })
+    // and nothing else. The listener charges every failed job to the
+    // query that was running, so a recovered failure is attributed, not
+    // lost.
+    // Executor task-time (r15 VERDICT item 5): at sf0.1 the scaling block
+    // showed wall time under the per-job fixed-cost floor on nearly every
+    // query, so wall deltas no longer evidence read-class plan work. The
+    // per-query TASK-TIME SUM (both timed runs; the between-runs drain
+    // schedules no jobs) is the SF-robust signal — plan improvements move
+    // it even when wall is noise-bound. Published as `task_sec` in
+    // bench_full.json, additions-only; the contract line is unchanged.
+    val jobs = Harness.listen(spark)
+    // failed jobs as (owner, failure), in job order; taken at each drain
+    val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    // Full state drain (graft.Harness.drain) — after the warmup, at the
+    // between-queries point AND between a query's two timed runs. r07's
+    // lesson: draining only between queries lets run 2 of a fixpoint
+    // query re-materialize its localCheckpoints while run 1's blocks are
+    // still resident (the sweep's `Block rdd_… already exists` churn),
+    // inflating the iterative tail 2-3× over the same code in a fresh
+    // JVM. The drain is NOT part of the measured time, and its forced GCs
+    // are excluded from gc_sec (each run's GC is windowed separately
+    // below). The listener-bus flush keeps job_failures honest: job
+    // events are delivered asynchronously, and a job that ends after its
+    // record was taken would lose its failure.
+    def drain(): Unit = {
+      org.apache.spark.GraftSparkBridge
+        .waitListenerBusEmpty(spark.sparkContext, 10000L)
+      failures ++= jobs.take().flatMap(j => j.failure.map(j.owner -> _))
+      Harness.drain(spark, settleMs = 200L)
+    }
     // Warm up EVERY query once at the smallest SF: whole-stage codegen
     // compiles per plan shape, so the compiled classes are reused at the
     // measured SF and per-query numbers measure the query, not javac.
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory)
       SparkEntry.queries.filter(q => only.forall(_(q._1))).foreach { case (name, fn) =>
-        currentQuery = s"warmup:$name"
+        jobs.own(spark.sparkContext, s"warmup:$name")
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
       }
-    // drop ALL warmup memo entries BEFORE the unpersist-all below: a
+    // drop ALL warmup memo entries BEFORE the drain's unpersist: a
     // warm-dir CC labeling / pair graph / BPE merge table left registered
     // would either shadow the measured dir (if sfDir == warmDir) or sit
     // as protected dead weight; evictSince(0) hits every registered
-    // session memo and (for frame memos) also unprotects, so the blanket
-    // unpersist stays a full reset
+    // session memo and (for frame memos) also unprotects, so the drain
+    // stays a full reset (and drops the warmup runs' shuffle state
+    // before timing)
     SessionMemos.evictSince(0L)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    System.gc() // drop the warmup runs' shuffle state before timing
+    drain()
+    // whole-stage codegen compiles (Janino), one count per generated
+    // class: a pass whose classes outnumber the codegen cache
+    // (spark.sql.codegen.cache.maxEntries, default 100) recompiles them
+    // on every run, so a steady non-zero count marks cache thrash
+    def compileCount(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // best-of-2: a single pass is at the mercy of one ill-timed GC pause
     // (observed 20× spikes); min-of-two is the standard stable estimator.
     // A failure carries its class + message + first graft stack frame into
     // the JSON — r07's lesson: a message-only stderr line is not enough to
     // reconcile a mid-sweep stack trace after the fact.
+    // Each run also returns the GC ms and the codegen compiles inside it.
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        name: String): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try {
+        name: String): (Either[String, Double], Long, Long) = {
+      val (gc0, cg0, t0) = (gcMillis(), compileCount(), System.nanoTime())
+      val r = try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         Right((System.nanoTime() - t0) / 1e9)
       } catch { case e: Throwable =>
@@ -138,23 +134,7 @@ object Bench {
         System.err.println(s"[bench] $name failed: $detail")
         Left(detail)
       }
-    }
-    // Full state drain (graft.Harness.drain) — at the between-queries
-    // point AND between a query's two timed runs. r07's lesson: draining
-    // only between queries lets run 2 of a fixpoint query re-materialize
-    // its localCheckpoints while run 1's blocks are still resident (the
-    // sweep's `Block rdd_… already exists` churn), inflating the
-    // iterative tail 2-3× over the same code in a fresh JVM. The drain is
-    // NOT part of the measured time, and its forced GCs are excluded
-    // from gc_sec (each run's GC is windowed separately below). The
-    // listener-bus flush keeps job_failures attribution honest: failure
-    // events are delivered asynchronously, and without the flush a
-    // failure from query N's run could be pinned to query N+1 (or
-    // dropped entirely at end of sweep).
-    def drain(): Unit = {
-      org.apache.spark.GraftSparkBridge
-        .waitListenerBusEmpty(spark.sparkContext, 10000L)
-      Harness.drain(spark, settleMs = 200L)
+      (r, gcMillis() - gc0, compileCount() - cg0)
     }
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._
@@ -174,45 +154,28 @@ object Bench {
     // round-over-round comparison can separate plan speed from memo
     // assists mechanically.
     case class QueryResult(name: String, best: Either[String, Double],
-      gcSec: Double, runs: (Either[String, Double], Either[String, Double]),
+      gcSec: Double, runs: Seq[Double],
       memoPre: Long, memoCold: Int, taskSec: Double, heapMb: Long,
       compiles: Long)
-    // whole-stage codegen compiles (Janino), one count per generated
-    // class: a pass whose classes outnumber the codegen cache
-    // (spark.sql.codegen.cache.maxEntries, default 100) recompiles them
-    // on every run, so a steady non-zero count marks cache thrash
-    def compileCount(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val loadSweep = loadavg() // load right as the timed loop begins
     val results = SparkEntry.queries.filter(q => only.forall(_(q._1)))
       .toSeq.sortBy(_._1).map { case (name, fn) =>
-      currentQuery = name
+      jobs.own(spark.sparkContext, name)
       val mark = SessionMemos.mark()
       SessionMemos.beginWindow(mark)
       val pre0 = SessionMemos.preHitCount
-      val task0 = taskMs.get()
-      val gc0 = gcMillis()
-      val cg0 = compileCount()
-      val r1 = once(fn, name)
-      val cg1 = compileCount()
-      val gc1 = gcMillis()
+      val task0 = jobs.taskMs
+      val (r1, gc1, cg1) = once(fn, name)
       val memoPre = SessionMemos.preHitCount - pre0
       val memoCold = SessionMemos.evictSince(mark) // run 2 re-pays run 1's builds
       drain() // run 2 must start from the same clean state run 1 did
-      val gc2 = gcMillis()
-      val cg2 = compileCount()
-      val r2 = once(fn, name)
-      val cg3 = compileCount()
-      val gc3 = gcMillis()
-      val best = (r1, r2) match {
-        case (Right(a), Right(b)) => Right(math.min(a, b))
-        case (Left(e), _) => Left(e)
-        case (_, Left(e)) => Left(e)
-      }
+      val (r2, gc2, cg2) = once(fn, name)
+      // the first failure, in run order, else the faster run
+      val best = for (a <- r1; b <- r2) yield math.min(a, b)
       // gc_sec = GC time during the two TIMED runs only — the drain's
       // forced full GCs are maintenance, not query-caused pressure, and
       // counting them would misread drain overhead as a regression
-      val gcSec = ((gc1 - gc0) + (gc3 - gc2)) / 1e3
+      val gcSec = (gc1 + gc2) / 1e3
       drain()
       // after the final drain: the listener bus is flushed (task events
       // for this query's jobs delivered — task window is exact) and the
@@ -220,15 +183,13 @@ object Bench {
       // `heap_mb` traces the in-sweep-inflation hypothesis (r15 VERDICT
       // item 3): a climbing post-drain live set marks driver state
       // accumulating across the sweep
-      val taskSec = (taskMs.get() - task0) / 1e3
+      val taskSec = (jobs.taskMs - task0) / 1e3
       val heapMb = (Runtime.getRuntime.totalMemory()
         - Runtime.getRuntime.freeMemory()) >> 20
-      QueryResult(name, best, gcSec, (r1, r2), memoPre, memoCold,
-        taskSec, heapMb, (cg1 - cg0) + (cg3 - cg2))
+      QueryResult(name, best, gcSec, Seq(r1, r2).flatMap(_.toOption),
+        memoPre, memoCold, taskSec, heapMb, cg1 + cg2)
     }
-    currentQuery = "post-sweep"
-    val ok = results.collect {
-      case QueryResult(n, Right(t), _, _, _, _, _, _, _) => n -> t }
+    val ok = results.flatMap(r => r.best.toOption.map(r.name -> _))
     val totalSink = ok.collect { case (n, t) if sinkIds(n) => t }.sum
     val totalRead = ok.collect { case (n, t) if !sinkIds(n) => t }.sum
     // Fresh-JVM re-probe targets (full sweeps only). Two triggers, both
@@ -256,8 +217,7 @@ object Bench {
           .findFirstMatchIn(f.getName).map(m => (m.group(1).toInt, f)))
         .sortBy(-_._1).iterator.map { case (_, f) =>
           try {
-            val txt = new String(
-              java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+            val txt = Files.readString(f.toPath)
             if (txt.contains(s""""sf":"$sfDir"""") &&
                 txt.contains(""""semantics":"memo-cold-best-of-2""""))
               Some(Harness.parseJsonDoubleMap(txt, "queries").toMap)
@@ -293,8 +253,8 @@ object Bench {
           try {
             probeLoad = Seq("start" -> loadavg())
             import scala.jdk.CollectionConverters._
-            val javaBin = java.nio.file.Paths
-              .get(System.getProperty("java.home"), "bin", "java").toString
+            val javaBin =
+              Paths.get(System.getProperty("java.home"), "bin", "java").toString
             val heapArgs = java.lang.management.ManagementFactory
               .getRuntimeMXBean.getInputArguments.asScala
               .filter(a => a.startsWith("-Xmx") || a.startsWith("-Xms"))
@@ -303,22 +263,21 @@ object Bench {
             val pb = new ProcessBuilder(cmd)
             pb.environment().put("SPARK_GRAFT_ONLY", tail.mkString(","))
             pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-            pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+            pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
             pb.redirectErrorStream(false)
             pb.redirectError(ProcessBuilder.Redirect.DISCARD)
             // stdout goes to a file, NOT a pipe read before waitFor: a
             // blocking readAllBytes would make the 20-minute timeout
             // unreachable on a hung child (the read itself never returns)
-            val outFile = java.nio.file.Files
-              .createTempFile("graft_fresh_probe", ".out")
+            val outFile = Files.createTempFile("graft_fresh_probe", ".out")
             pb.redirectOutput(outFile.toFile)
             val p = pb.start()
             val done = p.waitFor(20, java.util.concurrent.TimeUnit.MINUTES)
             if (!done) p.destroyForcibly()
             val out =
-              if (done) new String(java.nio.file.Files.readAllBytes(outFile), "UTF-8")
+              if (done) new String(Files.readAllBytes(outFile), "UTF-8")
               else ""
-            java.nio.file.Files.deleteIfExists(outFile)
+            Files.deleteIfExists(outFile)
             probeLoad = probeLoad :+ ("end" -> loadavg())
             Harness.parseBenchQueries(out)
           } catch { case e: Throwable =>
@@ -326,48 +285,41 @@ object Bench {
             Seq.empty
           }
       }
-    val failed = results.collect {
-      case QueryResult(n, Left(_), _, _, _, _, _, _, _) => n }
-    val errors = results.collect {
-      case QueryResult(n, Left(e), _, _, _, _, _, _, _) => n -> e }
-    val gcByQuery = results.collect {
-      case QueryResult(n, Right(_), g, _, _, _, _, _, _) => n -> g }
+    val errors = results.flatMap(r => r.best.swap.toOption.map(r.name -> _))
+    val failed = errors.map(_._1)
+    val passed = results.filter(_.best.isRight)
+    val gcByQuery = passed.map(r => r.name -> r.gcSec)
     // task_sec / heap_mb: the r16 SF-robustness + inflation-trace columns
     // (see the listener comment above) — additions-only
-    val taskByQuery = results.collect {
-      case QueryResult(n, Right(_), _, _, _, _, t, _, _) => n -> t }
-    val heapByQuery = results.collect {
-      case QueryResult(n, Right(_), _, _, _, _, _, h, _) => n -> h }
+    val taskByQuery = passed.map(r => r.name -> r.taskSec)
+    val heapByQuery = passed.map(r => r.name -> r.heapMb)
     // codegen_compiles: Janino compiles during the two timed runs
-    val compilesByQuery = results.collect {
-      case r if r.best.isRight => r.name -> r.compiles }
+    val compilesByQuery = passed.map(r => r.name -> r.compiles)
     // both timed runs, in order — the between-runs evictSince makes them
     // equally cold wrt the query's OWN memo builds, so a large r1/r2 gap
     // now reads as noise/GC, not a hidden memo hit
-    val runsByQuery = results.collect {
-      case QueryResult(n, Right(_), _, (Right(a), Right(b)), _, _, _, _, _) =>
-        n -> Seq(a, b)
-    }
+    val runsByQuery = passed.map(r => r.name -> r.runs)
     // memo tags (nonzero only): memo_pre = run 1 lookup hits on state
     // built BEFORE this query (its time rides cross-query reuse);
     // memo_cold = entries run 1 built and run 2 re-paid (both runs cold)
     val memoPreByQuery = results.collect {
-      case r if r.memoPre > 0 => r.name -> r.memoPre
-    }
+      case r if r.memoPre > 0 => r.name -> r.memoPre }
     val memoColdByQuery = results.collect {
-      case r if r.memoCold > 0 => r.name -> r.memoCold.toLong
-    }
+      case r if r.memoCold > 0 => r.name -> r.memoCold.toLong }
     val total = ok.map(_._2).sum
     // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
     def f3(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    def qsJson(entries: Seq[(String, Double)]) = entries
-      .map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
+    // JSON string escape (class names / messages can carry quotes,
+    // newlines, control chars) and a flat object with formatted values
+    def jq(s: String): String = Harness.jsonEscape(s)
+    def obj[V](entries: Seq[(String, V)])(fmt: V => String) = entries
+      .map { case (k, v) => jq(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     val slowest = ok.sortBy(-_._2).take(25).sortBy(_._1)
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
       s""""total_read":${f3(totalRead)},"total_sink":${f3(totalSink)},""" +
       s""""n_sink":${ok.count(e => sinkIds(e._1))},""" +
-      s""""queries":${qsJson(slowest)},"n_queries":${results.size},""" +
+      s""""queries":${obj(slowest)(f3)},"n_queries":${results.size},""" +
       s""""n_failed":${failed.size},"failed":$failedJson,""" +
       s""""semantics":"memo-cold-best-of-2","sf":"$sfDir"}"""
     // full per-query map for offline analysis (not size-constrained);
@@ -387,40 +339,31 @@ object Bench {
       s""""loadavg_start":"$loadStart","loadavg_sweep":"$loadSweep",""" +
       s""""loadavg_end":"${loadavg()}",""" +
       s""""semantics":"memo-cold-best-of-2"}"""
-    // JSON string escape for error details (class names / messages can
-    // carry quotes, newlines, control chars)
-    def jq(s: String): String = Harness.jsonEscape(s)
-    def sJson(entries: Seq[(String, String)]) = entries
-      .map { case (k, v) => jq(k) + ":" + jq(v) }.mkString("{", ",", "}")
     // errors = queries whose timed run threw (also in `failed`);
     // job_failures = Spark jobs that FAILED while a query was running
     // even if the query itself recovered and succeeded — the r07
     // unattributed-stack-trace class, now pinned to its owner.
-    import scala.jdk.CollectionConverters._
-    val jobFailJson = sJson(jobFailures.asScala.toSeq.sortBy(_._1))
-    def runsJson(entries: Seq[(String, Seq[Double])]) = entries
-      .map { case (k, v) => "\"" + k + "\":[" + v.map(f3).mkString(",") + "]" }
-      .mkString("{", ",", "}")
-    def nJson(entries: Seq[(String, Long)]) = entries
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val jobFailJson = obj(failures.groupMap(_._1)(_._2).toSeq.sortBy(_._1))(
+      fs => jq(fs.mkString(" | ")))
+    def num(v: Long) = v.toString
     val full = s"""{"total":${f3(total)},"total_read":${f3(totalRead)},""" +
       s""""total_sink":${f3(totalSink)},""" +
       s""""sink_ids":${sinkIds.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s"""$ctx,"queries":${qsJson(ok)},""" +
-      s""""gc_sec":${qsJson(gcByQuery)},"runs":${runsJson(runsByQuery)},""" +
-      s""""task_sec":${qsJson(taskByQuery)},"heap_mb":${nJson(heapByQuery)},""" +
-      s""""codegen_compiles":${nJson(compilesByQuery)},""" +
-      s""""memo_pre":${nJson(memoPreByQuery)},""" +
-      s""""memo_cold":${nJson(memoColdByQuery)},""" +
-      s""""fresh_probe":${qsJson(freshProbe.sortBy(_._1))},""" +
-      s""""fresh_probe_trigger":${sJson(probeTrigger)},""" +
-      s""""fresh_probe_loadavg":${sJson(probeLoad)},""" +
-      s""""failed":$failedJson,"errors":${sJson(errors)},""" +
+      s"""$ctx,"queries":${obj(ok)(f3)},""" +
+      s""""gc_sec":${obj(gcByQuery)(f3)},""" +
+      s""""runs":${obj(runsByQuery)(_.map(f3).mkString("[", ",", "]"))},""" +
+      s""""task_sec":${obj(taskByQuery)(f3)},"heap_mb":${obj(heapByQuery)(num)},""" +
+      s""""codegen_compiles":${obj(compilesByQuery)(num)},""" +
+      s""""memo_pre":${obj(memoPreByQuery)(num)},""" +
+      s""""memo_cold":${obj(memoColdByQuery)(num)},""" +
+      s""""fresh_probe":${obj(freshProbe.sortBy(_._1))(f3)},""" +
+      s""""fresh_probe_trigger":${obj(probeTrigger)(jq)},""" +
+      s""""fresh_probe_loadavg":${obj(probeLoad)(jq)},""" +
+      s""""failed":$failedJson,"errors":${obj(errors)(jq)},""" +
       s""""job_failures":$jobFailJson,"sf":"$sfDir"}"""
     // a filtered triage run must not clobber the full sweep's record
     if (only.isEmpty) {
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
-        full.getBytes("UTF-8"))
+      Files.writeString(Paths.get("bench_full.json"), full)
       // per-round archive (bench_full.json alone is clobbered each sweep,
       // losing round-over-round per-query history): current round =
       // highest driver-written BENCH_rNN.json + 1
@@ -428,9 +371,7 @@ object Bench {
         .flatMap(f => "BENCH_r(\\d+)\\.json".r.findFirstMatchIn(f.getName))
         .map(_.group(1).toInt)
       val round = if (rounds.isEmpty) 0 else rounds.max + 1
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(f"bench_full_r$round%02d.json"),
-        full.getBytes("UTF-8"))
+      Files.writeString(Paths.get(f"bench_full_r$round%02d.json"), full)
     }
     println(line)
     spark.stop()

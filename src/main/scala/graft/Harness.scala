@@ -1,13 +1,118 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
-/** Shared plumbing for the two driver-contract mains (Bench, Verify):
-  * the JSON string escaper and the inter-query state drain. One source
-  * of truth — these used to be per-file copies, and a fix to either
-  * (e.g. the two-phase-GC rationale below) must not have to land in
-  * several places to be real. */
+/** Shared plumbing for the driver tools (Bench, Verify, Plans,
+  * tools.ProfileQuery) and the test session: the one session builder,
+  * the one job listener, the JSON string escaper and the inter-query
+  * state drain. One source of truth — these used to be per-file copies,
+  * and a fix to any of them (e.g. the two-phase-GC rationale below) must
+  * not have to land in several places to be real. */
 object Harness {
+
+  /** The core count every tool runs at: $SPARK_GRAFT_CPUS, default 4. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+
+  /** The one session shape: `local[cpus]` with as many shuffle
+    * partitions, UTC, no UI. ContextCleaner frees shuffle files and
+    * broadcast blocks only when driver GC collects their weak refs; with
+    * a large heap a full GC may not happen for hundreds of query runs, so
+    * a sweep's worth of shuffle state accumulates (the default
+    * periodic-GC interval is 30 min — longer than the whole bench).
+    * One-minute periodic GC plus [[drain]]'s explicit gc() keep the
+    * cleaner draining, so late queries measure the query, not the
+    * accumulated debt of the ones before it. */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.cleaner.periodicGC.interval", "1min")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** One Spark job: its action's call site, the owner marked when it was
+    * submitted, start/end (ms; end -1 while running), the tasks of its
+    * registered stages, and a failed job's class and message. */
+  final case class JobRecord(jobId: Int, site: String, owner: String,
+      start: Long, var end: Long = -1L, var tasks: Int = 0,
+      var taskMs: Long = 0L, var failure: Option[String] = None)
+
+  private val OwnerKey = "graft.owner"
+
+  /** The one job listener: a [[JobRecord]] per job plus the all-tasks
+    * task-time total. Events arrive on Spark's async listener bus, so
+    * read after flushing it (GraftSparkBridge.waitListenerBusEmpty). The
+    * owner is the submitting thread's local property (inherited by the
+    * threads it starts), so a job is charged to the owner set when it
+    * ran even if its events are delivered after the caller moved on. */
+  final class JobListener extends SparkListener {
+    private val jobs = new ConcurrentHashMap[Int, JobRecord]()
+    private val stageToJob = new ConcurrentHashMap[Int, Int]()
+    private val allTaskMs = new AtomicLong(0L)
+
+    /** Charge the calling thread's jobs to `owner` until the next call. */
+    def own(sc: org.apache.spark.SparkContext, owner: String): Unit =
+      sc.setLocalProperty(OwnerKey, owner)
+
+    /** Task time of every task end seen, registered stage or not. */
+    def taskMs: Long = allTaskMs.get()
+
+    /** The records since the last call, by job id; clears them. Call
+      * with no job running. */
+    def take(): Seq[JobRecord] = {
+      val out = jobs.values.asScala.toSeq.sortBy(_.jobId)
+      jobs.clear(); stageToJob.clear()
+      out
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      // without an explicit call site, the result stage's name is the action's
+      val site = prop("callSite.short").orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
+      jobs.put(e.jobId, JobRecord(e.jobId, site.getOrElse("?"),
+        prop(OwnerKey).getOrElse("?"), e.time))
+      e.stageIds.foreach(s => stageToJob.put(s, e.jobId))
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      Option(jobs.get(e.jobId)).foreach { j =>
+        j.end = e.time
+        e.jobResult match {
+          case JobFailed(ex) => j.failure =
+            Some(s"${ex.getClass.getName}: ${String.valueOf(ex.getMessage).take(200)}")
+          case _ => ()
+        }
+      }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.taskInfo != null) {
+        allTaskMs.addAndGet(e.taskInfo.duration)
+        // a stage no JobStart registered (skipped/resubmitted) counts in
+        // the total only; the containsKey guard keeps it from being
+        // charged to job 0 through Scala's unboxToInt(null) == 0
+        if (stageToJob.containsKey(e.stageId))
+          Option(jobs.get(stageToJob.get(e.stageId))).foreach { j =>
+            j.tasks += 1; j.taskMs += e.taskInfo.duration
+          }
+      }
+  }
+
+  /** A [[JobListener]] registered on `spark`'s context. */
+  def listen(spark: SparkSession): JobListener = {
+    val l = new JobListener
+    spark.sparkContext.addSparkListener(l)
+    l
+  }
 
   /** RDD ids the inter-query drain must NOT unpersist: session-scoped
     * memos (Pipeline.ccMemo's checkpointed CC labelings) register their

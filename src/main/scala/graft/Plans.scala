@@ -1,13 +1,22 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Plan-evidence dump: writes PLANS.md with the formatted physical plan of
+/** Plan-evidence dump, two forms, both on the one session shape
+  * (Harness.session at $SPARK_GRAFT_CPUS), so a dumped plan is the one
+  * the bench times.
+  *
+  * Headline form: writes PLANS.md with the formatted physical plan of
   * each headline query, so pushdown/broadcast/partial-agg properties are
-  * reviewable without running Spark. Regenerate:
+  * reviewable without running Spark:
   *   sbt "runMain graft.Plans /root/testdata/sf0.001 PLANS.md"
+  *
+  * Per-query form, for before/after evidence in optimization rounds:
+  * writes `<outDir>/<id>_<suffix>.txt` for each id (see [[dump]]):
+  *   sbt "runMain graft.Plans /root/testdata/sf0.1 plans/r15 before l02_pair_spine,j17"
   */
 object Plans {
   val headline: Seq[String] = Seq(
@@ -56,40 +65,61 @@ object Plans {
     "t29_psi_drift", "l62_source_centroid_sim", "l63_cc_incremental",
     "s21_time_travel", "c04_broker_decode")
 
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode).trim
+
+  /** Plans the registered queries hide, dumpable by id: the memo-free
+    * twins of the l02 and co-occurrence pair spines (the registered
+    * queries return memoized/checkpointed frames whose plans are opaque
+    * RDD scans), and j17, which materializes inside its conf scope (its
+    * registered result's plan is just a scan), via its scoped helper. */
+  private val hidden: Map[String, (SparkSession, String) => String] = Map(
+    "l02_pair_spine" -> ((s, d) => formatted(llm.Llm.pairSpineForPlan(Tables.documents(s, d)))),
+    "cooc_pair_spine" -> ((s, d) => formatted(operators.Graph.coocSpineForPlan(s, d))),
+    "j17" -> ((s, d) => operators.Joins.j17Plan(s, d).trim))
+
+  /** Per-query form: writes `<outDir>/<id>_<suffix>.txt` with the plan of
+    * each id — a SparkEntry query's formatted physical plan, or one of the
+    * hidden plans above — and returns the paths written. Rejects the
+    * whole call, before any planning, if an id is neither. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, ids: Seq[String]): Seq[Path] = {
+    val unknown = ids.filterNot(i =>
+      SparkEntry.queries.contains(i) || hidden.contains(i))
+    require(unknown.isEmpty, s"unknown plan ids: ${unknown.mkString(",")}")
+    Files.createDirectories(Paths.get(outDir))
+    ids.map { id =>
+      val txt = SparkEntry.queries.get(id)
+        .fold(hidden(id)(spark, sfDir))(fn => formatted(fn(spark, sfDir)))
+      Files.writeString(Paths.get(outDir, s"${id}_$suffix.txt"), txt + "\n")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of headline queries\n\n")
-    sb.append(s"Generated by `graft.Plans` on `$sfDir`. The properties the\n")
-    sb.append("engine is designed around are visible inline: `PushedFilters`/\n")
-    sb.append("`ReadSchema` (scan pruning), `PartitionFilters` (directory\n")
-    sb.append("pruning), `BroadcastHashJoin` (pinned dim broadcasts),\n")
-    sb.append("`partial_…` aggregate pairs (map-side combine), `LeftSemi`\n")
-    sb.append("gating joins, and `WindowGroupLimit` (map-side top-k).\n")
-    headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).trim)
-      sb.append("\n```\n")
-    }
-    // j17 materializes inside its conf scope (the registered query returns
-    // a checkpointed result whose plan is just a scan) — dump the live
-    // plan via its scoped helper instead
-    sb.append(s"\n## j17_bloom_filter_join (inside its conf scope)\n\n```\n")
-    sb.append(graft.operators.Joins.j17Plan(spark, sfDir).trim)
-    sb.append("\n```\n")
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out")
+    val spark = Harness.session(Harness.cpus)
+    if (args.length >= 4)
+      dump(spark, sfDir, args(1), args(2),
+        args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+        .foreach(p => println(s"wrote $p"))
+    else writeHeadline(spark, sfDir, args.lift(1).getOrElse("PLANS.md"))
     spark.stop()
+  }
+
+  private def writeHeadline(spark: SparkSession, sfDir: String, out: String): Unit = {
+    def section(title: String, plan: String) = s"\n## $title\n\n```\n$plan\n```\n"
+    Files.writeString(Paths.get(out),
+      s"""# PLANS — formatted physical plans of headline queries
+         |
+         |Generated by `graft.Plans` on `$sfDir`. The properties the
+         |engine is designed around are visible inline: `PushedFilters`/
+         |`ReadSchema` (scan pruning), `PartitionFilters` (directory
+         |pruning), `BroadcastHashJoin` (pinned dim broadcasts),
+         |`partial_…` aggregate pairs (map-side combine), `LeftSemi`
+         |gating joins, and `WindowGroupLimit` (map-side top-k).
+         |""".stripMargin +
+        headline.map(n => section(n, formatted(SparkEntry.queries(n)(spark, sfDir)))).mkString +
+        section("j17_bloom_filter_join (inside its conf scope)", hidden("j17")(spark, sfDir)))
+    println(s"wrote $out")
   }
 }

@@ -30,16 +30,28 @@ object Uuid5 {
       .putLong(u.getLeastSignificantBits)
       .array()
 
-  /** v5 over raw name bytes. */
-  def uuid5(namespace: UUID, name: Array[Byte]): UUID = {
+  /** A SHA-1 digest already fed the namespace's 16 bytes. */
+  private def digestOf(namespace: UUID): MessageDigest = {
     val md = MessageDigest.getInstance("SHA-1")
     md.update(bytes(namespace))
-    md.update(name)
+    md
+  }
+
+  /** The v5 UUID of everything fed to `md`: its first 16 digest bytes
+    * with the version and variant bits set. */
+  private def finish(md: MessageDigest): UUID = {
     val h = md.digest()
     h(6) = ((h(6) & 0x0f) | 0x50).toByte // version 5
     h(8) = ((h(8) & 0x3f) | 0x80).toByte // RFC 4122 variant
     val bb = ByteBuffer.wrap(h, 0, 16)
     new UUID(bb.getLong, bb.getLong)
+  }
+
+  /** v5 over raw name bytes. */
+  def uuid5(namespace: UUID, name: Array[Byte]): UUID = {
+    val md = digestOf(namespace)
+    md.update(name)
+    finish(md)
   }
 
   def uuid5(namespace: UUID, name: String): UUID = uuid5(namespace, name.getBytes(UTF_8))
@@ -50,27 +62,17 @@ object Uuid5 {
   /** Sequence hashing: concatenated UTF-8 byte arrays of each part
     * (reference util.clj:38-43 Seqable extension). */
   def uuid5Seq(namespace: UUID, parts: Seq[String]): UUID = {
-    val md = MessageDigest.getInstance("SHA-1")
-    md.update(bytes(namespace))
+    val md = digestOf(namespace)
     parts.foreach(p => md.update(p.getBytes(UTF_8)))
-    val h = md.digest()
-    h(6) = ((h(6) & 0x0f) | 0x50).toByte
-    h(8) = ((h(8) & 0x3f) | 0x80).toByte
-    val bb = ByteBuffer.wrap(h, 0, 16)
-    new UUID(bb.getLong, bb.getLong)
+    finish(md)
   }
 
   /** Sequence hashing over pre-encoded parts (UUIDs contribute their 16
     * raw bytes, exactly like clj-uuid's UUIDNameBytes). */
   def uuid5Parts(namespace: UUID, parts: Seq[Array[Byte]]): UUID = {
-    val md = MessageDigest.getInstance("SHA-1")
-    md.update(bytes(namespace))
+    val md = digestOf(namespace)
     parts.foreach(md.update)
-    val h = md.digest()
-    h(6) = ((h(6) & 0x0f) | 0x50).toByte
-    h(8) = ((h(8) & 0x3f) | 0x80).toByte
-    val bb = ByteBuffer.wrap(h, 0, 16)
-    new UUID(bb.getLong, bb.getLong)
+    finish(md)
   }
 
   /** The params that carry uuid5 node ids in the command pipeline

@@ -76,15 +76,6 @@ object Dedup extends QueryModule {
         explode(sequence(lit(0), lit(3))).as("j"))
       .withColumn("band", expr("shiftright(fp, j * 12) & 4095"))
 
-  /** Σ |bucket|·(|bucket|−1)/2 over the (j, band) SimHash buckets — the
-    * candidate pairs the band join would generate uncapped, from bucket
-    * sizes alone (ScalePatternsSpec's growth probe). */
-  def simHashBandWork(docs: DataFrame): Long =
-    simHashBands(docs)
-      .groupBy("j", "band").agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(expr("(c * (c - 1)) div 2")), lit(0L)).as("w"))
-      .head().getLong(0)
-
   /** Corpus-scaled SimHash band width: random (non-dup) band collisions
     * generate ≈ nBands·n²/2^bandBits candidate pairs, so a PINNED width
     * is quadratic in the corpus — measured 82× band work for 10× docs at

@@ -246,16 +246,19 @@ object Llm extends QueryModule {
         .localCheckpoint()
     }
 
-  /** The UNCHECKPOINTED pair spine, for plan evidence only (PlanDump):
-    * the registered queries return memoized/localCheckpoint-materialized
-    * frames whose plans are opaque RDD scans, so the optimization rounds
-    * dump this frame's plan to show the spine's exchange structure. Not
-    * used by any registered query. */
-  def pairSpineForPlan(docs: DataFrame): DataFrame = {
-    val sh = shinglesOf(docs)
-    verifiedPairsFrom(sh, bandSignatures(sh), 0.4, BandBucketCap)
+  /** The UNCHECKPOINTED pair spine, for plan evidence only
+    * (`graft.Plans` id `l02_pair_spine`): the registered queries return
+    * memoized/localCheckpoint-materialized frames whose plans are opaque
+    * RDD scans, so the optimization rounds dump this frame's plan to show
+    * the spine's exchange structure. Same [[pairSpine]] body as the real
+    * path, so the two cannot drift. Not used by any registered query. */
+  def pairSpineForPlan(docs: DataFrame): DataFrame =
+    pairSpine(shinglesOf(docs), 0.4, BandBucketCap)
+
+  private def pairSpine(sh: DataFrame, jaccMin: Double,
+      bucketCap: Int): DataFrame =
+    verifiedPairsFrom(sh, bandSignatures(sh), jaccMin, bucketCap)
       .orderBy("a", "b")
-  }
 
   private def minHashNearDupPairsUncached(docs: DataFrame, jaccMin: Double,
       bucketCap: Int): DataFrame = {
@@ -263,9 +266,7 @@ object Llm extends QueryModule {
     // returning — the (tiny) result is localCheckpoint-materialized so
     // the returned plan reads stored blocks, not the unpersisted shingles
     val sh = shinglesOf(docs).cache()
-    val out = verifiedPairsFrom(sh, bandSignatures(sh), jaccMin, bucketCap)
-      .orderBy("a", "b")
-      .localCheckpoint()
+    val out = pairSpine(sh, jaccMin, bucketCap).localCheckpoint()
     sh.unpersist(blocking = false)
     out
   }
@@ -578,9 +579,6 @@ object Llm extends QueryModule {
       .join(broadcast(probe), expr(s"bit_count(sig ^ psig) <= $radius"))
       .count()
   }
-
-  def l03bProbedCount(spark: SparkSession, dir: String): Long =
-    annProbedCount(Tables.embeddings(spark, dir))
 
   /** l55: ANN RECALL EVALUATION — the harness that makes the l03b/l03c/l44
     * shortcuts trustworthy. At 100 TB nobody can eyeball whether the LSH

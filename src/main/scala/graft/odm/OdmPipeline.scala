@@ -81,19 +81,19 @@ object OdmPipeline {
     * Memoized: a fresh temp path per call would give every consumer a
     * distinct logical plan, defeating cache sharing across the repeated
     * exploded() traversals (c01/c02 each walk the cascade many times). */
-  lazy val fixturePath: () => String = {
-    val in = getClass.getResourceAsStream("/odm/sample_clinical_data.xml")
-    val tmp = Files.createTempFile("graft_odm", ".xml")
-    Files.copy(in, tmp, StandardCopyOption.REPLACE_EXISTING)
-    val p = tmp.toString
-    () => p
-  }
+  lazy val fixturePath: () => String =
+    resourceFile("/odm/sample_clinical_data.xml", "graft_odm")
 
   /** The invalid-values fixture (un-coercible item data), same memoization. */
-  lazy val invalidFixturePath: () => String = {
-    val in = getClass.getResourceAsStream("/odm/sample_invalid.xml")
-    val tmp = Files.createTempFile("graft_odm_invalid", ".xml")
-    Files.copy(in, tmp, StandardCopyOption.REPLACE_EXISTING)
+  lazy val invalidFixturePath: () => String =
+    resourceFile("/odm/sample_invalid.xml", "graft_odm_invalid")
+
+  /** Copies a jar resource to a fresh temp file, once; the returned
+    * function yields that file's path. */
+  private def resourceFile(resource: String, prefix: String): () => String = {
+    val tmp = Files.createTempFile(prefix, ".xml")
+    Files.copy(getClass.getResourceAsStream(resource), tmp,
+      StandardCopyOption.REPLACE_EXISTING)
     val p = tmp.toString
     () => p
   }
@@ -323,7 +323,13 @@ object OdmPipeline {
     * broker's concern and the sort would be planned work for nothing). */
   def envelopedUnordered(spark: SparkSession, path: String, batchCmdId: String,
       sub: String): DataFrame =
-    commands(spark, path)
+    envelope(spark, commands(spark, path), batchCmdId, sub)
+
+  /** The command envelope's columns: the gen-cmd-id `id`, the batch's
+    * `sub`, and the 7-column select every envelope consumer reads. */
+  private def envelope(spark: SparkSession, cmds: DataFrame,
+      batchCmdId: String, sub: String): DataFrame =
+    cmds
       .withColumn("id", graft.functions.Uuid5Expression.genCmdId(spark,
         lit(batchCmdId), col("name"), col("params_json"), col("file_oid")))
       .withColumn("sub", lit(sub))
@@ -403,13 +409,9 @@ object OdmPipeline {
           slice(col("doc_pos"), 1, k) === col("b_pos"), "left_anti")
       }
 
-    commandsOf(lv.copy(studyEvents = sent(lv.studyEvents, 2),
+    envelope(spark, commandsOf(lv.copy(studyEvents = sent(lv.studyEvents, 2),
       forms = sent(lv.forms, 3), itemGroups = sent(lv.itemGroups, 4),
-      items = sent(lv.items, 5)))
-      .withColumn("id", graft.functions.Uuid5Expression.genCmdId(spark,
-        lit(batchCmdId), col("name"), col("params_json"), col("file_oid")))
-      .withColumn("sub", lit(sub))
-      .select("id", "name", "sub", "file_oid", "params_json", "level", "doc_pos")
+      items = sent(lv.items, 5))), batchCmdId, sub)
       .orderBy("level", "name", "params_json")
   }
 }

@@ -51,9 +51,10 @@ object Aggregates extends QueryModule {
     * aggregate attributes in the plan — plans/r16), so the final HLL
     * merge stage is expensive per evaluation, and a range-sort boundary
     * EVALUATES IT TWICE (once to sample bounds, once to produce rows —
-    * measured +0.8 s, ProbeA03). Output cardinality is the returnflag
-    * domain (3 rows at any SF), so one sorted partition is the
-    * scale-honest shape for this result; same rows, same total order. */
+    * measured +0.8 s in an r16 A/B of the two orderings). Output
+    * cardinality is the returnflag domain (3 rows at any SF), so one
+    * sorted partition is the scale-honest shape for this result; same
+    * rows, same total order. */
   def a03(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
       .groupBy("l_returnflag")

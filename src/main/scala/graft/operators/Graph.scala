@@ -218,17 +218,13 @@ object Graph extends QueryModule {
   def clearCoocMemos(): Unit =
     { edgesMemo.clear(); cappedMemo.clear(); coocMemo.clear() }
 
-  /** The UNMEMOIZED pair spine, for plan evidence only (PlanDump — the
-    * registered queries now return memoized/checkpointed frames whose
-    * plans are opaque RDD scans). Not used by any registered query. */
-  def coocSpineForPlan(spark: SparkSession, dir: String): DataFrame = {
-    val edges = rawEdgesPlan(spark, dir)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("s").orderBy("p")
-    pairsFrom(edges
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= CoocCap)
-      .select("s", "p"))
-  }
+  /** The UNMEMOIZED pair spine, for plan evidence only (`graft.Plans`
+    * id `cooc_pair_spine` — the registered queries now return
+    * memoized/checkpointed frames whose plans are opaque RDD scans). Same
+    * [[capEdges]] cap as the real path, so the two cannot drift. Not used
+    * by any registered query. */
+  def coocSpineForPlan(spark: SparkSession, dir: String): DataFrame =
+    pairsFrom(capEdges(rawEdgesPlan(spark, dir)))
 
   /** The raw distinct bipartite edge list as a PURE PLAN — every graph
     * memo's key (the FrameMemo keying contract: raw source read, never a
@@ -270,13 +266,17 @@ object Graph extends QueryModule {
   private def cappedEdges(spark: SparkSession, dir: String): DataFrame = {
     val key = rawEdgesPlan(spark, dir)
     cappedMemo.getOrCompute(spark, key.queryExecution.normalized, CoocCap) {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("s").orderBy("p")
-      rawEdges(spark, dir)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= CoocCap)
-        .select("s", "p")
-        .localCheckpoint()
+      capEdges(rawEdges(spark, dir)).localCheckpoint()
     }
+  }
+
+  /** Keep each supplier's `CoocCap` lowest part ids. */
+  private def capEdges(edges: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("s").orderBy("p")
+    edges
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= CoocCap)
+      .select("s", "p")
   }
 
   /** Bounded-array pair generation from a capped edge list. The

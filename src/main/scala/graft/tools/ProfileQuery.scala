@@ -1,17 +1,14 @@
 package graft.tools
 
-import java.util.concurrent.ConcurrentHashMap
-
-import graft.SparkEntry
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.{Harness, SessionMemos, SparkEntry}
 
 /** Optimization-round triage (r15): run one or more registered queries
-  * under a listener that attributes every Spark JOB to its call site
-  * (file:line of the action), printing per-job wall time, task count and
-  * task-time sum. A sink-family builder is a CHAIN of small jobs — the
-  * bench's one number per query can't say which write/scan/collect inside
-  * the chain is the expensive one; this does. Not part of any query path.
+  * and print every Spark JOB of the profiled run with its call site
+  * (file:line of the action), wall time, task count and task-time sum,
+  * as recorded by the shared Harness.JobListener. A sink-family builder
+  * is a CHAIN of small jobs — the bench's one number per query can't say
+  * which write/scan/collect inside the chain is the expensive one; this
+  * does. Not part of any query path.
   *
   *   sbt "runMain graft.tools.ProfileQuery /root/testdata/sf0.1 s23_compact_manifest"
   */
@@ -19,63 +16,36 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfileQuery <sfDir> <id,id,...>")
     val (sfDir, ids) = (args(0), args(1).split(",").map(_.trim).filter(_.nonEmpty))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    case class Job(site: String, var t0: Long = 0L, var t1: Long = 0L,
-      var tasks: Int = 0, var taskMs: Long = 0L)
-    val jobs = new ConcurrentHashMap[Int, Job]()
-    val stageToJob = new ConcurrentHashMap[Int, Int]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-        jobs.put(e.jobId, Job(site, t0 = e.time))
-        e.stageIds.foreach(s => stageToJob.put(s, e.jobId))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val j = jobs.get(e.jobId); if (j != null) j.t1 = e.time
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        // an unregistered stage (skipped/resubmitted, not in any
-        // JobStart's stageIds) must be dropped, not null-unboxed to job
-        // 0 (r15 ADVICE finding — it skewed job 0's task sums); the
-        // containsKey guard avoids Scala's unboxToInt(null) == 0
-        val j = if (stageToJob.containsKey(e.stageId))
-          jobs.get(stageToJob.get(e.stageId)) else null
-        if (j != null && e.taskInfo != null) {
-          j.tasks += 1; j.taskMs += e.taskInfo.duration
-        }
-      }
-    })
-    ids.foreach { id =>
-      val fn = SparkEntry.queries(id)
-      // run 1 = codegen/scan warmup at the same SF (plan-shape identical);
-      // run 2 is the profiled run, matching the bench's best-of-2 floor
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      graft.SessionMemos.evictSince(0L)
-      graft.Harness.drain(spark, settleMs = 200L)
-      jobs.clear(); stageToJob.clear()
+    val spark = Harness.session(Harness.cpus)
+    val jobs = Harness.listen(spark)
+    // one run, then memos and caches reset and the listener bus flushed;
+    // returns the run's wall seconds
+    def run(id: String): Double = {
       val w0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      SparkEntry.queries(id)(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - w0) / 1e9
+      SessionMemos.evictSince(0L)
+      Harness.drain(spark, settleMs = 200L)
       org.apache.spark.GraftSparkBridge
         .waitListenerBusEmpty(spark.sparkContext, 10000L)
-      import scala.jdk.CollectionConverters._
-      val rows = jobs.asScala.toSeq.sortBy(_._1)
+      wall
+    }
+    ids.foreach { id =>
+      // run 1 = codegen/scan warmup at the same SF (plan-shape identical);
+      // run 2 is the profiled run, matching the bench's best-of-2 floor
+      run(id)
+      jobs.take()
+      jobs.own(spark.sparkContext, id)
+      val wall = run(id)
+      val rows = jobs.take()
       println(f"\n=== $id  wall=$wall%.3f s  jobs=${rows.size} ===")
       println(f"${"job"}%4s ${"wall_s"}%8s ${"tasks"}%6s ${"taskSum_s"}%10s  site")
-      var acct = 0.0
-      rows.foreach { case (jid, j) =>
-        val w = (j.t1 - j.t0) / 1e3; acct += w
-        println(f"$jid%4d $w%8.3f ${j.tasks}%6d ${j.taskMs / 1e3}%10.3f  ${j.site}")
-      }
+      val acct = rows.map { j =>
+        val w = (j.end - j.start) / 1e3
+        println(f"${j.jobId}%4d $w%8.3f ${j.tasks}%6d ${j.taskMs / 1e3}%10.3f  ${j.site}")
+        w
+      }.sum
       println(f"job-wall sum=$acct%.3f s (gaps to $wall%.3f = driver/metadata time)")
-      graft.SessionMemos.evictSince(0L)
-      graft.Harness.drain(spark, settleMs = 200L)
     }
     spark.stop()
   }

@@ -33,6 +33,15 @@ class QueriesSmokeSpec extends SparkSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("exactly the six engine-specific queries have no oracle") {
+    // sketches, sampling, an ML pipeline, a recurrence DuckDB windows
+    // cannot state, and a UDF: no DuckDB equivalent by design; any other
+    // query must carry its oracle SQL
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet === Set(
+      "a03_agg_approx_distinct", "a13_agg_sketch_merge", "l02b_dedup_near_ml",
+      "o04_sample", "t20_ewma", "x01_udf_uuid5"))
+  }
+
   test("entry() (driver smoke) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -17,15 +17,7 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The tools' session shape at a fixed 4 cores: specs keep `local[4]`
+    * whatever $SPARK_GRAFT_CPUS the run exports. */
+  lazy val session: SparkSession = Harness.session(4)
 }
