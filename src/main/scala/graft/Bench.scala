@@ -101,8 +101,8 @@ object Bench {
     // drop ALL warmup memo entries BEFORE the drain's unpersist: a
     // warm-dir CC labeling / pair graph / BPE merge table left registered
     // would either shadow the measured dir (if sfDir == warmDir) or sit
-    // as protected dead weight; evictSince(0) hits every registered
-    // session memo and (for frame memos) also unprotects, so the drain
+    // as kept dead weight; evictSince(0) hits every registered session
+    // memo and (for frame memos) also releases, so the drain
     // stays a full reset (and drops the warmup runs' shuffle state
     // before timing)
     SessionMemos.evictSince(0L)

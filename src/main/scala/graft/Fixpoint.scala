@@ -35,21 +35,24 @@ object Fixpoint {
 
   private val obsId = new AtomicLong(0L)
 
-  /** Pull one observed Long metric, with a belt-and-braces fallback: the
+  /** Read an observation's metrics, with a belt-and-braces fallback: the
     * listener delivery is asynchronous relative to the eager checkpoint's
     * return (measured: milliseconds), so obs.get normally returns
     * instantly; if delivery somehow never fires we fall back to an
-    * explicit job rather than deadlock the driver. A null metric (sum
-    * over an empty iterate) reads as 0 = converged. */
+    * explicit job rather than deadlock the driver. */
+  private def observed[T](obs: Observation)(read: Map[String, Any] => T)
+      (fallback: => T): T =
+    try read(Await.result(Future(obs.get)(ExecutionContext.global), 120.seconds))
+    catch { case _: TimeoutException => fallback }
+
+  /** One observed Long metric; a null metric (sum over an empty iterate)
+    * reads as 0 = converged. */
   private def observedLong(obs: Observation, fallback: => Long): Long =
-    try {
-      Await.result(Future(obs.get)(ExecutionContext.global), 120.seconds)
-        .valuesIterator.toSeq.headOption.flatMap(Option(_)) match {
-        case Some(l: java.lang.Long) => l.longValue()
-        case Some(l: Long) => l
-        case _ => 0L
-      }
-    } catch { case _: TimeoutException => fallback }
+    observed(obs)(_.valuesIterator.toSeq.headOption.flatMap(Option(_)) match {
+      case Some(l: java.lang.Long) => l.longValue()
+      case Some(l: Long) => l
+      case _ => 0L
+    })(fallback)
 
   /** Iterate `step` from `init` until no output row satisfies
     * `changedPred` or `maxIter`. The convergence probe is an observe()
@@ -193,15 +196,12 @@ object Fixpoint {
         lit(java.math.BigDecimal.ZERO)).as("sig_h"))
 
     def observedSig(obs: Observation, edges: DataFrame): (Long, java.math.BigDecimal) =
-      try {
-        val m = Await.result(Future(obs.get)(ExecutionContext.global), 120.seconds)
+      observed(obs)(m =>
         (m.get("sig_n").flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L),
           m.get("sig_h").flatMap(Option(_)).map(_.asInstanceOf[java.math.BigDecimal])
-            .getOrElse(java.math.BigDecimal.ZERO))
-      } catch {
-        case _: TimeoutException =>
-          val r = edges.agg(sigCols.head, sigCols.tail: _*).head()
-          (r.getLong(0), r.getDecimal(1))
+            .getOrElse(java.math.BigDecimal.ZERO))) {
+        val r = edges.agg(sigCols.head, sigCols.tail: _*).head()
+        (r.getLong(0), r.getDecimal(1))
       }
 
     val initObs = Observation(s"graft_cc_${obsId.incrementAndGet()}")

@@ -114,36 +114,8 @@ object Harness {
     l
   }
 
-  /** RDD ids the inter-query drain must NOT unpersist: session-scoped
-    * memos (Pipeline.ccMemo's checkpointed CC labelings) register their
-    * backing RDDs here. These frames are deliberately cross-query state —
-    * tiny (one row per near-dup node) and the whole point of the memo is
-    * surviving from l21's run to l53's — while everything else the drain
-    * clears is per-query debt. Entries are removed by the memo's own
-    * clear()/evictSince (which also unpersist); capacity overflow
-    * RETIRES without unprotecting — retired blocks stay valid for any
-    * already-handed-out frame until the drain itself (the quiescence
-    * barrier) frees them via SessionMemos.releaseRetired, per
-    * FrameMemo's validity contract.
-    *
-    * Keyed by (applicationId, rddId), not bare rddId: RDD ids restart
-    * near 0 in every SparkContext, so a context stopped with its memos
-    * uncleared would otherwise leave stale bare ids that silently shield
-    * a NEW context's unrelated RDDs from the drain — the exact pinned-
-    * storage leak the drain exists to prevent. Stale (oldApp, id) pairs
-    * from an uncleared stopped context are inert (no live context shares
-    * the applicationId) and bounded by memo capacity. */
-  private val protectedRdds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
-  def protectRdds(sc: org.apache.spark.SparkContext, ids: Iterable[Int]): Unit =
-    ids.foreach(id => protectedRdds.add((sc.applicationId, id)))
-
-  def unprotectRdds(sc: org.apache.spark.SparkContext, ids: Iterable[Int]): Unit =
-    ids.foreach(id => protectedRdds.remove((sc.applicationId, id)))
-
-  /** Backing RDD ids of a (checkpointed) frame — the unit both the memo
-    * registration and Fixpoint.release operate on. */
+  /** Backing RDD ids of a (checkpointed) frame — the unit both the
+    * drain's keep-set and Fixpoint.release operate on. */
   def frameRddIds(df: org.apache.spark.sql.DataFrame): Seq[Int] =
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
@@ -234,15 +206,18 @@ object Harness {
     * paying 10+ s of organic GC for their predecessors' state. */
   def drain(spark: SparkSession, settleMs: Long): Unit = {
     // drain's caller asserts quiescence (nothing mid-consumption — every
-    // unprotected RDD below gets unpersisted, which would break any plan
-    // still in flight), so this is also the safe point to free frames the
-    // memos retired on capacity overflow (held until now so handed-out
-    // frames were never invalidated underneath a reader)
+    // RDD outside the live memo frames gets unpersisted, which would break
+    // any plan still in flight), so this is also the safe point to free
+    // frames the memos retired on capacity overflow (held until now so
+    // handed-out frames were never invalidated underneath a reader)
     SessionMemos.releaseRetired()
     spark.catalog.clearCache()
-    val app = spark.sparkContext.applicationId
-    spark.sparkContext.getPersistentRDDs.values
-      .filterNot(r => protectedRdds.contains((app, r.id)))
+    // session memos' live frames are deliberately cross-query state (the
+    // point of the memo is surviving from l21's run to l53's); everything
+    // else is per-query debt
+    val sc = spark.sparkContext
+    val keep = SessionMemos.liveFrames(sc).flatMap(frameRddIds).toSet
+    sc.getPersistentRDDs.values.filterNot(r => keep(r.id))
       .foreach(_.unpersist(blocking = false))
     System.gc()
     if (settleMs > 0) {

@@ -1,10 +1,14 @@
 package graft
 
-/** One clock + registry over every session-scoped memo in the library
-  * (the FrameMemo instances behind the CC labeling and the MinHash pair
-  * graph, Pipeline's BPE trainMemo, CorpusStats' count memo), so a
+import scala.jdk.CollectionConverters._
+
+/** One clock + registry over every session-scoped memo in the library —
+  * all of them [[FrameMemo]] instances (the CC labeling, the MinHash pair
+  * graph, Graph's co-occurrence artifacts, Pipeline's BPE trainMemo,
+  * CorpusStats' count memo, Lakehouse's scratch-log builds), so a
   * harness can reason about "memo state" as a single unit instead of
-  * chasing per-module clear hooks.
+  * chasing per-module clear hooks. The drain's keep-set is derived from
+  * the members' live entries ([[liveFrames]]), never mirrored.
   *
   * Two capabilities, both driven by admission stamps ([[stamp]] — a
   * process-wide monotonic counter each memo records at insert):
@@ -22,57 +26,50 @@ package graft
   *    per-query delta as `memo_pre` so memo-assisted timings are tagged
   *    in bench_full.json rather than inferred.
   *
-  * Registration is once per memo (object-init time); members never
+  * Registration is once per memo (construction time); members never
   * unregister — memos are static singletons, not per-session values. */
 object SessionMemos {
 
-  trait Member {
-    /** Drop — and for frame-backed memos, release — entries admitted
-      * strictly after `mark`; return how many were dropped. The caller
-      * asserts nothing still holds frames admitted after the mark (see
-      * FrameMemo.evictSince for why that matters). */
-    def evictSince(mark: Long): Int
-
-    /** Free state held only for handed-out-frame safety (FrameMemo's
-      * retired capacity-overflow entries); live lookup-able entries are
-      * untouched. The caller asserts QUIESCENCE: no frame previously
-      * returned by any memo is still mid-consumption (Harness.drain's
-      * between-queries barrier is exactly this point). Default no-op —
-      * most memos retain nothing beyond their lookup tables. */
-    def releaseRetired(): Int = 0
-  }
-
   private val clock = new java.util.concurrent.atomic.AtomicLong(0L)
   private val members =
-    new java.util.concurrent.CopyOnWriteArrayList[Member]()
+    new java.util.concurrent.CopyOnWriteArrayList[FrameMemo[_, _]]()
   private val preHits = new java.util.concurrent.atomic.AtomicLong(0L)
   @volatile private var windowStart = Long.MaxValue
 
-  def register(m: Member): Unit = members.add(m)
+  private[graft] def register(m: FrameMemo[_, _]): Unit = members.add(m)
 
   /** Admission stamp for a new memo entry (strictly increasing). */
-  def stamp(): Long = clock.incrementAndGet()
+  private[graft] def stamp(): Long = clock.incrementAndGet()
 
   /** Current clock reading: entries stamped after this are "since". */
   def mark(): Long = clock.get()
 
-  /** Evict entries admitted after `mark` from every registered memo. */
+  /** Evict entries admitted after `mark` from every registered memo,
+    * releasing their frames (see FrameMemo.evictSince for the caller's
+    * contract); return how many were dropped. */
   def evictSince(mark: Long): Int = {
     var n = 0
     members.forEach(m => n += m.evictSince(mark))
     n
   }
 
-  /** Release every memo's retired (overflow-held) state — see
-    * [[Member.releaseRetired]] for the quiescence contract the caller
-    * asserts. Wired into Harness.drain so a harness session's retained
-    * storage is bounded by memo capacity, not by how many corpora it
-    * cycled. */
+  /** Release every memo's retired (overflow-held) frames. The caller
+    * asserts QUIESCENCE: no frame previously returned by any memo is
+    * still mid-consumption (Harness.drain's between-queries barrier is
+    * exactly this point); live lookup-able entries are untouched. Wired
+    * into Harness.drain so a harness session's retained storage is
+    * bounded by memo capacity, not by how many corpora it cycled. */
   def releaseRetired(): Int = {
     var n = 0
     members.forEach(m => n += m.releaseRetired())
     n
   }
+
+  /** Every memo's live frames on `sc` — the set Harness.drain keeps,
+    * derived from the entries themselves at the drain. */
+  private[graft] def liveFrames(sc: org.apache.spark.SparkContext)
+      : Seq[org.apache.spark.sql.DataFrame] =
+    members.asScala.toSeq.flatMap(_.liveFrames(sc))
 
   /** Start counting pre-existing-state hits: lookups that serve an entry
     * stamped at-or-before `mark` increment [[preHitCount]]. */
@@ -84,6 +81,6 @@ object SessionMemos {
     * admission stamp. Cheap (one volatile read + at most one CAS), so
     * members call it unconditionally; outside a window (windowStart =
     * MaxValue) every hit counts, but nothing reads the counter then. */
-  def noteHit(entryStamp: Long): Unit =
+  private[graft] def noteHit(entryStamp: Long): Unit =
     if (entryStamp <= windowStart) preHits.incrementAndGet()
 }

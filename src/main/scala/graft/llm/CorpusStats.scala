@@ -1,7 +1,5 @@
 package graft.llm
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -26,47 +24,17 @@ object CorpusStats {
   // sameResult (what CacheManager itself uses for cache lookups), not
   // plan equality: two spark.read.parquet(path) calls build distinct
   // relation objects that only semantic comparison identifies. Entries
-  // are bounded (FIFO-evicted past MaxEntries) so a long-lived session
+  // are bounded (the oldest dropped past 64) so a long-lived session
   // probing many distinct frames can't accumulate retained plan graphs,
   // and the linear sameResult scan stays cheap.
-  private val MaxEntries = 64
-  // (plan, count, admission stamp) — stamped so SessionMemos can delta-
-  // evict and attribute cross-query reuse like every other session memo
-  private val memo = new java.util.ArrayDeque[(LogicalPlan, Long, Long)]()
-  graft.SessionMemos.register(new graft.SessionMemos.Member {
-    override def evictSince(mark: Long): Int = memo.synchronized {
-      var n = 0
-      while (!memo.isEmpty && memo.peekLast()._3 > mark) {
-        memo.removeLast(); n += 1
-      }
-      n
-    }
-  })
+  private val memo = new graft.FrameMemo[LogicalPlan, Long](64, _ sameResult _)
 
-  /** df.count(), memoized per semantically-equal normalized plan. */
-  def n(df: DataFrame): Long = {
-    val key = df.queryExecution.normalized
-    memo.synchronized {
-      val it = memo.iterator()
-      while (it.hasNext) {
-        val (p, v, stamp) = it.next()
-        if (p.sameResult(key)) {
-          graft.SessionMemos.noteHit(stamp)
-          return v
-        }
-      }
-    }
-    val v = df.count() // outside the lock: a count can take seconds
-    memo.synchronized {
-      if (!memo.iterator().asScala.exists(_._1.sameResult(key))) {
-        memo.addLast((key, v, graft.SessionMemos.stamp()))
-        if (memo.size > MaxEntries) memo.removeFirst()
-      }
-    }
-    v
-  }
+  /** df.count(), memoized per semantically-equal normalized plan; the
+    * count runs outside the memo's lock (it can take seconds). */
+  def n(df: DataFrame): Long =
+    memo.getOrCompute(df.queryExecution.normalized)(df.count())
 
   /** Drop all memoized sizes — the invalidation hook for callers whose
     * corpus mutates beyond the parameter-derivation tolerance. */
-  def clear(): Unit = memo.synchronized(memo.clear())
+  def clear(): Unit = memo.clear()
 }

@@ -216,14 +216,14 @@ object Llm extends QueryModule {
     * cold path calls straight through here. Keyed by (docs plan, jaccMin,
     * bucketCap); clear with [[clearPairsMemo]] when a corpus is rewritten
     * in place (the FrameMemo staleness contract). */
-  private val pairsMemo = new graft.FrameMemo[(Double, Int)]()
+  private val pairsMemo = graft.FrameMemo.frames[(Double, Int)]()
 
   def clearPairsMemo(): Unit = pairsMemo.clear()
 
   def minHashNearDupPairs(docs: DataFrame, jaccMin: Double = 0.4,
       bucketCap: Int = BandBucketCap): DataFrame =
-    pairsMemo.getOrCompute(docs.sparkSession,
-      docs.queryExecution.normalized, (jaccMin, bucketCap)) {
+    pairsMemo.getOrCompute((docs.sparkSession,
+      docs.queryExecution.normalized, (jaccMin, bucketCap))) {
       minHashNearDupPairsUncached(docs, jaccMin, bucketCap)
     }
 
@@ -239,8 +239,8 @@ object Llm extends QueryModule {
     * like every other cross-query ride. */
   private[llm] def minHashNearDupPairsWith(docs: DataFrame, sh: DataFrame,
       bands: DataFrame, jaccMin: Double, bucketCap: Int): DataFrame =
-    pairsMemo.getOrCompute(docs.sparkSession,
-      docs.queryExecution.normalized, (jaccMin, bucketCap)) {
+    pairsMemo.getOrCompute((docs.sparkSession,
+      docs.queryExecution.normalized, (jaccMin, bucketCap))) {
       verifiedPairsFrom(sh, bands, jaccMin, bucketCap)
         .orderBy("a", "b")
         .localCheckpoint()

@@ -348,7 +348,7 @@ object Pipeline extends QueryModule {
     * is that a sweep running BOTH l21 and l53 over one corpus pays the
     * multi-round CC fixpoint — the r8 sweep's dominant tail (l53 38.7 s +
     * l21 15.3 s in-sweep) — exactly once. */
-  private val ccMemo = new graft.FrameMemo[Unit]()
+  private val ccMemo = graft.FrameMemo.frames[Unit]()
 
   /** The shared CC labeling both l21 and l53 canonicalize from: one
     * large-star/small-star run over the l02 MinHash pair graph, round
@@ -361,8 +361,8 @@ object Pipeline extends QueryModule {
     * runs jobs and yields a fresh never-matching LogicalRDD — the hit
     * path must not touch l02 at all. */
   def dedupClusterLabels(spark: SparkSession, dir: String): DataFrame =
-    ccMemo.getOrCompute(spark,
-      Tables.documents(spark, dir).queryExecution.normalized, ()) {
+    ccMemo.getOrCompute((spark,
+      Tables.documents(spark, dir).queryExecution.normalized, ())) {
       graft.Fixpoint.connectedComponentsStar(
         Llm.l02(spark, dir).select("a", "b"))
     }
@@ -1022,53 +1022,18 @@ object Pipeline extends QueryModule {
     * (l45) over the SAME corpus pays the ~10 driver-coordinated
     * training rounds once — the "train once, encode many" contract at
     * the library level, without the caller having to thread the merge
-    * table through. Bounded like CorpusStats' memo. */
-  private val trainMemo =
-    new java.util.ArrayDeque[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int, Seq[(Int, String, String, Long)], Long)]()
-  // driver-side Seqs, nothing to release — eviction is just a drop
-  graft.SessionMemos.register(new graft.SessionMemos.Member {
-    override def evictSince(mark: Long): Int = trainMemo.synchronized {
-      var n = 0
-      while (!trainMemo.isEmpty && trainMemo.peekLast()._4 > mark) {
-        trainMemo.removeLast(); n += 1
-      }
-      n
-    }
-  })
+    * table through. Bounded like CorpusStats' memo; the values are
+    * driver-side Seqs, so overflow and eviction just drop them. */
+  private val trainMemo = new graft.FrameMemo[
+      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
+      Seq[(Int, String, String, Long)]](16,
+    (a, b) => a._2 == b._2 && a._1.sameResult(b._1))
 
   def bpeTrain(docs: DataFrame, rounds: Int = 10): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val key = docs.queryExecution.normalized
-    val hit = trainMemo.synchronized {
-      val it = trainMemo.iterator()
-      var found: Option[Seq[(Int, String, String, Long)]] = None
-      while (it.hasNext && found.isEmpty) {
-        val (p, r, v, stamp) = it.next()
-        if (r == rounds && p.sameResult(key)) {
-          graft.SessionMemos.noteHit(stamp)
-          found = Some(v)
-        }
-      }
-      found
-    }
-    val rows = hit.getOrElse {
-      val trained = bpeTrainRows(docs, rounds)
-      trainMemo.synchronized {
-        val dup = trainMemo.iterator()
-        var exists = false
-        while (dup.hasNext && !exists) {
-          val (p, r, _, _) = dup.next()
-          exists = r == rounds && p.sameResult(key)
-        }
-        if (!exists) {
-          trainMemo.addLast((key, rounds, trained, graft.SessionMemos.stamp()))
-          if (trainMemo.size > 16) trainMemo.removeFirst()
-        }
-      }
-      trained
-    }
+    val rows = trainMemo.getOrCompute((docs.queryExecution.normalized, rounds))(
+      bpeTrainRows(docs, rounds))
     rows.toDF("round", "s1", "s2", "n")
       .withColumn("round", col("round").cast("long"))
       .orderBy("round")
@@ -1079,7 +1044,7 @@ object Pipeline extends QueryModule {
     * normalized plan still sameResult-matches a re-read of the same
     * path, so without this a mutated corpus would keep serving its old
     * tokenizer. */
-  def clearTrainMemo(): Unit = trainMemo.synchronized(trainMemo.clear())
+  def clearTrainMemo(): Unit = trainMemo.clear()
 
   /** The trained merge list in application order — the ONE accessor
     * every encode-side consumer shares (row layout stated here once). */

@@ -1,6 +1,6 @@
 package graft.odm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,15 +30,9 @@ object CommandApply {
     *
     * Cross-file determinism: the uuid5 identity chain roots at the study
     * OID, so the same item key CAN span files. `seq` is per-file, so the
-    * resolution window orders by (fileOrder, seq) — `fileOrder` defaults to
-    * `file_oid`, which is deterministic but arbitrary; a producer that
-    * knows real ingest order (e.g. the file source's modificationTime, or
-    * a batch sequence number) should pass that column so "latest file
-    * wins" is chronological, not lexical. */
-  def itemState(spark: SparkSession, log: DataFrame): DataFrame =
-    itemState(spark, log, col("file_oid"))
-
-  def itemState(spark: SparkSession, log: DataFrame, fileOrder: Column): DataFrame = {
+    * resolution window orders by (file_oid, seq) — deterministic, and
+    * "latest file wins" is lexical by file OID. */
+  def itemState(spark: SparkSession, log: DataFrame): DataFrame = {
     graft.functions.Uuid5Expression.register(spark)
     val items = log.filter(col("level") === 5)
       .withColumn("p", from_json(col("params_json"),
@@ -51,7 +45,7 @@ object CommandApply {
       .withColumn("key", coalesce(col("p.item_id"),
         graft.functions.Uuid5Expression.uuid5Native(
           col("p.item_group_id"), col("p.item_oid"))))
-    val w = Window.partitionBy("key").orderBy(fileOrder.desc, col("seq").desc)
+    val w = Window.partitionBy("key").orderBy(col("file_oid").desc, col("seq").desc)
     items
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1) // latest command per item wins
@@ -98,17 +92,16 @@ object CommandApply {
     * then DOCUMENT order (the posexplode position path from OdmPipeline,
     * serialized as a zero-padded string whose lexicographic order equals
     * the positional array's — see OdmPipeline.docPosStr).
-    * The old (level, name, params_json) lexical order deviated from the
+    * A (level, name, params_json) lexical order would deviate from the
     * reference for same-item sibling commands — remove-item sorts after
     * insert-item, so a remove followed by a re-insert of the same item
-    * resolved to removed. Logs produced before doc_pos existed fall back
-    * to the lexical order. */
+    * would resolve to removed — so a log without doc_pos is rejected. */
   def sequenced(cmds: DataFrame): DataFrame = {
-    val inFileOrder =
-      if (cmds.columns.contains("doc_pos")) Seq(col("level"), col("doc_pos"))
-      else Seq(col("level"), col("name"), col("params_json"))
+    require(cmds.columns.contains("doc_pos"),
+      "CommandApply.sequenced needs the doc_pos column (the within-file " +
+        s"document order); got columns ${cmds.columns.mkString(", ")}")
     cmds.withColumn("seq",
       row_number().over(Window.partitionBy(col("file_oid"))
-        .orderBy(inFileOrder: _*)))
+        .orderBy(col("level"), col("doc_pos"))))
   }
 }

@@ -129,27 +129,24 @@ object OdmPipeline {
     * ancestor's id/oid/eff_tx. Children of removed nodes are pruned at each
     * level (R17: remove never cascades).
     *
-    * Batch path caches every level: the consumers (commandsOf's 5 unioned
-    * projections, gatedCommands' gate union) each traverse the whole
-    * cascade, so without the cache the XML parse + uuid5 chain re-executes
-    * once per projection. The streaming path
-    * (explodedFrom) stays uncached — caching is illegal on streaming DFs
-    * and micro-batches are single-pass anyway. */
+    * A batch input caches every level: the consumers (commandsOf's 5
+    * unioned projections, gatedCommands' gate union) each traverse the
+    * whole cascade, so without the cache the XML parse + uuid5 chain
+    * re-executes once per projection. */
   def exploded(spark: SparkSession, path: String): ExplodedLevels =
-    explodedFrom(readOdm(spark, path), cacheLevels = true)
+    explodedFrom(readOdm(spark, path))
 
   /** Same cascade over any (batch OR streaming) DataFrame with the odm
     * top-level schema — the streaming ingest (OdmStreamIngest) feeds
-    * from_xml-parsed file contents through here unchanged. */
-  def explodedFrom(odmFiles: DataFrame): ExplodedLevels =
-    explodedFrom(odmFiles, cacheLevels = false)
-
-  def explodedFrom(odmFiles: DataFrame, cacheLevels: Boolean): ExplodedLevels = {
+    * from_xml-parsed file contents through here unchanged. A streaming
+    * input stays uncached — caching is illegal on streaming DFs and
+    * micro-batches are single-pass anyway. */
+  def explodedFrom(odmFiles: DataFrame): ExplodedLevels = {
     graft.functions.Uuid5Expression.register(odmFiles.sparkSession)
-    // each level builds on the CACHED parent when cacheLevels is set, so
-    // a consumer touching all six levels parses the XML once, not once
+    // each level of a batch input builds on the CACHED parent, so a
+    // consumer touching all six levels parses the XML once, not once
     // per downstream projection
-    def c(df: DataFrame): DataFrame = if (cacheLevels) df.cache() else df
+    def c(df: DataFrame): DataFrame = if (odmFiles.isStreaming) df else df.cache()
     // posexplode at every level: `doc_pos` accumulates the positional path
     // (array<int>, one index per ancestor) — the within-file DOCUMENT order
     // the reference processes nodes in. Array ordering is lexicographic, so
@@ -327,7 +324,7 @@ object OdmPipeline {
 
   /** The command envelope's columns: the gen-cmd-id `id`, the batch's
     * `sub`, and the 7-column select every envelope consumer reads. */
-  private def envelope(spark: SparkSession, cmds: DataFrame,
+  private[graft] def envelope(spark: SparkSession, cmds: DataFrame,
       batchCmdId: String, sub: String): DataFrame =
     cmds
       .withColumn("id", graft.functions.Uuid5Expression.genCmdId(spark,
@@ -424,7 +421,7 @@ final case class ExplodedLevels(
     itemGroups: DataFrame,
     items: DataFrame) {
 
-  /** Release the level caches pinned by exploded(cacheLevels = true).
+  /** Release the level caches a batch input pins (see explodedFrom).
     * CALLERS OWN THE CACHE LIFECYCLE: the pipeline cannot know when the
     * last consuming action ran, and cached levels left pinned across many
     * paths accumulate storage memory for the whole session (the harness

@@ -209,9 +209,9 @@ object Graph extends QueryModule {
     * intermediate). A composed pipeline — or the sweep's registered
     * queries — derives the projection once per corpus instead of once
     * per query. */
-  private val edgesMemo = new graft.FrameMemo[Unit]()
-  private val cappedMemo = new graft.FrameMemo[Int]()
-  private val coocMemo = new graft.FrameMemo[Int]()
+  private val edgesMemo = graft.FrameMemo.frames[Unit]()
+  private val cappedMemo = graft.FrameMemo.frames[Int]()
+  private val coocMemo = graft.FrameMemo.frames[Int]()
 
   /** Staleness hook (FrameMemo contract): a harness that rewrites the
     * lineitem source in place between generations clears here. */
@@ -243,7 +243,7 @@ object Graph extends QueryModule {
     * Same tagged machinery and disclosure as the pair-table memo. */
   private def rawEdges(spark: SparkSession, dir: String): DataFrame = {
     val e = rawEdgesPlan(spark, dir)
-    edgesMemo.getOrCompute(spark, e.queryExecution.normalized, ()) {
+    edgesMemo.getOrCompute((spark, e.queryExecution.normalized, ())) {
       e.localCheckpoint()
     }
   }
@@ -254,7 +254,7 @@ object Graph extends QueryModule {
     * materialized; see the memo doc above). */
   def coocPairs(spark: SparkSession, dir: String): DataFrame = {
     val key = rawEdgesPlan(spark, dir)
-    coocMemo.getOrCompute(spark, key.queryExecution.normalized, CoocCap) {
+    coocMemo.getOrCompute((spark, key.queryExecution.normalized, CoocCap)) {
       pairsFrom(cappedEdges(spark, dir)).localCheckpoint()
     }
   }
@@ -265,7 +265,7 @@ object Graph extends QueryModule {
     * the memoized edge list (one lineitem scan per corpus, total). */
   private def cappedEdges(spark: SparkSession, dir: String): DataFrame = {
     val key = rawEdgesPlan(spark, dir)
-    cappedMemo.getOrCompute(spark, key.queryExecution.normalized, CoocCap) {
+    cappedMemo.getOrCompute((spark, key.queryExecution.normalized, CoocCap)) {
       capEdges(rawEdges(spark, dir)).localCheckpoint()
     }
   }

@@ -1048,39 +1048,18 @@ object Lakehouse extends QueryModule {
     * (`versions`) before reuse — LakehouseSpec deliberately expires v0
     * to test CDF refusal, and a stale hit would hand that broken log to
     * the next query. */
-  private final class LogMemo(versions: Range)
-      extends graft.SessionMemos.Member {
-    private val entries =
-      new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
-    graft.SessionMemos.register(this)
-    override def evictSince(mark: Long): Int = {
-      var n = 0
-      entries.forEach { (k, v) =>
-        if (v._1 > mark) { entries.remove(k); n += 1 }
-      }
-      n
-    }
-    def getOrBuild(dir: String)(build: => String): String = {
-      val hit = entries.get(dir)
-      if (hit != null) {
-        val ok = versions.forall(v => java.nio.file.Files.exists(
-          java.nio.file.Paths.get(hit._2).resolve(ptrName(v))))
-        if (ok) { graft.SessionMemos.noteHit(hit._1); return hit._2 }
-        entries.remove(dir)
-      }
-      val log = build
-      entries.put(dir, (graft.SessionMemos.stamp(), log))
-      log
-    }
-  }
+  private def logMemo(versions: Range) =
+    new graft.FrameMemo[String, String](Int.MaxValue, _ == _,
+      log => versions.forall(v => java.nio.file.Files.exists(
+        java.nio.file.Paths.get(log).resolve(ptrName(v)))))
 
   /** Memo for the 2-version s28 table (consumers: s28, h14). */
-  private val S28BuildMemo = new LogMemo(0 to 1)
+  private val S28BuildMemo = logMemo(0 to 1)
 
   /** Memoized [[s28Build]] — what the registered consumers (s28, h14)
     * call; a composed pipeline builds its source table once. */
   private[graft] def s28Table(spark: SparkSession, dir: String): String =
-    S28BuildMemo.getOrBuild(dir)(s28Build(spark, dir))
+    S28BuildMemo.getOrCompute(dir)(s28Build(spark, dir))
 
   /** One MERGE step over the CURRENT snapshot of an s28-style log:
     * tombstone the deleted (key%pDel==0, unless updated) and updated
@@ -1157,12 +1136,12 @@ object Lakehouse extends QueryModule {
   }
 
   /** Memo for the 4-version multi-step table (consumers: h15, t31). */
-  private val S28StepsMemo = new LogMemo(0 to 3)
+  private val S28StepsMemo = logMemo(0 to 3)
 
   /** Memoized [[s28BuildSteps]] — what the registered consumers (h15,
     * t31) call; a composed pipeline builds its source table once. */
   private[graft] def s28StepsTable(spark: SparkSession, dir: String): String =
-    S28StepsMemo.getOrBuild(dir)(s28BuildSteps(spark, dir))
+    S28StepsMemo.getOrCompute(dir)(s28BuildSteps(spark, dir))
 
   /** s28: CHANGE DATA FEED — the read-side leg that makes the lakehouse
     * an incremental pipeline source: "give me the row-level changes
@@ -1537,11 +1516,11 @@ object Lakehouse extends QueryModule {
   }
 
   /** Memo for the 4-version row-tracked table (consumers: s31, h16). */
-  private val S31BuildMemo = new LogMemo(0 to 3)
+  private val S31BuildMemo = logMemo(0 to 3)
 
   /** Memoized [[s31Build]] — what the registered consumers call. */
   private[graft] def s31Table(spark: SparkSession, dir: String): String =
-    S31BuildMemo.getOrBuild(dir)(s31Build(spark, dir))
+    S31BuildMemo.getOrCompute(dir)(s31Build(spark, dir))
 
   /** s31: CHANGE FEED ACROSS A COMPACTION VIA ROW LINEAGE — the feed
     * window 0→3 CONTAINS the v2 rewrite s28Cdf refuses; the row-lineage

@@ -46,13 +46,8 @@ object OdmStreamIngest {
     * read, as the command log sink does. */
   def commandTopicStream(spark: SparkSession, dir: String, batchCmdId: String,
       sub: String): DataFrame =
-    commandStream(spark, dir)
-      .withColumn("id", graft.functions.Uuid5Expression.genCmdId(spark,
-        lit(batchCmdId), col("name"), col("params_json"), col("file_oid")))
-      .withColumn("sub", lit(sub))
+    OdmPipeline.envelope(spark, commandStream(spark, dir), batchCmdId, sub)
       .withColumn("routing_key", regexp_replace(col("name"), "/", "."))
-      .select("id", "name", "sub", "file_oid", "params_json", "level",
-        "doc_pos", "routing_key")
 
   // ---- streaming dependency gate (R15, stream-native) -------------------
 

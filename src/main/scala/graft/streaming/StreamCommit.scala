@@ -31,21 +31,13 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamCommit extends QueryModule {
 
-  private def rmrf(p: String): Unit = {
-    def go(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(go))
-      f.delete(); ()
-    }
-    go(new java.io.File(p))
-  }
-
   def t30(spark: SparkSession, dir: String): DataFrame = {
     val root = Tables.scratchPath("t30_stream", dir)
     val (chunks, log, stage, ckpt) =
       (s"$root/chunks", s"$root/log", s"$root/stage", s"$root/ckpt")
     // a rerun must replay the protocol from v0 with fresh batch ids —
     // stale checkpoint/log state would skip batches or append versions
-    Seq(chunks, log, ckpt).foreach(rmrf)
+    Seq(chunks, log, ckpt).foreach(graft.operators.Lakehouse.deleteRecursively)
     val e = Tables.events(spark, dir).select("event_id", "event_type", "value")
     // stage three single-file chunks: the deterministic image of three
     // arriving ingest files (every event_id%3 class is non-empty at all
@@ -70,7 +62,7 @@ object StreamCommit extends QueryModule {
       require(fs.size == 1, s"stage$g must hold exactly one data file")
       java.nio.file.Files.move(java.nio.file.Paths.get(fs.head),
         java.nio.file.Paths.get(chunks, s"chunk$g.parquet"))
-      rmrf(s"$root/stage$g")
+      graft.operators.Lakehouse.deleteRecursively(s"$root/stage$g")
     }
     // s24's manifest schema (monoid merge on the key column, there named
     // ship_month) — the monoid, not the name, is the contract
@@ -216,7 +208,8 @@ object StreamCommit extends QueryModule {
     * of truth and the state store. */
   def t31(spark: SparkSession, dir: String): DataFrame = {
     val root = Tables.scratchPath("t31_consume", dir)
-    Seq(s"$root/notify", s"$root/ckpt", s"$root/state").foreach(rmrf)
+    Seq(s"$root/notify", s"$root/ckpt", s"$root/state")
+      .foreach(graft.operators.Lakehouse.deleteRecursively)
     val log = graft.operators.Lakehouse.s28StepsTable(spark, dir)
     t31Bootstrap(spark, root, log)
     t31Notify(spark, root, Seq(1, 2, 3))

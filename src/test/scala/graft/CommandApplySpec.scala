@@ -131,6 +131,13 @@ class CommandApplySpec extends SparkSuite {
     assert(viaSnapshot.nonEmpty)
   }
 
+  test("sequenced rejects a log without doc_pos, naming the column") {
+    val ex = intercept[IllegalArgumentException] {
+      CommandApply.sequenced(log.drop("seq", "doc_pos"))
+    }
+    assert(ex.getMessage.contains("doc_pos"), ex.getMessage)
+  }
+
   test("replay idempotence: applying the log twice equals once") {
     val once = CommandApply.itemState(spark, log)
     val twice = CommandApply.itemState(spark,

@@ -83,6 +83,25 @@ class OdmPipelineSpec extends SparkSuite {
     assert(i3.getAs[Double]("value_float") === 3.25)
   }
 
+  test("explode reads a batch input through level caches and caches no streaming level") {
+    val batch = OdmPipeline.exploded(spark, fixture)
+    def levels(lv: graft.odm.ExplodedLevels) = Seq(lv.studies, lv.subjects,
+      lv.studyEvents, lv.forms, lv.itemGroups, lv.items)
+    def readsCache(lv: org.apache.spark.sql.DataFrame) = lv.queryExecution.withCachedData
+      .collectFirst { case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r }.isDefined
+    assert(levels(batch).forall(readsCache))
+    batch.unpersist()
+    val dir = java.nio.file.Files.createTempDirectory("graft_odm_uncached")
+    val parsed = spark.readStream.format("binaryFile")
+      .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
+      .load(dir.toString)
+      .select(from_xml(col("content").cast("string"), OdmPipeline.odmSchema).as("odm"))
+      .select(col("odm.*"))
+    val streamed = levels(OdmPipeline.explodedFrom(parsed))
+    // (withCachedData refuses a streaming plan; the cache manager holds none)
+    assert(streamed.forall(lv => lv.isStreaming && !lv.storageLevel.useMemory))
+  }
+
   test("envelope: cmd ids are deterministic, distinct, and key-order free") {
     val env = OdmQueries.c01(spark, sf)
     val ids = env.select("id").collect().map(_.getString(0))
