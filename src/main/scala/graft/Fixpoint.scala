@@ -27,11 +27,16 @@ object Fixpoint {
     * clears CacheManager entries (plan-matched .cache()/.persist()), so
     * on a checkpointed frame it is a silent no-op — the blocks belong to
     * the LogicalRDD's underlying RDD and must be unpersisted there.
-    * FixpointSpec asserts this actually empties getPersistentRDDs. */
+    * FixpointSpec asserts this actually empties getPersistentRDDs.
+    *
+    * It unpersists EVERY RDD under the frame's analyzed plan
+    * ([[Harness.frameRdds]]), not only the frame's own checkpoint: on a
+    * plain plan over a session-memo frame (e.g. a filter of
+    * Graph.coocPairs) it unpersists the memo frame itself, and the memo
+    * then serves blocks that can no longer be read. Release only frames
+    * the caller checkpointed. */
   def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+    Harness.frameRdds(df).foreach(_.unpersist(blocking = false))
 
   private val obsId = new AtomicLong(0L)
 
@@ -75,31 +80,6 @@ object Fixpoint {
           .observe(obs, sum(when(changedPred, 1L).otherwise(0L)).as("changed"))
           .localCheckpoint()
         try go = observedLong(obs, next.filter(changedPred).count()) > 0
-        catch { case t: Throwable => release(next); throw t }
-        release(cur) // superseded — next is materialized
-        cur = next
-        iters += 1
-      }
-      (cur, iters)
-    } catch { case t: Throwable => release(cur); throw t }
-  }
-
-  /** General-probe variant: `changed` runs as its own job over the
-    * checkpointed iterate (use loopObserved unless the probe genuinely
-    * can't be expressed as a row-predicate aggregate). Failure paths
-    * release the in-flight iterates before rethrowing — a throw mid-loop
-    * must not leave checkpoint blocks persisted for the session (the
-    * GC-debt failure mode this file exists to prevent). */
-  def loop(init: DataFrame, maxIter: Int)
-          (step: DataFrame => DataFrame)
-          (changed: DataFrame => Long): (DataFrame, Int) = {
-    var cur = init.localCheckpoint()
-    var iters = 0
-    var go = true
-    try {
-      while (go && iters < maxIter) {
-        val next = step(cur).localCheckpoint()
-        try go = changed(next) > 0
         catch { case t: Throwable => release(next); throw t }
         release(cur) // superseded — next is materialized
         cur = next

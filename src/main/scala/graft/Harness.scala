@@ -114,12 +114,14 @@ object Harness {
     l
   }
 
-  /** Backing RDD ids of a (checkpointed) frame — the unit both the
-    * drain's keep-set and Fixpoint.release operate on. */
-  def frameRddIds(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+  /** Backing RDDs of a frame: every LogicalRDD under its analyzed plan.
+    * The one walker behind the drain's keep-set and Fixpoint.release. */
+  def frameRdds(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
+
+  def frameRddIds(df: org.apache.spark.sql.DataFrame): Seq[Int] = frameRdds(df).map(_.id)
 
   /** JSON string escape: backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in builder-authored SQL or an exception

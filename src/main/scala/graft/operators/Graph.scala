@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the relational star schema. The part↔supplier
@@ -16,6 +16,14 @@ import org.apache.spark.sql.functions._
   * expression both engines evaluate identically. A full PageRank is
   * this plan iterated with the driver checking convergence (the l21
   * fixpoint pattern).
+  *
+  * Materialization: the three memo builders (edge list, capped edge
+  * list, pair table) materialize once per corpus, and loop state is
+  * checkpointed (pageRank, g02, g08). Every other query returns a plain
+  * plan over the memo frames: a checkpoint of a memo projection only
+  * adds a copy job, and releasing such a projection would unpersist the
+  * memo frame itself (Fixpoint.release walks every LogicalRDD under the
+  * plan). So no query here releases anything but its own checkpoints.
   */
 object Graph extends QueryModule {
 
@@ -53,7 +61,7 @@ object Graph extends QueryModule {
       .join(sdeg, "s")
       .select(lit("supplier").as("node_type"), col("s").as("node_id"),
         col("sdeg").as("deg"), col("units"))
-    val out = toParts.unionByName(toSupps)
+    toParts.unionByName(toSupps)
       .crossJoin(broadcast(n))
       // r1 = 0.15/N + 0.85 · (Σ units)/1e12 / N — identical FP shape in
       // the oracle; the sum is integer, so nothing is order-dependent
@@ -62,8 +70,6 @@ object Graph extends QueryModule {
           + lit(0.85) * (col("units").cast("double") / lit(1000000000000.0))
             / col("n")).as("rank"))
       .orderBy("node_type", "node_id")
-      .localCheckpoint()
-    out
   }
 
   /** Full PageRank to convergence — g01's step iterated through
@@ -73,21 +79,17 @@ object Graph extends QueryModule {
     * counter). Library-level operator, not an oracled query: float
     * iteration count depends on tolerance, so it's spec-covered
     * (GraphSpec asserts rank-mass ≈ 1, convergence within maxIter, and
-    * that no superseded checkpoint blocks stay persisted). Edge/degree
-    * tables are computed once and released at the end; per iteration the
+    * that no superseded checkpoint blocks stay persisted). Nodes are
+    * g02/g04's numeric ids ([[directed]]); the result decodes them to
+    * (node_type, node_id BIGINT), g01's node set. The degree table is
+    * computed once and released at the end; per iteration the
     * only shuffles are the gather groupBy and the (broadcast-joined)
     * rank refresh — the same shape a 1000-executor run wants. */
   def pageRank(spark: SparkSession, dir: String,
       maxIter: Int = 30, tol: Double = 1e-9): DataFrame = {
-    val edges = rawEdges(spark, dir)
-    // directed both ways over one node-id space: node = type|id
-    val dir2 = edges.select(
-        concat(lit("part|"), col("p")).as("src"),
-        concat(lit("supplier|"), col("s")).as("dst"))
-      .union(edges.select(
-        concat(lit("supplier|"), col("s")).as("src"),
-        concat(lit("part|"), col("p")).as("dst")))
-      .localCheckpoint()
+    // directed both ways over one node-id space: node = 2·id (+1 for a
+    // supplier)
+    val dir2 = directed(rawEdges(spark, dir))
     val deg = dir2.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
     val nNodes = deg.count()
     val init = deg.select(col("src").as("node"),
@@ -104,15 +106,28 @@ object Graph extends QueryModule {
           col("prev"))
         .select(col("node"), col("rank"), abs(col("rank") - col("prev")).as("delta"))
     } (col("delta") > tol)
-    val out = fin.select(
-        split(col("node"), "\\|").getItem(0).as("node_type"),
-        split(col("node"), "\\|").getItem(1).as("node_id"),
-        col("rank"))
+    val out = fin.select(decoded("node", "node_type", "node_id") :+ col("rank"): _*)
       .orderBy("node_type", "node_id")
       .localCheckpoint()
-    Seq(fin, dir2, deg).foreach(graft.Fixpoint.release)
+    Seq(fin, deg).foreach(graft.Fixpoint.release)
     out
   }
+
+  /** The bipartite edge list directed both ways over ONE numeric node-id
+    * space (part → 2·id, supplier → 2·id+1): every shuffle key, join key
+    * and aggregate key downstream is an 8-byte long instead of a
+    * "part|123" string (guide §2.3 "narrower types"; the string form
+    * measured ~2× g02's per-round task time). [[decoded]] maps an id back
+    * to (type, id) only in a query's final projection, where the
+    * oracles' string-built ids produce the identical rows. */
+  private def directed(edges: DataFrame): DataFrame =
+    edges.select((col("p") * 2).as("src"), (col("s") * 2 + 1).as("dst"))
+      .union(edges.select((col("s") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
+
+  /** The (type, id) columns of a [[directed]] node id column `id`. */
+  private def decoded(id: String, typeCol: String, idCol: String): Seq[Column] = Seq(
+    when(pmod(col(id), lit(2)) === 0, "part").otherwise("supplier").as(typeCol),
+    expr(s"$id div 2").as(idCol))
 
   /** g02: THREE chained PageRank power-iterations — the multi-step
     * fixpoint under the hash gate, not just the single g01 step. The
@@ -124,24 +139,14 @@ object Graph extends QueryModule {
     * — every operation is integer (floor-div contributions, BIGINT
     * gather, floor-div damping), so any partitioning, any engine, any
     * iteration count produces identical bits; the only double appears in
-    * the final units→rank projection. Runs through Fixpoint.loop (fixed
-    * 3 rounds, superseded iterates released); the oracle unrolls the
-    * same three steps as CTEs. Per round: one shuffle (the gather
+    * the final units→rank projection. Runs through Fixpoint.loopObserved
+    * (fixed 3 rounds, superseded iterates released); the oracle unrolls
+    * the same three steps as CTEs. Per round: one shuffle (the gather
     * groupBy) + one rank-refresh join — the 1000-executor shape. */
   def g02(spark: SparkSession, dir: String): DataFrame = {
-    val edges = rawEdges(spark, dir)
-    // g04's numeric node-id space (part → 2·id, supplier → 2·id+1):
-    // every per-round shuffle key, join key and aggregate key is an
-    // 8-byte long instead of a "part|123" string — three gather rounds
-    // hash and compare longs (guide §2.3 "narrower types"; the string
-    // form measured ~2× the per-round task time). The id decodes back to
-    // (type, id) only in the final projection, where the oracle's
-    // string-built ids produce the identical (node_type, node_id) rows.
-    val dir2 = edges.select(
-        (col("p") * 2).as("src"), (col("s") * 2 + 1).as("dst"))
-      .union(edges.select(
-        (col("s") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-      .localCheckpoint()
+    // the numeric node-id space: three gather rounds hash and compare
+    // longs, decoded to (type, id) only in the final projection
+    val dir2 = directed(rawEdges(spark, dir))
     val deg = dir2.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
     val nNodes = deg.count()
     // hoist the loop-invariant dir2⋈deg join: each round used to re-pay
@@ -149,7 +154,6 @@ object Graph extends QueryModule {
     // across rounds, so it materializes once and the loop joins only the
     // per-round rank table (one join per round, not two)
     val wdir = dir2.join(deg, "src").localCheckpoint()
-    graft.Fixpoint.release(dir2) // superseded by wdir for the loop
     val init = deg.select(col("src").as("node"),
       lit(1000000000000L / nNodes).as("r"))
     val (fin, _) = graft.Fixpoint.loopObserved(init, maxIter = 3) { cur =>
@@ -163,12 +167,9 @@ object Graph extends QueryModule {
           (lit(150000000000L / nNodes)
             + expr("(85 * coalesce(g, 0L)) div 100")).as("r"))
     } (lit(true)) // fixed 3 rounds: maxIter is the stop, not convergence
-    val out = fin.select(
-        when(pmod(col("node"), lit(2)) === 0, "part").otherwise("supplier")
-          .as("node_type"),
-        expr("node div 2").cast("bigint").as("node_id"),
+    val out = fin.select(decoded("node", "node_type", "node_id") ++ Seq(
         col("r").as("rank_units"),
-        (col("r").cast("double") / lit(1000000000000.0)).as("rank"))
+        (col("r").cast("double") / lit(1000000000000.0)).as("rank")): _*)
       .orderBy("node_type", "node_id")
       .localCheckpoint()
     Seq(fin, wdir, deg).foreach(graft.Fixpoint.release)
@@ -219,8 +220,8 @@ object Graph extends QueryModule {
     { edgesMemo.clear(); cappedMemo.clear(); coocMemo.clear() }
 
   /** The UNMEMOIZED pair spine, for plan evidence only (`graft.Plans`
-    * id `cooc_pair_spine` — the registered queries now return
-    * memoized/checkpointed frames whose plans are opaque RDD scans). Same
+    * id `cooc_pair_spine` — the registered queries read the memoized
+    * frame, whose plan is an opaque RDD scan). Same
     * [[capEdges]] cap as the real path, so the two cannot drift. Not used
     * by any registered query. */
   def coocSpineForPlan(spark: SparkSession, dir: String): DataFrame =
@@ -328,7 +329,6 @@ object Graph extends QueryModule {
         (floor(col("n_common") / (col("d1") + col("d2") - col("n_common"))
           * 1000000.0 + 0.5) / 1000000.0).as("jaccard"))
       .orderBy("p1", "p2")
-      .localCheckpoint()
   }
 
   /** g07: multi-source BFS layers — min-hop distance (≤ 3 rounds) from a
@@ -349,14 +349,9 @@ object Graph extends QueryModule {
     * filter, seed rule, and round structure can never diverge between
     * the two queries (or from their oracles, which unroll the same
     * rounds). `step` is the per-edge cost: lit(1) = BFS layers,
-    * col("w") = weighted shortest path.
-    *
-    * near-id substitution band: the dense co-occurrence projection is
-    * small-world (everything within 1-2 hops — no layering to test);
-    * restricting to near-id pairs keeps a long-diameter graph whose
-    * relaxation rounds actually exercise the iteration. */
+    * col("w") = weighted shortest path. */
   private def relaxRounds(spark: SparkSession, dir: String,
-      step: org.apache.spark.sql.Column, outCol: String): DataFrame = {
+      step: Column, outCol: String): DataFrame = {
     val edges = bandEdges(spark, dir)
     var dist = edges.select(col("src").as("node")).distinct()
       .filter(pmod(col("node"), lit(50)) === 0)
@@ -367,21 +362,24 @@ object Graph extends QueryModule {
         .select(col("dst").as("node"), (col("d") + step).as("d"))
       dist = dist.unionAll(nxt).groupBy("node").agg(min("d").as("d"))
     }
-    val out = dist.select(col("node"), col("d").as(outCol))
-      .orderBy("node").localCheckpoint()
-    graft.Fixpoint.release(edges)
-    out
+    dist.select(col("node"), col("d").as(outCol)).orderBy("node")
   }
 
-  /** The weighted undirected near-id band edge list (w = id gap, 1–4) —
-    * shared by relaxRounds (g07/g11) and g12 so the band filter and
-    * weight rule can never diverge between the relaxation queries. */
+  /** The near-id substitution band: co-occurrence pairs whose ids differ
+    * by at most 4. The dense co-occurrence projection is small-world
+    * (everything within 1-2 hops — no layering to test); restricting to
+    * near-id pairs keeps a long-diameter graph whose rounds actually
+    * exercise the iteration. The one band rule of g07/g08/g09/g11/g12. */
+  private def band(spark: SparkSession, dir: String): DataFrame =
+    coocPairs(spark, dir).filter(col("p2") - col("p1") <= 4)
+
+  /** The weighted undirected band edge list (w = id gap, 1–4) — shared
+    * by relaxRounds (g07/g11), g09 and g12 so the band filter and weight
+    * rule can never diverge between the round queries. */
   private def bandEdges(spark: SparkSession, dir: String): DataFrame = {
-    val pr = coocPairs(spark, dir).filter(col("p2") - col("p1") <= 4)
-      .withColumn("w", col("p2") - col("p1"))
+    val pr = band(spark, dir).withColumn("w", col("p2") - col("p1"))
     pr.select(col("p1").as("src"), col("p2").as("dst"), col("w"))
       .unionAll(pr.select(col("p2").as("src"), col("p1").as("dst"), col("w")))
-      .localCheckpoint()
   }
 
   /** g11: WEIGHTED shortest paths (3 Bellman-Ford rounds) from g07's
@@ -427,15 +425,13 @@ object Graph extends QueryModule {
     }
     // d > 0 drops each seed's own zero-distance row (min keeps 0 even if
     // a cycle also reaches the seed, so the exclusion is exact)
-    val out = dist.filter(col("d") > 0)
+    dist.filter(col("d") > 0)
       .groupBy("seed").agg(
         count(lit(1)).as("n_reached"),
         sum(expr("27720 div d")).as("units"))
       .select(col("seed"), col("n_reached"),
         (col("units").cast("double") / 27720.0).as("harmonic"))
-      .orderBy("seed").localCheckpoint()
-    graft.Fixpoint.release(edges)
-    out
+      .orderBy("seed")
   }
 
   /** g08: onion-layer (k-core peel-round) decomposition, k = 5, three
@@ -454,8 +450,9 @@ object Graph extends QueryModule {
     * loop on "no node dropped". */
   def g08(spark: SparkSession, dir: String): DataFrame = {
     val K = 5
-    val base = coocPairs(spark, dir).filter(col("p2") - col("p1") <= 4)
-      .select("p1", "p2").localCheckpoint()
+    // a plain plan over the pair-table memo: never released below, since
+    // releasing it would unpersist the memo frame itself
+    val base = band(spark, dir).select("p1", "p2")
     var alive = base.select(col("p1").as("node"))
       .unionAll(base.select(col("p2").as("node"))).distinct().localCheckpoint()
     var edges = base
@@ -481,7 +478,7 @@ object Graph extends QueryModule {
     val out = layers.reduce(_ unionAll _)
       .unionAll(alive.select(col("node"), lit(0).as("layer")))
       .orderBy("node").localCheckpoint()
-    (Seq(base, alive, edges) ++ layers).foreach(graft.Fixpoint.release)
+    (Seq(alive, edges) ++ layers).foreach(graft.Fixpoint.release)
     out
   }
 
@@ -496,10 +493,7 @@ object Graph extends QueryModule {
     * l21's Fixpoint loop. label after round r = min node id within r
     * hops — deterministic under any partitioning. */
   def g09(spark: SparkSession, dir: String): DataFrame = {
-    val pr = coocPairs(spark, dir).filter(col("p2") - col("p1") <= 4)
-    val edges = pr.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionAll(pr.select(col("p2").as("src"), col("p1").as("dst")))
-      .localCheckpoint()
+    val edges = bandEdges(spark, dir)
     var lbl = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     for (_ <- 1 to 3) {
@@ -508,9 +502,7 @@ object Graph extends QueryModule {
         .select(col("dst").as("node"), col("label"))
       lbl = lbl.unionAll(pulled).groupBy("node").agg(min("label").as("label"))
     }
-    val out = lbl.orderBy("node").localCheckpoint()
-    graft.Fixpoint.release(edges)
-    out
+    lbl.orderBy("node")
   }
 
   /** g10: TWO rounds of HITS (hubs = suppliers, authorities = parts)
@@ -528,15 +520,13 @@ object Graph extends QueryModule {
     val h1 = edges.join(a1, "p").groupBy("s").agg(sum("a1").as("h1"))
     val a2 = edges.join(h1, "s").groupBy("p").agg(sum("h1").as("a2"))
     val h2 = edges.join(a2, "p").groupBy("s").agg(sum("a2").as("h2"))
-    val out = a1.join(a2, "p")
+    a1.join(a2, "p")
       .select(lit("part").as("node_type"), col("p").as("node_id"),
         col("a1").as("score_r1"), col("a2").as("score_r2"))
       .unionAll(h1.join(h2, "s")
         .select(lit("supplier").as("node_type"), col("s").as("node_id"),
           col("h1").as("score_r1"), col("h2").as("score_r2")))
       .orderBy("node_type", "node_id")
-      .localCheckpoint()
-    out
   }
 
   /** g04: TWO synchronous rounds of deterministic label propagation
@@ -551,18 +541,10 @@ object Graph extends QueryModule {
     * the query hash-gateable (convergence-count output would be
     * tolerance-dependent). */
   def g04(spark: SparkSession, dir: String): DataFrame = {
-    val edges = rawEdges(spark, dir)
-    // nodes and labels live in ONE numeric id space (part → 2·id,
-    // supplier → 2·id+1): every shuffle key and every label value is an
-    // 8-byte long instead of a "part|123" string — the join/agg rounds
-    // hash and compare longs, and the label tie-break (count DESC,
-    // label ASC) becomes a numeric order the oracle states identically.
-    // Decode back to (type, id) only in the final projection.
-    val dir2 = edges.select(
-        (col("p") * 2).as("src"), (col("s") * 2 + 1).as("dst"))
-      .union(edges.select(
-        (col("s") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-      .localCheckpoint()
+    // nodes and labels live in the ONE numeric id space: the join/agg
+    // rounds hash and compare longs, and the label tie-break (count DESC,
+    // label ASC) becomes a numeric order the oracle states identically
+    val dir2 = directed(rawEdges(spark, dir))
     val init = dir2.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     // the (count DESC, label ASC) argmax as a struct-min AGGREGATE:
@@ -576,17 +558,9 @@ object Graph extends QueryModule {
         .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
         .select(col("node"), col("m.label").as("label"))
     }
-    val out = fin.select(
-        when(pmod(col("node"), lit(2)) === 0, "part").otherwise("supplier")
-          .as("node_type"),
-        expr("node div 2").as("node_id"),
-        when(pmod(col("label"), lit(2)) === 0, "part").otherwise("supplier")
-          .as("label_type"),
-        expr("label div 2").as("label_id"))
+    fin.select(decoded("node", "node_type", "node_id")
+        ++ decoded("label", "label_type", "label_id"): _*)
       .orderBy("node_type", "node_id")
-      .localCheckpoint()
-    graft.Fixpoint.release(dir2)
-    out
   }
 
   /** g05: per-node triangle counts over the co-occurrence projection
@@ -635,13 +609,11 @@ object Graph extends QueryModule {
     val tri = a.join(b, "src").filter(col("v") < col("w"))
       .join(und, col("v") === col("p1") && col("w") === col("p2"), "left_semi")
       .select(col("src").as("u"), col("v"), col("w"))
-    val out = tri.select(col("u").as("node"))
+    tri.select(col("u").as("node"))
       .unionAll(tri.select(col("v").as("node")))
       .unionAll(tri.select(col("w").as("node")))
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
       .orderBy("node")
-      .localCheckpoint()
-    out
   }
 
   /** Shared oracle prefix: the capped co-occurrence pair table (g03's

@@ -38,7 +38,8 @@ object ProfileQuery {
       jobs.own(spark.sparkContext, id)
       val wall = run(id)
       val rows = jobs.take()
-      println(f"\n=== $id  wall=$wall%.3f s  jobs=${rows.size} ===")
+      println(f"\n=== $id  wall=$wall%.3f s  jobs=${rows.size}  tasks=${rows.map(_.tasks).sum}" +
+        f"  taskSum=${rows.map(_.taskMs).sum / 1e3}%.3f s ===")
       println(f"${"job"}%4s ${"wall_s"}%8s ${"tasks"}%6s ${"taskSum_s"}%10s  site")
       val acct = rows.map { j =>
         val w = (j.end - j.start) / 1e3

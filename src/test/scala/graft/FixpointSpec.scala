@@ -96,21 +96,6 @@ class FixpointSpec extends SparkSuite {
     }
   }
 
-  test("loop reports iteration count and releases superseded iterates") {
-    // contractive toy iteration: x ← x/2 over 8 rows, converged when all < 1
-    val init = (1 to 8).map(i => i * 100.0).toDF("x")
-    val ((fin, iters), retained) = newPersistedAfter {
-      Fixpoint.loop(init, maxIter = 20)(df => df.select((col("x") / 2).as("x"))) {
-        next => next.filter(col("x") >= 1.0).count()
-      }
-    }
-    // 800 → <1 takes ceil(log2(800)) = 10 halvings
-    assert(iters === 10)
-    assert(fin.agg(max("x")).head().getDouble(0) < 1.0)
-    assert(retained <= 1, s"$retained new persisted RDDs retained (want ≤ 1)")
-    Fixpoint.release(fin)
-  }
-
   test("loopObserved: convergence probe rides the checkpoint job — one job per iteration") {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -136,7 +121,9 @@ class FixpointSpec extends SparkSuite {
         val now = jobs.get()
         if (now == seen) stableFor += 1 else { seen = now; stableFor = 0 }
       }
-      assert(iters === 10) // same contraction as the loop test above
+      // x ← x/2 over 8 rows, converged when all < 1: 800 → <1 takes
+      // ceil(log2(800)) = 10 halvings
+      assert(iters === 10)
       assert(retained <= 1, s"$retained new persisted RDDs retained (want ≤ 1)")
       // init checkpoint + one checkpoint job per iteration, NO probe jobs
       // (the old shape was 2·iters + 1: checkpoint + count per round)
@@ -193,6 +180,11 @@ class FixpointSpec extends SparkSuite {
     assert(math.abs(ranks.sum - 1.0) < 1e-6, s"mass ${ranks.sum}")
     assert(ranks.forall(_ > 0.0))
     assert(retained <= 1, s"$retained new persisted RDDs retained (want ≤ 1)")
+    // the numeric node-id space, decoded to g01's (node_type, node_id)
+    assert(pr.schema("node_id").dataType === org.apache.spark.sql.types.LongType)
+    def nodes(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
+      df.select("node_type", "node_id").as[(String, Long)].collect().toSet
+    assert(nodes(pr) === nodes(operators.Graph.g01(spark, sf)))
     Fixpoint.release(pr)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSuite {
@@ -26,6 +27,34 @@ class GraphSpec extends SparkSuite {
       "post-evict call must rebuild, not serve released blocks")
     assert(p3.count() == n1)
     SessionMemos.evictSince(mark)
+  }
+
+  test("plan shape: g-queries without loop state read only live memo frames") {
+    // no copy or terminal checkpoint: every RDD under the returned plan
+    // belongs to a memo frame (edge list, capped edges, pair table)
+    Seq("g01_pagerank_step", "g03_common_neighbors", "g04_label_prop",
+      "g05_triangle_count", "g06_jaccard_neighbors", "g07_bfs_layers",
+      "g09_cc_rounds", "g10_hits", "g11_sssp_rounds", "g12_closeness").foreach { id =>
+      val rdds = Harness.frameRddIds(operators.Graph.queries(id)(spark, sf))
+      val memo = SessionMemos.liveFrames(spark.sparkContext)
+        .flatMap(Harness.frameRddIds).toSet
+      assert(rdds.nonEmpty && rdds.forall(memo),
+        s"$id reads RDDs ${rdds.filterNot(memo)} that are no live memo frame")
+    }
+  }
+
+  test("g08, g09 and g12 leave the coocPairs memo frame live and readable") {
+    val p0 = operators.Graph.coocPairs(spark, sf)
+    val n0 = p0.count()
+    Seq[(SparkSession, String) => DataFrame](
+      operators.Graph.g08, operators.Graph.g09, operators.Graph.g12)
+      .foreach(q => assert(q(spark, sf).collect().nonEmpty))
+    val p1 = operators.Graph.coocPairs(spark, sf)
+    assert(Harness.frameRddIds(p1) == Harness.frameRddIds(p0),
+      "coocPairs was rebuilt")
+    assert(Harness.frameRddIds(p1).forall(spark.sparkContext.getPersistentRDDs.contains),
+      "a g-query released the coocPairs memo frame")
+    assert(p1.count() == n0)
   }
 
   test("g01 pagerank step: probability mass is conserved") {
