@@ -107,12 +107,6 @@ object Bench {
     // before timing)
     SessionMemos.evictSince(0L)
     drain()
-    // whole-stage codegen compiles (Janino), one count per generated
-    // class: a pass whose classes outnumber the codegen cache
-    // (spark.sql.codegen.cache.maxEntries, default 100) recompiles them
-    // on every run, so a steady non-zero count marks cache thrash
-    def compileCount(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // best-of-2: a single pass is at the mercy of one ill-timed GC pause
     // (observed 20× spikes); min-of-two is the standard stable estimator.
     // A failure carries its class + message + first graft stack frame into
@@ -121,7 +115,7 @@ object Bench {
     // Each run also returns the GC ms and the codegen compiles inside it.
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         name: String): (Either[String, Double], Long, Long) = {
-      val (gc0, cg0, t0) = (gcMillis(), compileCount(), System.nanoTime())
+      val (gc0, cg0, t0) = (gcMillis(), Harness.compiles(), System.nanoTime())
       val r = try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         Right((System.nanoTime() - t0) / 1e9)
@@ -134,7 +128,7 @@ object Bench {
         System.err.println(s"[bench] $name failed: $detail")
         Left(detail)
       }
-      (r, gcMillis() - gc0, compileCount() - cg0)
+      (r, gcMillis() - gc0, Harness.compiles() - cg0)
     }
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._

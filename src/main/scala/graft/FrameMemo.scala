@@ -193,8 +193,11 @@ object FrameMemo {
   private[graft] val MaxRetired = 64
 
   /** A memo of materialized frames keyed by (session identity, input
-    * plan, params) — see the class doc's keying contract. */
+    * plan, params) — see the class doc's keying contract. A hit whose
+    * blocks someone released (Harness.persisted is false) is dropped
+    * and rebuilt, not served. */
   def frames[P](capacity: Int = 8): FrameMemo[(SparkSession, LogicalPlan, P), DataFrame] =
     new FrameMemo[(SparkSession, LogicalPlan, P), DataFrame](capacity,
-      (a, b) => (a._1 eq b._1) && a._3 == b._3 && a._2.sameResult(b._2))
+      (a, b) => (a._1 eq b._1) && a._3 == b._3 && a._2.sameResult(b._2),
+      Harness.persisted)
 }

@@ -114,6 +114,14 @@ object Harness {
     l
   }
 
+  /** Generated classes Janino has compiled in this JVM, one count per
+    * class (whole-stage, projection, ordering…). A codegen-cache hit
+    * compiles nothing, so a run whose classes outnumber the cache
+    * (spark.sql.codegen.cache.maxEntries, default 100) recompiles them on
+    * every repeat: a steady non-zero delta marks cache thrash. */
+  def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Backing RDDs of a frame: every LogicalRDD under its analyzed plan.
     * The one walker behind the drain's keep-set and Fixpoint.release. */
   def frameRdds(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
@@ -122,6 +130,14 @@ object Harness {
     }
 
   def frameRddIds(df: org.apache.spark.sql.DataFrame): Seq[Int] = frameRdds(df).map(_.id)
+
+  /** Whether every backing RDD of a materialized frame still holds its
+    * blocks — false once anyone unpersisted one (a LocalCheckpointRDD
+    * cannot recompute them). */
+  def persisted(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val live = df.sparkSession.sparkContext.getPersistentRDDs
+    frameRddIds(df).forall(live.contains)
+  }
 
   /** JSON string escape: backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in builder-authored SQL or an exception

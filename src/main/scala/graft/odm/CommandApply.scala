@@ -13,11 +13,12 @@ import org.apache.spark.sql.functions._
   *   update  → value replaced (latest wins)
   *   upsert  → insert-or-replace
   *   remove  → row gone
-  * Resolution is one latest-wins window over (key) ordered by the log
-  * sequence — O(n log n) per key group, no iterative apply loop. This is
-  * the S40 merge that makes the reference's upsert semantics well-defined
-  * (SURVEY.md §2.1 quirks), and it is idempotent: replaying the same log
-  * yields the same state (cmd ids are deterministic).
+  * Resolution is one latest-wins window over (key) ordered by the log's
+  * (file, document position) — O(n log n) per key group, no iterative
+  * apply loop. This is the S40 merge that makes the reference's upsert
+  * semantics well-defined (SURVEY.md §2.1 quirks), and it is idempotent:
+  * replaying the same log yields the same state (cmd ids are
+  * deterministic).
   *
   * Scale: the log shuffles once on the entity key; with the command log
   * partitioned by file_oid (OdmIo.writeCommandLog) per-file state rebuilds
@@ -25,14 +26,23 @@ import org.apache.spark.sql.functions._
   */
 object CommandApply {
 
-  /** Item-level state from a command log (columns: id, name, params_json,
-    * level, file_oid + a monotonic `seq` ordering column).
+  /** Item-level state from a command log (columns: name, params_json,
+    * level, file_oid, doc_pos).
+    *
+    * Each key's commands resolve by (file_oid desc, doc_pos desc). Within
+    * a file this is the order of [[sequenced]]'s `seq` on the item level:
+    * `seq` numbers a file's rows by (level, doc_pos), and every item's
+    * doc_pos has the same depth, so the padded strings compare as the
+    * positional paths do. Reading doc_pos, not `seq`, leaves `seq` unread,
+    * so the optimizer prunes sequenced's shuffle and window when the state
+    * is all that is read.
     *
     * Cross-file determinism: the uuid5 identity chain roots at the study
-    * OID, so the same item key CAN span files. `seq` is per-file, so the
-    * resolution window orders by (file_oid, seq) — deterministic, and
+    * OID, so the same item key CAN span files. doc_pos is per-file, so the
+    * resolution window orders by file_oid first — deterministic, and
     * "latest file wins" is lexical by file OID. */
   def itemState(spark: SparkSession, log: DataFrame): DataFrame = {
+    requireDocPos(log, "itemState")
     graft.functions.Uuid5Expression.register(spark)
     val items = log.filter(col("level") === 5)
       .withColumn("p", from_json(col("params_json"),
@@ -45,7 +55,7 @@ object CommandApply {
       .withColumn("key", coalesce(col("p.item_id"),
         graft.functions.Uuid5Expression.uuid5Native(
           col("p.item_group_id"), col("p.item_oid"))))
-    val w = Window.partitionBy("key").orderBy(col("file_oid").desc, col("seq").desc)
+    val w = Window.partitionBy("key").orderBy(col("file_oid").desc, col("doc_pos").desc)
     items
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1) // latest command per item wins
@@ -65,7 +75,7 @@ object CommandApply {
     * latest-wins merge accepts. state(compact(log) ∪ tail) == state(log ∪
     * tail) for any strictly-newer tail: the snapshot's file_oid is the
     * empty string, which sorts below every real file in the (file desc,
-    * seq desc) resolution, so genuine commands always win over it.
+    * doc_pos desc) resolution, so genuine commands always win over it.
     *
     * This is the checkpoint story for a 100 TB command log: replays
     * against snapshot + tail instead of the full history, and the
@@ -97,11 +107,14 @@ object CommandApply {
     * insert-item, so a remove followed by a re-insert of the same item
     * would resolve to removed — so a log without doc_pos is rejected. */
   def sequenced(cmds: DataFrame): DataFrame = {
-    require(cmds.columns.contains("doc_pos"),
-      "CommandApply.sequenced needs the doc_pos column (the within-file " +
-        s"document order); got columns ${cmds.columns.mkString(", ")}")
+    requireDocPos(cmds, "sequenced")
     cmds.withColumn("seq",
       row_number().over(Window.partitionBy(col("file_oid"))
         .orderBy(col("level"), col("doc_pos"))))
   }
+
+  private def requireDocPos(log: DataFrame, caller: String): Unit =
+    require(log.columns.contains("doc_pos"),
+      s"CommandApply.$caller needs the doc_pos column (the within-file " +
+        s"document order); got columns ${log.columns.mkString(", ")}")
 }

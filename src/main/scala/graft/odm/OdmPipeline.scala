@@ -2,6 +2,8 @@ package graft.odm
 
 import java.nio.file.{Files, StandardCopyOption}
 
+import scala.collection.immutable.ListMap
+
 import graft.functions.Uuid5
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -14,7 +16,9 @@ import org.apache.spark.sql.types._
   * (/root/reference/src/lens/import_clinical_data.clj):
   *  - 6-level tree: file → clinical-data → subject → study-event → form →
   *    item-group → item (:275-286, :265-269, :222-263, :179-220, :150-177,
-  *    :121-148, :102-119) — here a 6-level explode cascade.
+  *    :121-148, :102-119) — here one generate chain into one cached node
+  *    frame: a row per tree node with its `level`, the six entity tables
+  *    as views of it.
   *  - tx-type dispatch with parent inheritance, default :insert (:92-100) —
   *    here coalesce(own, parent, 'insert') carried down the explode chain.
   *  - UUIDv5 identity chain (:267,:229,:187,:157,:128,:113) — the
@@ -37,7 +41,7 @@ import org.apache.spark.sql.types._
   * file_oid/level). The reference's per-node round-trip gating (R15)
   * becomes `gatedCommands` — one join of all parent rows with the
   * success-event table, closed over the tree into one materialized set
-  * of blocked positions that every level anti-joins against — so a
+  * of blocked positions that the node frame anti-joins against — so a
   * 100 TB command log replays as joins, not sequential awaits.
   */
 object OdmPipeline {
@@ -80,7 +84,8 @@ object OdmPipeline {
   /** The shipped test fixture (FIXTURES.md §3), materialized from the jar.
     * Memoized: a fresh temp path per call would give every consumer a
     * distinct logical plan, defeating cache sharing across the repeated
-    * exploded() traversals (c01/c02 each walk the cascade many times). */
+    * exploded() calls (c02 explodes for its events and again for its
+    * gate, and both must read one cached node frame). */
   lazy val fixturePath: () => String =
     resourceFile("/odm/sample_clinical_data.xml", "graft_odm")
 
@@ -124,180 +129,167 @@ object OdmPipeline {
   private def u5(ns: Column, name: Column): Column =
     graft.functions.Uuid5Expression.uuid5Native(ns, name)
 
-  /** Explodes the tree into the six normalized entity tables
-    * (FIXTURES.md §2) joined flat: one row per item plus carrying every
-    * ancestor's id/oid/eff_tx. Children of removed nodes are pruned at each
-    * level (R17: remove never cascades).
-    *
-    * A batch input caches every level: the consumers (commandsOf's 5
-    * unioned projections, gatedCommands' gate union) each traverse the
-    * whole cascade, so without the cache the XML parse + uuid5 chain
-    * re-executes once per projection. */
-  def exploded(spark: SparkSession, path: String): ExplodedLevels =
-    explodedFrom(readOdm(spark, path))
-
-  /** Same cascade over any (batch OR streaming) DataFrame with the odm
-    * top-level schema — the streaming ingest (OdmStreamIngest) feeds
-    * from_xml-parsed file contents through here unchanged. A streaming
-    * input stays uncached — caching is illegal on streaming DFs and
-    * micro-batches are single-pass anyway. */
-  def explodedFrom(odmFiles: DataFrame): ExplodedLevels = {
-    graft.functions.Uuid5Expression.register(odmFiles.sparkSession)
-    // each level of a batch input builds on the CACHED parent, so a
-    // consumer touching all six levels parses the XML once, not once
-    // per downstream projection
-    def c(df: DataFrame): DataFrame = if (odmFiles.isStreaming) df else df.cache()
-    // posexplode at every level: `doc_pos` accumulates the positional path
-    // (array<int>, one index per ancestor) — the within-file DOCUMENT order
-    // the reference processes nodes in. Array ordering is lexicographic, so
-    // sorting by (level, doc_pos) reproduces the reference's emission order
-    // even when two sibling commands would tie on (name, params).
-    val files = c(odmFiles
-      .select(col("_FileOID").as("file_oid"),
-        posexplode(col("ClinicalData")).as(Seq("cd_i", "cd"))))
-
-    val studies = c(files.select(
-      col("file_oid"),
-      array(col("cd_i")).as("doc_pos"),
-      col("cd._StudyOID").as("study_oid"),
-      u5(lit(Uuid5.NilUuid.toString), col("cd._StudyOID")).as("study_id"),
-      col("cd.SubjectData").as("subjects")))
-
-    val subjects = c(studies
-      .select(col("file_oid"), col("doc_pos"), col("study_oid"), col("study_id"),
-        posexplode(col("subjects")).as(Seq("i", "s")))
-      .select(
-        col("file_oid"), array_append(col("doc_pos"), col("i")).as("doc_pos"),
-        col("study_oid"), col("study_id"),
-        col("s._SubjectKey").as("subject_key"),
-        u5(col("study_id"), col("s._SubjectKey")).as("subject_id"),
-        effTx(col("s._TransactionType"), lit("insert")).as("tx"),
-        col("s.StudyEventData").as("study_events")))
-
-    val studyEvents = c(subjects
-      .filter(col("tx") =!= "remove")
-      .select(col("file_oid"), col("doc_pos"), col("study_id"), col("subject_key"),
-        col("subject_id"), col("tx").as("parent_tx"),
-        posexplode(col("study_events")).as(Seq("i", "se")))
-      .select(
-        col("file_oid"), array_append(col("doc_pos"), col("i")).as("doc_pos"),
-        col("study_id"), col("subject_key"), col("subject_id"),
-        col("se._StudyEventOID").as("study_event_oid"),
-        u5(col("subject_id"), col("se._StudyEventOID")).as("study_event_id"),
-        effTx(col("se._TransactionType"), col("parent_tx")).as("tx"),
-        col("se.FormData").as("forms")))
-
-    val forms = c(studyEvents
-      .filter(col("tx") =!= "remove")
-      .select(col("file_oid"), col("doc_pos"), col("study_event_oid"), col("study_event_id"),
-        col("tx").as("parent_tx"), posexplode(col("forms")).as(Seq("i", "f")))
-      .select(
-        col("file_oid"), array_append(col("doc_pos"), col("i")).as("doc_pos"),
-        col("study_event_oid"), col("study_event_id"),
-        col("f._FormOID").as("form_oid"),
-        u5(col("study_event_id"), col("f._FormOID")).as("form_id"),
-        // documented deviation: upsert degrades to insert below study-event
-        when(effTx(col("f._TransactionType"), col("parent_tx")) === "upsert", "insert")
-          .otherwise(effTx(col("f._TransactionType"), col("parent_tx"))).as("tx"),
-        col("f.ItemGroupData").as("item_groups")))
-
-    val itemGroups = c(forms
-      .filter(col("tx") =!= "remove")
-      .select(col("file_oid"), col("doc_pos"), col("form_oid"), col("form_id"),
-        col("tx").as("parent_tx"), posexplode(col("item_groups")).as(Seq("i", "ig")))
-      .select(
-        col("file_oid"), array_append(col("doc_pos"), col("i")).as("doc_pos"),
-        col("form_oid"), col("form_id"),
-        col("ig._ItemGroupOID").as("item_group_oid"),
-        u5(col("form_id"), col("ig._ItemGroupOID")).as("item_group_id"),
-        effTx(col("ig._TransactionType"), col("parent_tx")).as("tx"),
-        col("ig.ItemData").as("items")))
-
-    val items = c(itemGroups
-      .filter(col("tx") =!= "remove")
-      .select(col("file_oid"), col("doc_pos"), col("item_group_oid"), col("item_group_id"),
-        col("tx").as("parent_tx"), posexplode(col("items")).as(Seq("i", "it")))
-      .select(
-        col("file_oid"), array_append(col("doc_pos"), col("i")).as("doc_pos"),
-        col("item_group_oid"), col("item_group_id"),
-        col("it._ItemOID").as("item_oid"),
-        u5(col("item_group_id"), col("it._ItemOID")).as("item_id"),
-        effTx(col("it._TransactionType"), col("parent_tx")).as("tx"),
-        col("it._DataType").as("data_type"),
-        col("it._Value").as("value_raw"),
-        // the tagged union (§1.5): exactly one typed value column non-null.
-        // try_* variants: ANSI mode would abort the whole file on one bad
-        // value; null here feeds the R21 validation-failed channel instead.
-        when(col("it._DataType") === "string", col("it._Value")).as("value_string"),
-        when(col("it._DataType") === "integer", expr("try_cast(it._Value AS BIGINT)")).as("value_integer"),
-        when(col("it._DataType") === "float", expr("try_cast(it._Value AS DOUBLE)")).as("value_float"),
-        when(col("it._DataType") === "datetime", try_to_timestamp(col("it._Value"))).as("value_datetime")))
-
-    ExplodedLevels(studies.drop("subjects"), subjects.drop("study_events"),
-      studyEvents.drop("forms"), forms.drop("item_groups"),
-      itemGroups.drop("items"), items)
-  }
-
-  /** The four non-leaf levels' command shapes: level number, entity name
-    * (the `<entity>/created|updated` event prefix), whether the verb has
-    * an upsert form (:139-143, :168-172 vs the form/item-group levels),
-    * the entity-id column and the params fields. Shared by [[commandsOf]]
-    * and the gate, so the command a gate acknowledges is the command sent. */
-  private final case class ParentLevel(level: Int, entity: String,
-      withUpsert: Boolean, id: String, params: Seq[String],
-      frame: ExplodedLevels => DataFrame) {
+  /** One tree level below the study: its number, the `<entity>` of its
+    * verbs and events (the `<entity>/created|updated` event prefix),
+    * whether the verb has an upsert form (:139-143, :168-172 vs the
+    * form/item-group levels), the parent's id column, its own oid and id
+    * columns, the XML attribute of its oid and its children's array field
+    * (none at the item leaf). A non-leaf level's command params are
+    * (parent id, oid). One table drives the explode, [[commandsOf]] and
+    * the gate, so the command a gate acknowledges is the command sent. */
+  private final case class Level(level: Int, entity: String,
+      withUpsert: Boolean, parentId: String, oid: String, id: String,
+      xmlOid: String, kids: Option[String]) {
     def verb: Column = {
       val v = when(col("tx") === "remove", s"remove-$entity")
       val v2 = if (withUpsert) v.when(col("tx") === "upsert", s"upsert-$entity") else v
       concat(lit("odm-import/"), v2.otherwise(s"insert-$entity"))
     }
-    def paramsStruct: Column = struct(params.map(col): _*)
+    def paramsStruct: Column = struct(col(parentId), col(oid))
   }
 
-  private val parentLevels = Seq(
-    ParentLevel(1, "subject", withUpsert = true, "subject_id",
-      Seq("study_id", "subject_key"), _.subjects),
-    ParentLevel(2, "study-event", withUpsert = true, "study_event_id",
-      Seq("subject_id", "study_event_oid"), _.studyEvents),
-    ParentLevel(3, "form", withUpsert = false, "form_id",
-      Seq("study_event_id", "form_oid"), _.forms),
-    ParentLevel(4, "item-group", withUpsert = false, "item_group_id",
-      Seq("form_id", "item_group_oid"), _.itemGroups))
+  private val levels = Seq(
+    Level(1, "subject", withUpsert = true, "study_id", "subject_key",
+      "subject_id", "_SubjectKey", Some("StudyEventData")),
+    Level(2, "study-event", withUpsert = true, "subject_id", "study_event_oid",
+      "study_event_id", "_StudyEventOID", Some("FormData")),
+    Level(3, "form", withUpsert = false, "study_event_id", "form_oid",
+      "form_id", "_FormOID", Some("ItemGroupData")),
+    Level(4, "item-group", withUpsert = false, "form_id", "item_group_oid",
+      "item_group_id", "_ItemGroupOID", Some("ItemData")),
+    Level(5, "item", withUpsert = false, "item_group_id", "item_oid",
+      "item_id", "_ItemOID", None))
 
-  /** Per-level command projections (R11). `lvls` is any (possibly gated)
-    * subset of the exploded levels; emission rules per eff_tx:
-    * update emits nothing except at the item leaf; remove emits at its own
-    * level only (its subtree never reached the explode outputs). */
-  def commandsOf(lvls: ExplodedLevels): DataFrame = {
-    def cmd(level: Int, name: Column, params: Column)(df: DataFrame): DataFrame =
-      df.select(lit(level).as("level"), name.as("name"),
-        to_json(params).as("params_json"), col("file_oid"),
-        docPosStr(col("doc_pos")).as("doc_pos"))
+  /** The four non-leaf levels: the ones whose commands gate children. */
+  private val parentLevels = levels.init
 
-    val parentCmds = parentLevels.map(p =>
-      p.frame(lvls).filter(col("tx") =!= "update")
-        .transform(cmd(p.level, p.verb, p.paramsStruct)))
+  /** Explodes the tree into ONE node frame — the six normalized entity
+    * tables of FIXTURES.md §2, stacked: one row per tree node with its
+    * `level` (0 study … 5 item), its positional path `doc_pos`, its
+    * eff_tx `tx` and every ancestor's oid/id. Children of removed nodes
+    * are never descended (R17: remove never cascades). [[ExplodedLevels]]
+    * serves each entity table as a view of that frame.
+    *
+    * A batch input caches the node frame, once: the consumers (the
+    * command projection, the gate's scan) read it instead of re-running
+    * the XML parse and the uuid5 chain. */
+  def exploded(spark: SparkSession, path: String): ExplodedLevels =
+    explodedFrom(readOdm(spark, path))
 
-    // the leaf is the one level where update DOES emit (update-item,
-    // :111-114). One branch for all three verbs: to_json drops null
-    // fields, so nulling the fields a verb does not carry leaves each
-    // verb's params byte-identical to its own struct — insert/upsert
-    // (item_group_id, item_oid, value), update (item_id, value), remove
-    // (item_group_id, item_oid). Unknown tx strings emit nothing here.
+  /** Same explode over any (batch OR streaming) DataFrame with the odm
+    * top-level schema — the streaming ingest (OdmStreamIngest) feeds
+    * from_xml-parsed file contents through here unchanged. A streaming
+    * input stays uncached — caching is illegal on streaming DFs and
+    * micro-batches are single-pass anyway.
+    *
+    * One generate chain: the first step posexplodes the studies, and
+    * each further step posexplodes `[self] ++ children` of the rows one
+    * level up — a typed null at position 0 keeps every row's own node,
+    * positions 1.. are the children. `doc_pos` accumulates the positional
+    * path (array<int>, one index per ancestor) — the within-file
+    * DOCUMENT order the reference processes nodes in. Array ordering is
+    * lexicographic, so sorting by (level, doc_pos) reproduces the
+    * reference's emission order even when two sibling commands would tie
+    * on (name, params). */
+  def explodedFrom(odmFiles: DataFrame): ExplodedLevels = {
+    graft.functions.Uuid5Expression.register(odmFiles.sparkSession)
+    val studies = odmFiles
+      .select(col("_FileOID").as("file_oid"),
+        posexplode(col("ClinicalData")).as(Seq("i", "cd")))
+      .select(col("file_oid"), lit(0).as("level"), array(col("i")).as("doc_pos"),
+        col("cd._StudyOID").as("study_oid"),
+        u5(lit(Uuid5.NilUuid.toString), col("cd._StudyOID")).as("study_id"),
+        // the snapshot default the subjects inherit (:97-98)
+        lit("insert").as("tx"),
+        col("cd.SubjectData").as("kids"))
+    val nodes = levels.foldLeft(studies)(descend).drop("kids")
+    ExplodedLevels(if (odmFiles.isStreaming) nodes else nodes.cache())
+  }
+
+  /** One explode step: every row keeps itself, and each row of the level
+    * above `lv` that is not removed also yields its children as `lv`
+    * rows. A child's own columns read the null struct on a kept row, so
+    * they are null there. */
+  private def descend(df: DataFrame, lv: Level): DataFrame = {
+    val self = array(lit(null).cast(
+      df.schema("kids").dataType.asInstanceOf[ArrayType].elementType))
+    // a null children array would null the concat and lose the row itself
+    val frontier = col("level") === lv.level - 1 && col("tx") =!= "remove" &&
+      col("kids").isNotNull
+    val child = col("i") > 0
+    def c(field: String): Column = col(s"c.$field")
+    val tx = effTx(c("_TransactionType"), col("tx"))
+    val own = Seq(
+      "level" -> when(child, lit(lv.level)).otherwise(col("level")),
+      "doc_pos" -> when(child, array_append(col("doc_pos"), col("i") - 1))
+        .otherwise(col("doc_pos")),
+      lv.oid -> c(lv.xmlOid),
+      lv.id -> u5(col(lv.parentId), c(lv.xmlOid)),
+      // documented deviation: upsert degrades to insert below study-event
+      "tx" -> when(child, if (lv.entity == "form")
+        when(tx === "upsert", "insert").otherwise(tx) else tx).otherwise(col("tx"))
+    ) ++ lv.kids.fold(itemValues(c))(k => Seq("kids" -> c(k)))
+    df.select(col("*"), posexplode(when(frontier, concat(self, col("kids")))
+        .otherwise(self)).as(Seq("i", "c")))
+      .withColumns(ListMap(own: _*))
+      .drop("i", "c")
+  }
+
+  /** The item leaf's raw and typed values, the tagged union (§1.5):
+    * exactly one typed value column non-null. try_* variants: ANSI mode
+    * would abort the whole file on one bad value; null here feeds the R21
+    * validation-failed channel instead. */
+  private def itemValues(it: String => Column): Seq[(String, Column)] = {
+    val (dt, v) = (it("_DataType"), it("_Value"))
+    Seq("data_type" -> dt, "value_raw" -> v,
+      "value_string" -> when(dt === "string", v),
+      "value_integer" -> when(dt === "integer", v.try_cast(LongType)),
+      "value_float" -> when(dt === "float", v.try_cast(DoubleType)),
+      "value_datetime" -> when(dt === "datetime", try_to_timestamp(v)))
+  }
+
+  /** The command each node emits (R11): its `name` and `params_json`,
+    * both null where it emits none. One CASE over `level` for all five
+    * command levels. Emission rules per eff_tx: update emits nothing
+    * except at the item leaf; remove emits at its own level only (its
+    * subtree was never exploded); the study level emits nothing.
+    *
+    * The leaf is the one level where update DOES emit (update-item,
+    * :111-114). One branch for all three verbs: to_json drops null
+    * fields, so nulling the fields a verb does not carry leaves each
+    * verb's params byte-identical to its own struct — insert/upsert
+    * (item_group_id, item_oid, value), update (item_id, value), remove
+    * (item_group_id, item_oid). Unknown tx strings emit nothing there. */
+  private def withCommand(nodes: DataFrame): DataFrame = {
     val update = col("tx") === "update"
     val remove = col("tx") === "remove"
     val itemValue = Seq("data_type", "value_string", "value_integer",
       "value_float", "value_datetime").map(c => when(!remove, col(c)).as(c))
-    val itemCmds = lvls.items.filter(col("tx").isin("insert", "upsert", "update", "remove"))
-      .transform(cmd(5,
-        concat(lit("odm-import/"), when(remove, "remove-item")
-          .when(update, "update-item").otherwise("insert-item")),
-        struct(Seq(when(!update, col("item_group_id")).as("item_group_id"),
+    nodes
+      .withColumn("name", byLevel(p => when(!update, p.verb),
+        when(col("tx").isin("insert", "upsert", "update", "remove"),
+          concat(lit("odm-import/"), when(remove, "remove-item")
+            .when(update, "update-item").otherwise("insert-item")))))
+      .withColumn("params_json", when(col("name").isNotNull,
+        byLevel(p => to_json(p.paramsStruct), to_json(struct(Seq(
+          when(!update, col("item_group_id")).as("item_group_id"),
           when(!update, col("item_oid")).as("item_oid"),
-          when(update, col("item_id")).as("item_id")) ++ itemValue: _*)))
-
-    (parentCmds :+ itemCmds).reduce(_ unionByName _)
+          when(update, col("item_id")).as("item_id")) ++ itemValue: _*)))))
   }
+
+  /** CASE over a node's `level`: `parent` of its non-leaf level, `leaf`
+    * at the item level, null at the study level. */
+  private def byLevel(parent: Level => Column, leaf: Column = lit(null)): Column =
+    parentLevels.foldLeft(when(col("level") === 5, leaf)) { (c, p) =>
+      c.when(col("level") === p.level, parent(p))
+    }
+
+  /** The command stream (R11) of any (possibly gated) node frame, one row
+    * per emitted command. */
+  def commandsOf(lvls: ExplodedLevels): DataFrame =
+    withCommand(lvls.nodes).filter(col("name").isNotNull)
+      .select(col("level"), col("name"), col("params_json"), col("file_oid"),
+        docPosStr(col("doc_pos")).as("doc_pos"))
 
   /** Success-path command stream for an ODM file (every parent accepted). */
   def commands(spark: SparkSession, path: String): DataFrame =
@@ -347,14 +339,17 @@ object OdmPipeline {
     * a row is sent iff every proper ancestor entity has at least one
     * acknowledged row in the batch. Computed in one pass, no sequential
     * awaits and no level-by-level chain:
-    *  1. one union of the levels 1–4 rows, each with its gate cmd_id;
+    *  1. one scan of the node frame's levels 1–4, each row with its gate
+    *     cmd_id — the hash of the command it sends (the shared command
+    *     projection);
     *  2. one broadcast left-outer join with the events → `acked`;
     *  3. one max(acked) per entity id; the rows of entities that never
     *     pass become a small set of blocked (file_oid, doc_pos)
     *     positions, materialized once;
-    *  4. every level drops the rows with a blocked ancestor prefix,
-    *     one broadcast anti-join per ancestor depth on
-    *     slice(doc_pos, 1, k).
+    *  4. the node frame drops the rows with a blocked ancestor prefix,
+    *     one broadcast anti-join per ancestor depth k on
+    *     slice(doc_pos, 1, k), and the command projection runs on what
+    *     is left.
     * Positions stand for rows within one file, so this relies on
     * file_oid naming one file of the batch — as the command log's
     * per-file sequencing (CommandApply.sequenced) already does.
@@ -366,15 +361,13 @@ object OdmPipeline {
 
     // remove rows are never acknowledged and have no children, so they
     // cannot change any entity's verdict
-    val gateRows = parentLevels.map { p =>
-      p.frame(lv).filter(col("tx") =!= "remove").select(
-        col("file_oid"), col("doc_pos"), col(p.id).as("eid"), col("tx"),
-        lit(p.entity).as("entity"),
+    val acked = withCommand(lv.nodes)
+      .filter(col("level").between(1, 4) && col("tx") =!= "remove")
+      .select(col("file_oid"), col("doc_pos"), byLevel(p => col(p.id)).as("eid"),
+        col("tx"), byLevel(p => lit(p.entity)).as("entity"),
         when(col("tx").isin("insert", "upsert"),
           graft.functions.Uuid5Expression.genCmdId(spark, lit(batchCmdId),
-            p.verb, to_json(p.paramsStruct), col("file_oid"))).as("cmd_id"))
-    }.reduce(_ unionByName _)
-    val acked = gateRows
+            col("name"), col("params_json"), col("file_oid"))).as("cmd_id"))
       .join(ev, col("cmd_id") === col("cid") &&
         (col("ev_name") === concat(col("entity"), lit("/created")) ||
           (col("tx") === "upsert" && col("ev_name") === concat(col("entity"), lit("/updated")))),
@@ -382,15 +375,14 @@ object OdmPipeline {
       .select(col("file_oid"), col("doc_pos"), col("eid"),
         (col("tx") === "update" || col("cid").isNotNull).as("acked"))
 
-    // The one materialization. The 8-checkpoint chain it replaces (4 *Ok
-    // + 4 *Sent levels, each an eager localCheckpoint plus a broadcast
-    // job for its semi-join) was 16 of the 25 Spark jobs of one perfbench
-    // odm_import pass; a lazy version of that chain re-ran its join+uuid5
-    // levels in every consumer (odm.log_write 2.3 → 12.8–14.6 s), and the
-    // closed form without this checkpoint more than doubles pass_s (13.0
-    // vs 5.8 s, seed 1). Against the chain, one traced pass (seed 1,
-    // local[4] on a 4-vCPU VM): 25 → 11 jobs, 154 → 51 tasks,
-    // odm.gate_s 3.26 → 1.45 s, odm.log_write_s 2.91 → 1.96 s.
+    // The one materialization. Without it the closed form re-runs the
+    // join and the uuid5 chain in every consumer, and pass_s more than
+    // doubles (13.0 vs 5.8 s, seed 1, on level caches). It replaced an
+    // 8-checkpoint semi-join chain: one perfbench odm_import pass went
+    // 25 → 11 jobs and 154 → 51 tasks. Reading the one node frame
+    // instead of six level caches then took a traced pass (seed 1,
+    // local[4] on a 4-vCPU VM) to 10 jobs and 22 tasks, odm.gate_s
+    // 1.35 → 0.76 s and odm.log_write_s 1.85 → 1.14 s.
     val blocked = acked
       .withColumn("ok", col("eid").isNotNull &&
         max(col("acked")).over(Window.partitionBy(col("eid"))))
@@ -398,37 +390,46 @@ object OdmPipeline {
       .select(col("file_oid").as("b_file"), col("doc_pos").as("b_pos"))
       .localCheckpoint()
 
-    // a level-L row (doc_pos of length L + 1) has ancestor rows at the
-    // prefix lengths 2..L; null file_oids compare equal, like one file
-    def sent(df: DataFrame, level: Int): DataFrame =
-      (2 to level).foldLeft(df) { (d, k) =>
-        d.join(broadcast(blocked), col("file_oid") <=> col("b_file") &&
-          slice(col("doc_pos"), 1, k) === col("b_pos"), "left_anti")
-      }
-
-    envelope(spark, commandsOf(lv.copy(studyEvents = sent(lv.studyEvents, 2),
-      forms = sent(lv.forms, 3), itemGroups = sent(lv.itemGroups, 4),
-      items = sent(lv.items, 5))), batchCmdId, sub)
+    // a node with doc_pos of length n has ancestor rows at the prefix
+    // lengths 2..n-1 (level ≥ 1), never at its own; null file_oids
+    // compare equal, like one file
+    val sent = (2 to 5).foldLeft(lv.nodes) { (d, k) =>
+      d.join(broadcast(blocked), col("file_oid") <=> col("b_file") &&
+        size(col("doc_pos")) > k && slice(col("doc_pos"), 1, k) === col("b_pos"),
+        "left_anti")
+    }
+    envelope(spark, commandsOf(ExplodedLevels(sent)), batchCmdId, sub)
       .orderBy("level", "name", "params_json")
   }
 }
 
-final case class ExplodedLevels(
-    studies: DataFrame,
-    subjects: DataFrame,
-    studyEvents: DataFrame,
-    forms: DataFrame,
-    itemGroups: DataFrame,
-    items: DataFrame) {
+/** The exploded ODM tree (OdmPipeline.explodedFrom). `nodes` holds one
+  * row per tree node; the six entity tables of FIXTURES.md §2 are its
+  * per-level views, each with its own columns in a fixed order. */
+final case class ExplodedLevels(nodes: DataFrame) {
+  private def level(k: Int, cols: String*): DataFrame =
+    nodes.filter(col("level") === k).select(cols.map(col): _*)
 
-  /** Release the level caches a batch input pins (see explodedFrom).
+  lazy val studies: DataFrame = level(0, "file_oid", "doc_pos", "study_oid", "study_id")
+  lazy val subjects: DataFrame = level(1, "file_oid", "doc_pos", "study_oid",
+    "study_id", "subject_key", "subject_id", "tx")
+  lazy val studyEvents: DataFrame = level(2, "file_oid", "doc_pos", "study_id",
+    "subject_key", "subject_id", "study_event_oid", "study_event_id", "tx")
+  lazy val forms: DataFrame = level(3, "file_oid", "doc_pos", "study_event_oid",
+    "study_event_id", "form_oid", "form_id", "tx")
+  lazy val itemGroups: DataFrame = level(4, "file_oid", "doc_pos", "form_oid",
+    "form_id", "item_group_oid", "item_group_id", "tx")
+  lazy val items: DataFrame = level(5, "file_oid", "doc_pos", "item_group_oid",
+    "item_group_id", "item_oid", "item_id", "tx", "data_type", "value_raw",
+    "value_string", "value_integer", "value_float", "value_datetime")
+
+  /** Release the node cache a batch input pins (see explodedFrom) — the
+    * import's only cache.
     * CALLERS OWN THE CACHE LIFECYCLE: the pipeline cannot know when the
-    * last consuming action ran, and cached levels left pinned across many
+    * last consuming action ran, and caches left pinned across many
     * paths accumulate storage memory for the whole session (the harness
     * mains instead sweep with spark.catalog.clearCache() between queries). */
-  def unpersist(): Unit =
-    Seq(studies, subjects, studyEvents, forms, itemGroups, items)
-      .foreach(df => df.unpersist())
+  def unpersist(): Unit = { nodes.unpersist(); () }
 }
 
 /** Typed command envelope (FIXTURES.md §2) — the Dataset[T] API boundary. */

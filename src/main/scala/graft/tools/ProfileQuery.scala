@@ -5,7 +5,8 @@ import graft.{Harness, SessionMemos, SparkEntry}
 /** Optimization-round triage (r15): run one or more registered queries
   * and print every Spark JOB of the profiled run with its call site
   * (file:line of the action), wall time, task count and task-time sum,
-  * as recorded by the shared Harness.JobListener. A sink-family builder
+  * as recorded by the shared Harness.JobListener; the header adds the
+  * run's Janino compiles (codegen-cache misses). A sink-family builder
   * is a CHAIN of small jobs — the bench's one number per query can't say
   * which write/scan/collect inside the chain is the expensive one; this
   * does. Not part of any query path.
@@ -36,10 +37,12 @@ object ProfileQuery {
       run(id)
       jobs.take()
       jobs.own(spark.sparkContext, id)
+      val c0 = Harness.compiles()
       val wall = run(id)
+      val compiled = Harness.compiles() - c0
       val rows = jobs.take()
       println(f"\n=== $id  wall=$wall%.3f s  jobs=${rows.size}  tasks=${rows.map(_.tasks).sum}" +
-        f"  taskSum=${rows.map(_.taskMs).sum / 1e3}%.3f s ===")
+        f"  compiles=$compiled  taskSum=${rows.map(_.taskMs).sum / 1e3}%.3f s ===")
       println(f"${"job"}%4s ${"wall_s"}%8s ${"tasks"}%6s ${"taskSum_s"}%10s  site")
       val acct = rows.map { j =>
         val w = (j.end - j.start) / 1e3

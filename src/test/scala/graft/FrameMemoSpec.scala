@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   *    pre-window state from hits on entries built inside the window;
   *  - a driver-side value memo (trainMemo, CorpusStats) overflows by
   *    dropping its oldest entry and never throws;
-  *  - a Lakehouse log memo rebuilds a hit whose version pointer is gone;
+  *  - a Lakehouse log memo rebuilds a hit whose version pointer is gone,
+  *    and a frame memo one whose blocks a caller released;
   *  - Harness.drain keeps exactly the live memo frames and unpersists
   *    every other persistent RDD. */
 class FrameMemoSpec extends SparkSuite {
@@ -181,6 +182,29 @@ class FrameMemoSpec extends SparkSuite {
     assert(java.nio.file.Files.exists(v0), "the broken log must be rebuilt")
     assert(SessionMemos.preHitCount - pre0 === 1L, "the stale hit must not be served")
     SessionMemos.beginWindow(Long.MinValue)
+  }
+
+  test("a frame memo hit whose blocks a caller released is rebuilt, not served") {
+    operators.Graph.clearCoocMemos()
+    val p0 = operators.Graph.coocPairs(spark, sf)
+    val rows = p0.orderBy("p1", "p2").collect().toSeq
+    // releasing a projection unpersists the memo frame under it
+    Fixpoint.release(p0.select("p1", "p2"))
+    assert(!Harness.persisted(p0))
+    SessionMemos.beginWindow(SessionMemos.mark())
+    val pre0 = SessionMemos.preHitCount
+    val p1 = operators.Graph.coocPairs(spark, sf)
+    assert(Harness.frameRddIds(p1) != Harness.frameRddIds(p0), "the released frame was served")
+    assert(Harness.persisted(p1))
+    assert(p1.orderBy("p1", "p2").collect().toSeq === rows)
+    // the one pre-window hit is the capped edge list the pair table is
+    // rebuilt from; the released pair table itself notes none
+    assert(SessionMemos.preHitCount - pre0 === 1L)
+    assert(Harness.frameRddIds(operators.Graph.coocPairs(spark, sf)) ===
+      Harness.frameRddIds(p1), "the rebuilt frame is served from then on")
+    assert(SessionMemos.preHitCount - pre0 === 1L)
+    SessionMemos.beginWindow(Long.MinValue)
+    operators.Graph.clearCoocMemos()
   }
 
   test("drain keeps exactly the live memo frames; evicted, cleared and unmanaged RDDs go") {
