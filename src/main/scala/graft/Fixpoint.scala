@@ -64,9 +64,10 @@ object Fixpoint {
     * aggregate computed BY the job that materializes each iterate's
     * localCheckpoint — exactly one Spark job per iteration
     * (FixpointSpec listener-counts this). Returns the final iterate
-    * (still persisted — the caller owns its release) and the iteration
-    * count. All superseded iterates, and on failure the current one,
-    * are released eagerly. */
+    * (still persisted) and the iteration count. All superseded
+    * iterates, and on failure the current one, are released eagerly.
+    * Ownership: a caller returns its result as a plan over the final
+    * iterate, not a copy of it; Fixpoint.release(result) frees it. */
   def loopObserved(init: DataFrame, maxIter: Int)
                   (step: DataFrame => DataFrame)
                   (changedPred: Column): (DataFrame, Int) = {
@@ -104,8 +105,10 @@ object Fixpoint {
     * in `pairs`, label = the component's minimum node id — identical to
     * what min-label propagation produces, so an oracle written against
     * either agrees. The returned frame is localCheckpoint-materialized
-    * (small: one row per node); all loop-internal checkpoints are
-    * released before returning. */
+    * (small: one row per node), so its distinct runs once for all
+    * readers: the ccMemo serves it to l21 and l53, and ccMergeStep reads
+    * it twice. All loop-internal checkpoints are released before
+    * returning; Fixpoint.release(result) frees the result. */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 0): DataFrame =
     connectedComponentsStarWithStats(pairs, maxIter)._1
 

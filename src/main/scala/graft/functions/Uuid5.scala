@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import java.util.UUID
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.udf
 
 /** RFC 4122 §4.3 name-based UUIDs (version 5, SHA-1).
@@ -136,8 +136,6 @@ object Uuid5 {
   /** Column API: uuid5(namespaceUuidString, name) → canonical lowercase string. */
   val uuid5Udf = udf((ns: String, name: String) =>
     if (ns == null || name == null) null else uuid5(ns, name))
-
-  def uuid5Col(ns: Column, name: Column): Column = uuid5Udf(ns, name)
 
   def register(spark: SparkSession): Unit = RegisterOnce(spark, "uuid5") {
     spark.udf.register("uuid5", (ns: String, name: String) =>

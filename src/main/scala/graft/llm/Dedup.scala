@@ -484,7 +484,8 @@ object Dedup extends QueryModule {
     * centroid (the standard Lloyd fallback). Not oracled — the
     * iteration count is data/tolerance-dependent — FixpointSpec asserts
     * convergence, objective improvement over the seed, and checkpoint
-    * hygiene. Returns (centroids (cid, cvec), iterations). */
+    * hygiene. Returns (centroids (cid, cvec), iterations): a plan over
+    * the last iterate, which Fixpoint.release(centroids) frees. */
   def kmeansFit(emb: DataFrame, k: Int = 0, maxIter: Int = 20,
       tolMicro: Long = 100L): (DataFrame, Int) = {
     graft.functions.VecMath.register(emb.sparkSession)
@@ -517,10 +518,8 @@ object Dedup extends QueryModule {
               |  0L, (acc, d) -> greatest(acc, d))""".stripMargin),
             lit(0L)).as("moved_micro"))
     } (col("moved_micro") > tolMicro)
-    val out = fin.select("cid", "cvec").orderBy("cid").localCheckpoint()
-    graft.Fixpoint.release(fin)
     embC.unpersist(blocking = false)
-    (out, iters)
+    (fin.select("cid", "cvec").orderBy("cid"), iters)
   }
 
   /** l35: URL canonicalization + dedup — the web-crawl front door that

@@ -453,18 +453,16 @@ object Pipeline extends QueryModule {
     * the query is self-contained and oracle-able, exactly l25's pattern
     * for its indexes); the daily unit of work is steps 2-4 — one
     * delta-edge join against the label table, a fixpoint over a
-    * delta-sized graph, and a broadcast-relabel join. PipelineSpec pins
-    * the contraction (merge-graph edges ≤ delta edges, strictly fewer
-    * nodes than the full graph) and the component-merge semantics on a
-    * synthetic bridge corpus. */
+    * delta-sized graph, and a broadcast-relabel join. The merged labels
+    * are committed too, and the report reads that table: the committed
+    * table is the handoff. PipelineSpec pins the contraction (merge-graph
+    * edges ≤ delta edges, strictly fewer nodes than the full graph) and
+    * the component-merge semantics on a synthetic bridge corpus. */
   def l63(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Llm.minHashNearDupPairs(Tables.documents(spark, dir))
       .select("a", "b")
-    val labels = incrementalCcLabels(spark, pairs,
-      c => pmod(c, lit(10)) === 0, Tables.scratchPath("l63_labels", dir))
-    val out = l21From(labels).localCheckpoint()
-    graft.Fixpoint.release(labels)
-    out
+    l21From(incrementalCcLabels(spark, pairs,
+      c => pmod(c, lit(10)) === 0, Tables.scratchPath("l63_labels", dir)))
   }
 
   /** l64: the DAILY-CLOSE DEDUP COMPOSITION — l25 (batch probe), l54
@@ -485,7 +483,8 @@ object Pipeline extends QueryModule {
     *    insert-vs-merge split, from the same cached signatures;
     *  - label leg (l63): persisted historical labels + delta contraction
     *    + fixpoint on the contracted graph; the emitted label/cluster
-    *    size are POST-close (new docs merged in).
+    *    size are POST-close (new docs merged in), read from the
+    *    committed post-close table (the handoff).
     *
     * The oracle recomputes all six columns from scratch in DuckDB (full
     * recursive-CTE CC, uncontracted), so a pass proves composed-
@@ -522,8 +521,8 @@ object Pipeline extends QueryModule {
     // aggregates over the already-materialized pairs/bands/docs — so
     // the legs materialize CONCURRENTLY with the label loop (guide
     // §2.6) instead of waiting for it. Same algebra, same inputs; each
-    // leg is localCheckpoint-materialized and released after the
-    // composed result materializes.
+    // probe leg is localCheckpoint-materialized and released after the
+    // composed result materializes (the label leg is a committed table).
     val Seq(labels, newExact, near, newBuckets) = graft.Harness.inParallel(Seq(
       () => incrementalCcLabels(spark, pairs, isNew,
         Tables.scratchPath("l64_labels", dir)),
@@ -560,8 +559,7 @@ object Pipeline extends QueryModule {
       .orderBy("doc_id")
       .localCheckpoint()
     // pairs is NOT released — the memo owns that frame (l02's contract)
-    Seq(labels, newExact, near, newBuckets)
-      .foreach(graft.Fixpoint.release)
+    Seq(newExact, near, newBuckets).foreach(graft.Fixpoint.release)
     bands.unpersist(blocking = false)
     sh.unpersist(blocking = false)
     out
@@ -570,29 +568,43 @@ object Pipeline extends QueryModule {
   /** l63's merge engine over an arbitrary pair graph and batch
     * predicate — exposed so the spec can feed synthetic edge sets
     * (component bridges, label takeovers, delta-only nodes) and compare
-    * against a from-scratch CC. Returns the (id, label) labeling of the
-    * FULL graph, localCheckpoint-materialized; the caller owns its
-    * release. */
+    * against a from-scratch CC: [[closeDays]] with one day, historical
+    * labels committed to `labelPath` and the (id, label) labeling of the
+    * FULL graph to `labelPath`_day1, returned as a read of it. */
   private[graft] def incrementalCcLabels(spark: SparkSession,
       pairs: DataFrame, isNew: Column => Column,
-      labelPath: String): DataFrame = {
-    val histEdges = pairs.filter(!isNew(col("a")) && !isNew(col("b")))
-    val deltaEdges = pairs.filter(isNew(col("a")) || isNew(col("b")))
-    // yesterday's published state: CC over historical edges, committed
-    // to parquet and READ BACK — the merge below must only touch this
-    // table, never the historical text/pair derivation
-    val histCc = graft.Fixpoint.connectedComponentsStar(histEdges)
-    histCc.write.mode("overwrite").parquet(labelPath)
-    graft.Fixpoint.release(histCc)
-    ccMergeStep(spark.read.parquet(labelPath), deltaEdges)
+      labelPath: String): DataFrame =
+    closeDays(spark, pairs, c => when(isNew(c), 1).otherwise(0),
+      Seq(labelPath, s"${labelPath}_day1"))
+
+  /** The day-close loop behind l63 and l65 over days 0..paths.size−1
+    * (`day` maps a doc id to its day): day 0 commits CC over the edges
+    * among day-0 docs to `paths(0)`; day d folds the edges whose newer
+    * endpoint arrived on day d into the table day d−1 committed
+    * ([[ccMergeStep]] — never the text or pair derivation) and commits
+    * to `paths(d)`. That write is the day's one materialization; the
+    * loop returns the last table as a read, the handoff. */
+  private def closeDays(spark: SparkSession, pairs: DataFrame,
+      day: Column => Column, paths: Seq[String]): DataFrame = {
+    def commit(labels: DataFrame, path: String): DataFrame = {
+      labels.write.mode("overwrite").parquet(path)
+      graft.Fixpoint.release(labels)
+      spark.read.schema(labels.schema).parquet(path) // no footer-read job
+    }
+    val base = commit(graft.Fixpoint.connectedComponentsStar(
+      pairs.filter(day(col("a")) === 0 && day(col("b")) === 0)), paths.head)
+    paths.zipWithIndex.tail.foldLeft(base) { case (labels, (path, d)) =>
+      commit(ccMergeStep(labels,
+        pairs.filter(greatest(day(col("a")), day(col("b"))) === d)), path)
+    }
   }
 
   /** ONE day-close merge: fold a delta edge set into a persisted (id,
-    * label) table — the repeatable unit [[incrementalCcLabels]] runs
-    * once and l65 runs once per ingest day. Precondition (inductively
-    * preserved): `histLabels` are component MINIMA of the graph seen so
-    * far. Returns the full labeling, localCheckpoint-materialized; the
-    * caller owns its release. */
+    * label) table — the unit [[closeDays]] runs once per ingest day.
+    * Precondition (inductively preserved): `histLabels` are component
+    * MINIMA of the graph seen so far. Returns the full labeling as a
+    * plan over `histLabels` and the merged CC; the caller materializes
+    * it once, then Fixpoint.release(result) frees the merged CC. */
   private[graft] def ccMergeStep(histLabels: DataFrame,
       deltaEdges: DataFrame): DataFrame = {
     val contracted = contractDelta(deltaEdges, histLabels)
@@ -615,9 +627,7 @@ object Pipeline extends QueryModule {
     val direct = mergedCc
       .join(histLabels.select(col("label").as("id")).distinct(),
         Seq("id"), "left_anti")
-    val out = histFinal.unionByName(direct).localCheckpoint()
-    graft.Fixpoint.release(mergedCc)
-    out
+    histFinal.unionByName(direct)
   }
 
   /** l65: MULTI-DAY INCREMENTAL CLOSE — l63 proved ONE merge equals a
@@ -636,40 +646,23 @@ object Pipeline extends QueryModule {
     * each intermediate day against a from-scratch CC over its prefix
     * graph. Scale posture: each day pays one delta-edge contraction
     * join, a delta-sized fixpoint, and a broadcast relabel — the corpus
-    * is never rescanned after day 0. */
+    * is never rescanned after day 0. The committed day-3 table is the
+    * handoff: the report is a plan over it, holding no Spark storage. */
   def l65(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Llm.minHashNearDupPairs(Tables.documents(spark, dir))
       .select("a", "b")
-    val labels = l65Close(spark, pairs, Tables.scratchPath("l65_labels", dir))
-    val out = l21From(labels).localCheckpoint()
-    graft.Fixpoint.release(labels)
-    out
+    l21From(l65Close(spark, pairs, Tables.scratchPath("l65_labels", dir)))
   }
 
-  /** The three-day close over an arbitrary pair graph: day of an id is
-    * id%10 if in {1,2,3} else 0 (base). Returns the final persisted-day
-    * labeling (checkpointed; caller releases). Exposed for the spec's
-    * prefix-graph pins. */
+  /** The three-day close over an arbitrary pair graph: [[closeDays]]
+    * with day of an id = id%10 if in {1,2,3} else 0 (base), day d
+    * committed to `labelRoot`/day<d>. Returns a read of the day-3 table.
+    * Exposed for the spec's prefix-graph pins. */
   private[graft] def l65Close(spark: SparkSession, pairs: DataFrame,
-      labelRoot: String): DataFrame = {
-    def day(c: Column): Column =
-      when(pmod(c, lit(10)).isin(1, 2, 3), pmod(c, lit(10))).otherwise(lit(0L))
-    val base = graft.Fixpoint.connectedComponentsStar(
-      pairs.filter(day(col("a")) === 0 && day(col("b")) === 0))
-    base.write.mode("overwrite").parquet(s"$labelRoot/day0")
-    graft.Fixpoint.release(base)
-    var labels = spark.read.parquet(s"$labelRoot/day0")
-    for (d <- 1 to 3) {
-      val delta = pairs.filter(
-        greatest(day(col("a")), day(col("b"))) === d)
-      val merged = ccMergeStep(labels, delta)
-      // commit today's state; tomorrow reads THIS table, not the lineage
-      merged.write.mode("overwrite").parquet(s"$labelRoot/day$d")
-      graft.Fixpoint.release(merged)
-      labels = spark.read.parquet(s"$labelRoot/day$d")
-    }
-    labels.localCheckpoint()
-  }
+      labelRoot: String): DataFrame =
+    closeDays(spark, pairs,
+      c => when(pmod(c, lit(10)).isin(1, 2, 3), pmod(c, lit(10))).otherwise(lit(0L)),
+      (0 to 3).map(d => s"$labelRoot/day$d"))
 
   /** The merge graph: delta endpoints contracted through the persisted
     * labels; endpoints outside any historical component (new docs,

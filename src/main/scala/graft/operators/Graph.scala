@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   *
   * Materialization: the three memo builders (edge list, capped edge
   * list, pair table) materialize once per corpus, and loop state is
-  * checkpointed (pageRank, g02, g08). Every other query returns a plain
-  * plan over the memo frames: a checkpoint of a memo projection only
-  * adds a copy job, and releasing such a projection would unpersist the
-  * memo frame itself (Fixpoint.release walks every LogicalRDD under the
+  * checkpointed (pageRank, g02, g08); pageRank's and g02's results are
+  * plans over their last iterate. Every other query returns a plain plan
+  * over the memo frames: a checkpoint of a memo projection only adds a
+  * copy job, and releasing such a projection would unpersist the memo
+  * frame itself (Fixpoint.release walks every LogicalRDD under the
   * plan). So no query here releases anything but its own checkpoints.
   */
 object Graph extends QueryModule {
@@ -84,7 +85,8 @@ object Graph extends QueryModule {
     * (node_type, node_id BIGINT), g01's node set. The degree table is
     * computed once and released at the end; per iteration the
     * only shuffles are the gather groupBy and the (broadcast-joined)
-    * rank refresh — the same shape a 1000-executor run wants. */
+    * rank refresh — the same shape a 1000-executor run wants. The result
+    * is a plan over the last iterate; Fixpoint.release(result) frees it. */
   def pageRank(spark: SparkSession, dir: String,
       maxIter: Int = 30, tol: Double = 1e-9): DataFrame = {
     // directed both ways over one node-id space: node = 2·id (+1 for a
@@ -106,11 +108,9 @@ object Graph extends QueryModule {
           col("prev"))
         .select(col("node"), col("rank"), abs(col("rank") - col("prev")).as("delta"))
     } (col("delta") > tol)
-    val out = fin.select(decoded("node", "node_type", "node_id") :+ col("rank"): _*)
+    graft.Fixpoint.release(deg)
+    fin.select(decoded("node", "node_type", "node_id") :+ col("rank"): _*)
       .orderBy("node_type", "node_id")
-      .localCheckpoint()
-    Seq(fin, deg).foreach(graft.Fixpoint.release)
-    out
   }
 
   /** The bipartite edge list directed both ways over ONE numeric node-id
@@ -142,7 +142,8 @@ object Graph extends QueryModule {
     * the final units→rank projection. Runs through Fixpoint.loopObserved
     * (fixed 3 rounds, superseded iterates released); the oracle unrolls
     * the same three steps as CTEs. Per round: one shuffle (the gather
-    * groupBy) + one rank-refresh join — the 1000-executor shape. */
+    * groupBy) + one rank-refresh join — the 1000-executor shape. The
+    * result is a plan over the last iterate, as in [[pageRank]]. */
   def g02(spark: SparkSession, dir: String): DataFrame = {
     // the numeric node-id space: three gather rounds hash and compare
     // longs, decoded to (type, id) only in the final projection
@@ -167,13 +168,11 @@ object Graph extends QueryModule {
           (lit(150000000000L / nNodes)
             + expr("(85 * coalesce(g, 0L)) div 100")).as("r"))
     } (lit(true)) // fixed 3 rounds: maxIter is the stop, not convergence
-    val out = fin.select(decoded("node", "node_type", "node_id") ++ Seq(
+    Seq(wdir, deg).foreach(graft.Fixpoint.release)
+    fin.select(decoded("node", "node_type", "node_id") ++ Seq(
         col("r").as("rank_units"),
         (col("r").cast("double") / lit(1000000000000.0)).as("rank")): _*)
       .orderBy("node_type", "node_id")
-      .localCheckpoint()
-    Seq(fin, wdir, deg).foreach(graft.Fixpoint.release)
-    out
   }
 
   /** Per-supplier part-list cap for g03. Uncapped, co-occurrence pair
@@ -375,12 +374,14 @@ object Graph extends QueryModule {
 
   /** The weighted undirected band edge list (w = id gap, 1–4) — shared
     * by relaxRounds (g07/g11), g09 and g12 so the band filter and weight
-    * rule can never diverge between the round queries. */
-  private def bandEdges(spark: SparkSession, dir: String): DataFrame = {
-    val pr = band(spark, dir).withColumn("w", col("p2") - col("p1"))
-    pr.select(col("p1").as("src"), col("p2").as("dst"), col("w"))
-      .unionAll(pr.select(col("p2").as("src"), col("p1").as("dst"), col("w")))
-  }
+    * rule can never diverge between the round queries. One scan of the
+    * pair table yields both orientations (a union would scan it twice). */
+  private def bandEdges(spark: SparkSession, dir: String): DataFrame =
+    band(spark, dir)
+      .select(explode(array(struct(col("p1").as("src"), col("p2").as("dst")),
+          struct(col("p2").as("src"), col("p1").as("dst")))).as("e"),
+        (col("p2") - col("p1")).as("w"))
+      .select("e.src", "e.dst", "w")
 
   /** g11: WEIGHTED shortest paths (3 Bellman-Ford rounds) from g07's
     * seed set — the min-plus relaxation g07's hop count can't express:
@@ -453,8 +454,8 @@ object Graph extends QueryModule {
     // a plain plan over the pair-table memo: never released below, since
     // releasing it would unpersist the memo frame itself
     val base = band(spark, dir).select("p1", "p2")
-    var alive = base.select(col("p1").as("node"))
-      .unionAll(base.select(col("p2").as("node"))).distinct().localCheckpoint()
+    var alive = base.select(explode(array(col("p1"), col("p2"))).as("node"))
+      .distinct().localCheckpoint()
     var edges = base
     val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to 3) {

@@ -63,8 +63,8 @@ object Lakehouse extends QueryModule {
         listDataFiles(s"$root/commit=2").map(p => (2, p)) ++
         listDataFiles(s"$root/commit=3").map(p => (3, p))
     // planner metadata (≤ 9 rows here; KBs per thousand files in
-    // production) — checkpointed so later reads don't re-list directories
-    rows.toDF("snapshot", "path").localCheckpoint()
+    // production), held by the driver as a local relation
+    rows.toDF("snapshot", "path")
   }
 
   /** Snapshot read: plan exactly the files the manifest attributes to
@@ -106,7 +106,7 @@ object Lakehouse extends QueryModule {
         if (java.nio.file.Files.deleteIfExists(p)) deleted.add(1L)
       }
     }
-    (retained.localCheckpoint(), deleted.value)
+    (retained, deleted.value)
   }
 
   /** Reset a commit-log directory (scratch logs are per-SF-deterministic;
@@ -289,7 +289,6 @@ object Lakehouse extends QueryModule {
     val v2 = v1.filter(!col("ship_month").startsWith("1997")).drop("snapshot")
       .unionByName(delta)
       .withColumn("snapshot", lit(2))
-      .localCheckpoint()
     (v1, v2)
   }
 

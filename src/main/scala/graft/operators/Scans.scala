@@ -408,7 +408,7 @@ object Scans extends QueryModule {
   }
 
   /** Write the two-batch table for s21 and return its file manifest
-    * (batch, path) — tiny, localCheckpoint-materialized. */
+    * (batch, path) — tiny, a driver-local relation. */
   private[graft] def s21Commit(spark: SparkSession, dir: String): DataFrame = {
     val root = Tables.scratchPath("s21_table", dir)
     val li = Tables.lineitem(spark, dir)
@@ -433,7 +433,6 @@ object Scans extends QueryModule {
     (1 to 2).flatMap(b =>
         Lakehouse.listDataFiles(s"$root/batch=$b").map(p => (b, p)))
       .toDF("batch", "path")
-      .localCheckpoint()
   }
 
   /** Snapshot read: plan exactly the files the manifest attributes to

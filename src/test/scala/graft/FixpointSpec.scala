@@ -187,4 +187,29 @@ class FixpointSpec extends SparkSuite {
     assert(nodes(pr) === nodes(operators.Graph.g01(spark, sf)))
     Fixpoint.release(pr)
   }
+
+  test("pageRank and kmeansFit return a plan over their last iterate; " +
+      "Fixpoint.release of the result frees every RDD the call kept") {
+    graft.functions.VecMath.register(spark)
+    val emb = Tables.embeddings(spark, sf)
+    Seq[() => org.apache.spark.sql.DataFrame](
+        () => operators.Graph.pageRank(spark, sf, maxIter = 4, tol = 1e-6),
+        () => llm.Dedup.kmeansFit(emb, k = 4, maxIter = 4)._1).foreach { fit =>
+      def live = spark.sparkContext.getPersistentRDDs.keySet
+      val mark = SessionMemos.mark()
+      val before = live
+      val out = fit()
+      SessionMemos.evictSince(mark) // memo frames are not the call's
+      // a plan (the final sort) over the one kept iterate, not a sorted
+      // copy of it
+      assert(out.queryExecution.analyzed.collectFirst {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s }.nonEmpty)
+      assert(Harness.frameRddIds(out).toSet === live -- before)
+      assert(Harness.frameRddIds(out).size === 1)
+      assert(out.collect().nonEmpty)
+      Fixpoint.release(out)
+      val left = live -- before
+      assert(left.isEmpty, s"${left.size} RDDs still persisted after release")
+    }
+  }
 }

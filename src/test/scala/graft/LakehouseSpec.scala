@@ -771,4 +771,18 @@ class LakehouseSpec extends SparkSuite {
     assert(feed.select("change_type").distinct().collect()
       .map(_.getString(0)).toSet === Set("insert"))
   }
+
+  test("s22's manifest is driver-local: reading it runs no Spark job") {
+    val manifest = operators.Lakehouse.s22Commit(spark, sf)
+    val sc = spark.sparkContext
+    val jobs = Harness.listen(spark)
+    try {
+      val files = manifest.collect()
+      // s22AsOf's planning read (its parquet read then infers the schema)
+      manifest.filter(col("snapshot") === 3).select("path").collect()
+      org.apache.spark.GraftSparkBridge.waitListenerBusEmpty(sc, 10000L)
+      assert(files.nonEmpty)
+      assert(jobs.take().isEmpty, "collecting the manifest ran a Spark job")
+    } finally sc.removeSparkListener(jobs)
+  }
 }

@@ -762,4 +762,21 @@ class PipelineSpec extends SparkSuite {
     val take = got.values.map(_._3).sum
     assert(take <= budget && budget - take <= 3L * avail.size)
   }
+
+  test("l63/l65: the committed label table is the handoff — the result holds " +
+      "no Spark storage and the day-close leaves none behind") {
+    // warm the pair-graph memo, so only the day-close itself is measured
+    llm.Llm.minHashNearDupPairs(Tables.documents(spark, sf))
+    Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+        llm.Pipeline.l63, llm.Pipeline.l65).foreach { q =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = q(spark, sf)
+      assert(Harness.frameRddIds(out).isEmpty,
+        "the report must read the committed table, not a checkpoint")
+      assert(out.collect().nonEmpty)
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.isEmpty, s"day-close left ${added.size} persisted RDDs")
+    }
+    llm.Llm.clearPairsMemo()
+  }
 }
