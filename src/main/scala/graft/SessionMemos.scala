@@ -5,9 +5,8 @@ import scala.jdk.CollectionConverters._
 /** One clock + registry over every session-scoped memo in the library —
   * all of them [[FrameMemo]] instances (the CC labeling, the MinHash pair
   * graph, Graph's co-occurrence artifacts, Pipeline's BPE trainMemo,
-  * CorpusStats' count memo, Lakehouse's scratch-log builds), so a
-  * harness can reason about "memo state" as a single unit instead of
-  * chasing per-module clear hooks. The drain's keep-set is derived from
+  * Lakehouse's scratch-log builds), so a harness can reason about "memo
+  * state" as a single unit instead of chasing per-module clear hooks. The drain's keep-set is derived from
   * the members' live entries ([[liveFrames]]), never mirrored.
   *
   * Two capabilities, both driven by admission stamps ([[stamp]] — a

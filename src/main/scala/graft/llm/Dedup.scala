@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{QueryModule, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection family beyond MinHash (l02/l02b): SimHash
@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
   * array functions), so every query has a bit-for-bit DuckDB oracle.
   *
   * Scale posture, per operator:
-  *  - l02c SimHash: fingerprints are one linear aggregation pass; the
-  *    candidate join is banded (4×12-bit bands, pigeonhole over Hamming
-  *    radius 3·k/48) so only same-band pairs meet — never all-pairs.
+  *  - l02c SimHash: one path for the fixture and the corpus-scaled
+  *    width — fingerprints are one linear aggregation pass; the candidate
+  *    join is banded (l02c: 4×12-bit bands, pigeonhole over Hamming radius
+  *    6 of 48; the scaled path widens the bands as log2 n) so only
+  *    same-band pairs meet — never all-pairs.
   *  - l02d: rare-gram candidate generation is the classic set-similarity
   *    prefilter; common grams (df > cap) generate no candidates, which is
   *    what keeps the gram self-join from exploding on boilerplate.
@@ -26,8 +28,6 @@ import org.apache.spark.sql.functions._
   *    only the probe's nprobe=2 nearest lists (~2/K of the corpus).
   */
 object Dedup extends QueryModule {
-
-  private val SimBits = 48 // stay clear of bigint sign in BOTH engines
 
   /** l02c: SimHash near-dup pairs. 48-bit fingerprint over distinct
     * word-3-shingles: bit b is the sign of Σ_shingles ±1 (± = bit b of
@@ -40,14 +40,37 @@ object Dedup extends QueryModule {
   def l02c(spark: SparkSession, dir: String): DataFrame =
     simHashNearDupPairs(Tables.documents(spark, dir))
 
-  /** Library path for l02c over any (doc_id, text) frame. Band buckets
-    * above bucketCap are dropped before the candidate join (a fingerprint
-    * flood — mass-identical boilerplate — is exact dedup's job, and its
-    * bucket is quadratic pair work); the oracle applies the same cap. */
-  /** (doc_id, fp) 48-bit SimHash fingerprints — one aggregation pass. */
-  private def simHashFingerprints(docs: DataFrame): DataFrame = {
+  /** Corpus-scaled SimHash band width: random (non-dup) band collisions
+    * generate ≈ nBands·n²/2^bandBits candidate pairs, so a PINNED width
+    * is quadratic in the corpus — measured 82× band work for 10× docs at
+    * the fixture's 12 bits. Growing the width as log2 keeps expected
+    * random collisions ≈ target·n/2 (linear): bandBits =
+    * ceil(log2(nBands·n/target)), floored at the fixture's 12. The
+    * fingerprint needs nBands·bandBits bits; [[simHashBands]] draws 60
+    * bits per md5 word, so width is not capped by a single hash. Wider
+    * bands trade recall (a near-dup pair must agree on all bandBits bits
+    * of some band) — the same dial as [[scaledPlanes]], with
+    * OR-amplification (more bands) the recall-side counterweight. */
+  def scaledSimBandBits(n: Long, nBands: Int = 4, target: Long = 1L): Int =
+    math.max(12, math.ceil(math.log(nBands.toDouble * math.max(1L, n) / target)
+      / math.log(2.0)).toInt)
+
+  /** SimHash band rows, one aggregation pass: bit b of the fingerprint is
+    * the sign of Σ_shingles ±1 over bit (b % 60) of md5 word b/60 — word
+    * 0 is md5_hi60(t), word k ≥ 1 is md5_hi60(k || '|' || t). Each 60-bit
+    * word (clear of the bigint sign bit in both engines) is packed once
+    * (fp0, fp1, …) and band j, bits [j·bandBits, (j+1)·bandBits), is
+    * sliced from the one or two words it spans, so a row carries longs,
+    * never an array. Output: (doc_id, fp0…, j, band); the bands partition
+    * the bit space, so Hamming distance is Σ_k bit_count(fp_k XOR fp'_k). */
+  private def simHashBands(docs: DataFrame, nBands: Int,
+      bandBits: Int): DataFrame = {
+    // a band at most one word wide spans at most two words
+    require(bandBits <= 60, s"SimHash band width $bandBits > 60 bits")
+    val simBits = nBands * bandBits
+    val words = (simBits + 59) / 60
     graft.functions.Md5Hi60.register(docs.sparkSession)
-    Tables.spread(docs, "doc_id") // shingle+md5 must not run single-split
+    val withHv = Tables.spread(docs, "doc_id") // shingle+md5 must not run single-split
       .select(col("doc_id"), split(lower(col("text")), " ").as("w"))
       // <3-word docs yield no shingles; unguarded, sequence(1, size(w)-2)
       // is descending and element_at(w, 0) throws (oracle's range is empty)
@@ -55,62 +78,18 @@ object Dedup extends QueryModule {
       .select(col("doc_id"), explode(expr(
         "array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', element_at(w,i), element_at(w,i+1), element_at(w,i+2))))"))
         .as("t"))
-      .withColumn("hv", expr("md5_hi60(t)"))
-      // one aggregation pass, 48 conditional sums — NOT an explode(48)
-      // (which would 48× the shuffle and add a second aggregation)
-      .groupBy("doc_id")
-      .agg(
-        sum(when(expr("(shiftright(hv, 0) & 1) = 1"), 1).otherwise(-1)).as("s0"),
-        (1 until SimBits).map(b =>
-          sum(when(expr(s"(shiftright(hv, $b) & 1) = 1"), 1).otherwise(-1)).as(s"s$b")): _*)
-      .select(col("doc_id"),
-        (0 until SimBits).map(b =>
-          when(col(s"s$b") >= 0, lit(1L << b)).otherwise(0L))
-          .reduce(_ + _).as("fp"))
-  }
-
-  /** (doc_id, fp, j, band) SimHash band rows, uncapped. */
-  private def simHashBands(docs: DataFrame): DataFrame =
-    simHashFingerprints(docs)
-      .select(col("doc_id"), col("fp"),
-        explode(sequence(lit(0), lit(3))).as("j"))
-      .withColumn("band", expr("shiftright(fp, j * 12) & 4095"))
-
-  /** Corpus-scaled SimHash band width: random (non-dup) band collisions
-    * generate ≈ nBands·n²/2^bandBits candidate pairs, so a PINNED width
-    * is quadratic in the corpus — measured 82× band work for 10× docs at
-    * the fixture's 12 bits. Growing the width as log2 keeps expected
-    * random collisions ≈ target·n/2 (linear): bandBits =
-    * ceil(log2(nBands·n/target)), floored at the fixture's 12. The
-    * fingerprint needs nBands·bandBits bits; [[simHashNearDupPairsScaled]]
-    * draws 60 bits per seed-prefixed md5 word, so width is not capped by
-    * a single hash. Wider bands trade recall (a near-dup pair must agree
-    * on all bandBits bits of some band) — the same dial as
-    * [[scaledPlanes]], with OR-amplification (more bands) the recall-side
-    * counterweight. */
-  def scaledSimBandBits(n: Long, nBands: Int = 4, target: Long = 1L): Int =
-    math.max(12, math.ceil(math.log(nBands.toDouble * math.max(1L, n) / target)
-      / math.log(2.0)).toInt)
-
-  /** Generalized SimHash band rows over seed-prefixed md5 words: bit b of
-    * the fingerprint comes from bit (b % 60) of md5((b/60) || '|' || t).
-    * Output: (doc_id, bands) with bands(j) packing bits
-    * [j·bandBits, (j+1)·bandBits) — the bands partition the bit space, so
-    * Hamming distance is Σ_j bit_count(bands(j) XOR bands'(j)). */
-  private def simHashBandArrays(docs: DataFrame, nBands: Int,
-      bandBits: Int): DataFrame = {
-    val simBits = nBands * bandBits
-    val words = (simBits + 59) / 60
-    graft.functions.Md5Hi60.register(docs.sparkSession)
-    val withHv = docs
-      .select(col("doc_id"), split(lower(col("text")), " ").as("w"))
-      .filter(size(col("w")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', element_at(w,i), element_at(w,i+1), element_at(w,i+2))))"))
-        .as("t"))
       .select(col("doc_id") +: (0 until words).map(k =>
-        expr(s"md5_hi60(concat('$k|', t))")
+        expr(if (k == 0) "md5_hi60(t)" else s"md5_hi60(concat('$k|', t))")
           .as(s"hv$k")): _*)
+    def band(j: Int): Column = {
+      val (k, off) = (j * bandBits / 60, j * bandBits % 60)
+      val low = shiftright(col(s"fp$k"), off)
+      (if (off + bandBits <= 60) low
+       else low.bitwiseOR(shiftleft(col(s"fp${k + 1}"), 60 - off)))
+        .bitwiseAND(lit((1L << bandBits) - 1))
+    }
+    // simBits conditional sums in one aggregation — NOT an explode(simBits)
+    // (which would multiply the shuffle and add a second aggregation)
     withHv
       .groupBy("doc_id")
       .agg(
@@ -118,58 +97,54 @@ object Dedup extends QueryModule {
         (1 until simBits).map(b =>
           sum(when(expr(s"(shiftright(hv${b / 60}, ${b % 60}) & 1) = 1"), 1)
             .otherwise(-1)).as(s"s$b")): _*)
-      .select(col("doc_id"), array((0 until nBands).map(j =>
-        (0 until bandBits).map(i =>
-          when(col(s"s${j * bandBits + i}") >= 0, lit(1L << i)).otherwise(0L))
-          .reduce(_ + _)): _*).as("bands"))
+      .select(col("doc_id") +: (0 until words).map(k =>
+        (60 * k until math.min(simBits, 60 * k + 60)).map(b =>
+          when(col(s"s$b") >= 0, lit(1L << (b % 60))).otherwise(0L))
+          .reduce(_ + _).as(s"fp$k")): _*)
+      .select(col("*"), posexplode(array((0 until nBands).map(band): _*))
+        .as(Seq("j", "band")))
   }
 
-  /** The scale path for l02c: band width derived from the corpus so
-    * random band collisions stay linear in n (ScalePatternsSpec pins the
-    * law on the real corpus, where the fixture's pinned 12-bit bands
-    * measure quadratic). Hamming budget scales with the fingerprint:
-    * simBits/8, the fixture's 6-of-48 ratio. */
-  def simHashNearDupPairsScaled(docs: DataFrame, nBands: Int = 4,
-      target: Long = 1L, bucketCap: Int = Llm.BandBucketCap): DataFrame = {
-    val bandBits = scaledSimBandBits(CorpusStats.n(docs), nBands, target)
-    val maxHamming = nBands * bandBits / 8
-    val fp = simHashBandArrays(docs, nBands, bandBits)
-    val bands = Llm.capBuckets(
-      fp.select(col("doc_id"), col("bands"),
-        posexplode(col("bands")).as(Seq("j", "band"))),
+  /** SimHash near-dup pairs over any (doc_id, text) frame: candidates
+    * share one of nBands bandBits-wide bands, verification keeps Hamming
+    * distance ≤ nBands·bandBits/8 (l02c's 6-of-48 ratio). Band buckets
+    * above bucketCap are dropped before the candidate join (a fingerprint
+    * flood — mass-identical boilerplate — is exact dedup's job, and its
+    * bucket is quadratic pair work); the oracle applies the same cap.
+    * At (4, 12) this is l02c bit for bit. */
+  def simHashNearDupPairs(docs: DataFrame, nBands: Int = 4, bandBits: Int = 12,
+      bucketCap: Int = Llm.BandBucketCap): DataFrame = {
+    val words = (nBands * bandBits + 59) / 60
+    val bands = Llm.capBuckets(simHashBands(docs, nBands, bandBits),
       Seq("j", "band"), bucketCap)
     bands.as("x").join(bands.as("y"),
         col("x.j") === col("y.j") && col("x.band") === col("y.band")
           && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        expr("aggregate(zip_with(x.bands, y.bands, (p, q) -> bit_count(p ^ q)), 0, (acc, v) -> acc + v)")
+        (0 until words).map(k =>
+          bit_count(col(s"x.fp$k").bitwiseXOR(col(s"y.fp$k")))).reduce(_ + _)
           .cast("long").as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= nBands * bandBits / 8)
       .orderBy("a", "b")
   }
 
-  /** Band-bucket pair work of the scaled SimHash at a given width — the
+  /** The scale path for l02c: band width derived from the corpus so
+    * random band collisions stay linear in n (ScalePatternsSpec pins the
+    * law on the real corpus, where the fixture's pinned 12-bit bands
+    * measure quadratic). */
+  def simHashNearDupPairsScaled(docs: DataFrame, nBands: Int = 4,
+      target: Long = 1L, bucketCap: Int = Llm.BandBucketCap): DataFrame =
+    simHashNearDupPairs(docs, nBands,
+      scaledSimBandBits(docs.count(), nBands, target), bucketCap)
+
+  /** Band-bucket pair work of the SimHash at a given width — the
     * growth probe ScalePatternsSpec runs at two corpus sizes. */
   def simHashBandWorkScaled(docs: DataFrame, nBands: Int, bandBits: Int): Long =
-    simHashBandArrays(docs, nBands, bandBits)
-      .select(posexplode(col("bands")).as(Seq("j", "band")))
+    simHashBands(docs, nBands, bandBits)
       .groupBy("j", "band").agg(count(lit(1)).as("c"))
       .agg(coalesce(sum(expr("(c * (c - 1)) div 2")), lit(0L)).as("w"))
       .head().getLong(0)
-
-  def simHashNearDupPairs(docs: DataFrame, maxHamming: Int = 6,
-      bucketCap: Int = Llm.BandBucketCap): DataFrame = {
-    val bands = Llm.capBuckets(simHashBands(docs), Seq("j", "band"), bucketCap)
-    bands.as("x").join(bands.as("y"),
-        col("x.j") === col("y.j") && col("x.band") === col("y.band")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        expr("bit_count(x.fp ^ y.fp)").cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("a", "b")
-  }
 
   private val RareDf = 20 // grams in more docs than this generate no candidates
   private val JaccMin = 0.5
@@ -352,12 +327,10 @@ object Dedup extends QueryModule {
   /** The scale path: plane count derived from the corpus size so the
     * candidate-pair join stays linear in n (one count() job up front —
     * at 100 TB that's a metadata-cheap scan next to the pair join it
-    * right-sizes — memoized per input frame by CorpusStats, so a
-    * composed curation pass probes each corpus once, not once per
-    * stage). */
+    * right-sizes). */
   def embedNearDupPairsScaled(emb: DataFrame, cosMin: Double = CosMin,
       targetBucket: Long = 16L): DataFrame =
-    embedNearDupPairs(emb, scaledPlanes(CorpusStats.n(emb), targetBucket), cosMin)
+    embedNearDupPairs(emb, scaledPlanes(emb.count(), targetBucket), cosMin)
 
   /** Σ |bucket|·(|bucket|−1)/2 over the sig buckets — the exact number of
     * candidate pairs the same-sig join generates, computed from bucket
@@ -492,7 +465,7 @@ object Dedup extends QueryModule {
     val embC = emb.select("vec_id", "embedding").cache()
     // k ≤ 0 → corpus-scaled: clusters grow with the data so per-cluster
     // work (SemDeDup pairs, IVF list scans) stays bounded
-    val k0 = if (k > 0) k else scaledK(CorpusStats.n(embC))
+    val k0 = if (k > 0) k else scaledK(embC.count())
     val init = embC.filter(col("vec_id").between(1, k0))
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"),
         lit(Long.MaxValue).as("moved_micro"))
@@ -705,7 +678,7 @@ object Dedup extends QueryModule {
          |bits AS (
          |  SELECT doc_id, b.b,
          |         SUM(CASE WHEN (hv >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-         |  FROM h CROSS JOIN (SELECT unnest(range(0, $SimBits)) AS b) b
+         |  FROM h CROSS JOIN (SELECT unnest(range(0, 48)) AS b) b
          |  GROUP BY doc_id, b.b),
          |fp AS (
          |  SELECT doc_id,

@@ -334,9 +334,7 @@ object Llm extends QueryModule {
     * shown to MOVE). */
   private[graft] def dedupEval(docs: DataFrame): DataFrame = {
     // constant-size probe set: modulus from a FRESH corpus count (one
-    // count-star job — parquet metadata, not a scan). Deliberately NOT
-    // CorpusStats: that memo's documented staleness tolerance is written
-    // for whole-bit band-width derivation, but the modulus here must
+    // count-star job — parquet metadata, not a scan). The modulus must
     // match the oracle's fresh count(*) exactly — a stale n across a
     // modulus boundary would silently probe a different sample.
     val m = probeModulus(docs.count())

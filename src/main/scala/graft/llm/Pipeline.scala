@@ -1009,14 +1009,15 @@ object Pipeline extends QueryModule {
     * Superseded vocab iterates are unpersisted eagerly (the Fixpoint
     * hygiene). Rounds stop early when no adjacent pair remains. Returns
     * the merge table (round, s1, s2, n) — the trained tokenizer. */
-  /** Session-scoped memo for trained merge tables, keyed like
-    * CorpusStats: the normalized logical plan of (docs, rounds). A
+  /** Session-scoped memo for trained merge tables, keyed by the
+    * normalized logical plan of (docs, rounds) — sameResult, so two
+    * reads of the same corpus path hit the same entry. A
     * sweep or composed pipeline that trains (l43) and then encodes
     * (l45) over the SAME corpus pays the ~10 driver-coordinated
     * training rounds once — the "train once, encode many" contract at
     * the library level, without the caller having to thread the merge
-    * table through. Bounded like CorpusStats' memo; the values are
-    * driver-side Seqs, so overflow and eviction just drop them. */
+    * table through. Bounded at 16 entries; the values are driver-side
+    * Seqs, so overflow and eviction just drop them. */
   private val trainMemo = new graft.FrameMemo[
       (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
       Seq[(Int, String, String, Long)]](16,
@@ -1032,11 +1033,10 @@ object Pipeline extends QueryModule {
       .orderBy("round")
   }
 
-  /** Invalidation hook (CorpusStats.clear's sibling): drop memoized
-    * merge tables when a corpus is regenerated in place — the
-    * normalized plan still sameResult-matches a re-read of the same
-    * path, so without this a mutated corpus would keep serving its old
-    * tokenizer. */
+  /** Invalidation hook: drop memoized merge tables when a corpus is
+    * regenerated in place — the normalized plan still sameResult-matches
+    * a re-read of the same path, so without this a mutated corpus would
+    * keep serving its old tokenizer. */
   def clearTrainMemo(): Unit = trainMemo.clear()
 
   /** The trained merge list in application order — the ONE accessor

@@ -92,7 +92,7 @@ object Semantic extends QueryModule {
     * fitted centroids for quality at the same pair-work bound. */
   def semDedupScaled(emb: DataFrame, tau: Double = Tau,
       targetCluster: Long = 16L): DataFrame = {
-    val k = Dedup.scaledK(CorpusStats.n(emb), targetCluster)
+    val k = Dedup.scaledK(emb.count(), targetCluster)
     val cents = emb.filter(col("vec_id").between(1, k))
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     semDedup(emb, cents, tau)

@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructType}
 
 /** Table-format lifecycle operators (SURVEY.md §2.2 s22-s24): snapshot
   * retention/vacuum, compaction↔manifest consistency, and optimistic
@@ -54,30 +55,47 @@ object Lakehouse extends QueryModule {
         .repartition(2)
         .write.mode("overwrite").parquet(s"$root/commit=2")))
     val snap2Files = listDataFiles(s"$root/commit=1") ++ listDataFiles(s"$root/commit=2")
-    spark.read.parquet(snap2Files: _*)
+    spark.read.schema(li.schema).parquet(snap2Files: _*)
       .repartitionByRange(3, col("l_orderkey"))
       .write.mode("overwrite").parquet(s"$root/commit=3")
-    import spark.implicits._
     val rows =
       listDataFiles(s"$root/commit=1").flatMap(p => Seq((1, p), (2, p))) ++
         listDataFiles(s"$root/commit=2").map(p => (2, p)) ++
         listDataFiles(s"$root/commit=3").map(p => (3, p))
-    // planner metadata (≤ 9 rows here; KBs per thousand files in
-    // production), held by the driver as a local relation
-    rows.toDF("snapshot", "path")
+    manifest(spark, rows, "snapshot", li.schema)
   }
 
-  /** Snapshot read: plan exactly the files the manifest attributes to
-    * snapshot n — a VACUUMED (or never-committed) snapshot fails with the
-    * retention contract named, not a file-not-found at scan time. */
-  def s22AsOf(spark: SparkSession, manifest: DataFrame,
-      n: Int): DataFrame = {
-    val files = manifest.filter(col("snapshot") === n)
-      .select("path").collect().map(_.getString(0)).sorted
-    require(files.nonEmpty,
-      s"snapshot $n is expired or was never committed — not readable")
-    spark.read.parquet(files.toIndexedSeq: _*)
+  /** A commit's (key, path) file manifest — planner metadata (KBs per
+    * thousand files in production), held by the driver as a local
+    * relation. The path column's metadata records the schema the commit
+    * wrote, the way a table format's metadata file does, so
+    * [[readSnapshot]] plans without reading a footer. */
+  private[graft] def manifest(spark: SparkSession, rows: Seq[(Int, String)],
+      key: String, schema: StructType): DataFrame = {
+    import spark.implicits._
+    rows.toDF(key, "path").withColumn("path", col("path").as("path",
+      new MetadataBuilder().putString("schema", schema.json).build()))
   }
+
+  /** Snapshot read: plan exactly the manifest files `keep` selects, under
+    * the schema the commit recorded — no footer-inference job. The sorted
+    * driver-side file list is planning metadata (what a table format's
+    * scan planner produces from its manifest); an empty slice fails with
+    * `missing`, the snapshot contract named, not a file-not-found or
+    * schema error at scan time. */
+  private[graft] def readSnapshot(spark: SparkSession, manifest: DataFrame,
+      keep: Column, missing: => String): DataFrame = {
+    val files = manifest.filter(keep).select("path").collect().map(_.getString(0)).sorted
+    require(files.nonEmpty, missing)
+    val schema = DataType.fromJson(manifest.schema("path").metadata.getString("schema"))
+    spark.read.schema(schema.asInstanceOf[StructType]).parquet(files.toIndexedSeq: _*)
+  }
+
+  /** s22's snapshot read: a VACUUMED (or never-committed) snapshot fails
+    * with the retention contract named. */
+  def s22AsOf(spark: SparkSession, manifest: DataFrame, n: Int): DataFrame =
+    readSnapshot(spark, manifest, col("snapshot") === n,
+      s"snapshot $n is expired or was never committed — not readable")
 
   /** VACUUM: expire snapshots below `retainFrom`, physically delete every
     * file no RETAINED snapshot references, return (pruned manifest,

@@ -429,25 +429,17 @@ object Scans extends QueryModule {
     // metadata from the commit itself, not a post-hoc scan of the table
     // (the write-time-manifest move every table format makes; the old
     // form paid a full scan + distinct exchange just to list files)
-    import spark.implicits._
-    (1 to 2).flatMap(b =>
-        Lakehouse.listDataFiles(s"$root/batch=$b").map(p => (b, p)))
-      .toDF("batch", "path")
+    Lakehouse.manifest(spark, (1 to 2).flatMap(b =>
+      Lakehouse.listDataFiles(s"$root/batch=$b").map(p => (b, p))), "batch", li.schema)
   }
 
   /** Snapshot read: plan exactly the files the manifest attributes to
-    * batches ≤ n. The sorted driver-side file list is planning metadata
-    * (what a table format's scan planner produces from its manifest). */
+    * batches ≤ n; a snapshot id before every commit fails with that
+    * contract named. */
   private[graft] def s21AsOf(spark: SparkSession, manifest: DataFrame,
-      n: Int): DataFrame = {
-    val files = manifest.filter(col("batch") <= n)
-      .select("path").collect().map(_.getString(0)).sorted
-    // an empty slice means the snapshot id predates every commit — fail
-    // with the actual contract instead of parquet's schema-inference error
-    require(files.nonEmpty,
+      n: Int): DataFrame =
+    Lakehouse.readSnapshot(spark, manifest, col("batch") <= n,
       s"no manifest files at batch <= $n — snapshot predates the first commit")
-    spark.read.parquet(files.toIndexedSeq: _*)
-  }
 
   /** s13: JSON-lines sink/source round-trip — the lingua franca of
     * training-data interchange. Write documents as JSONL, read back under

@@ -7,11 +7,15 @@ import org.apache.spark.sql.functions._
 /** Structured-Streaming lift of the event-time operators (SURVEY.md §7 M4).
   *
   * Each function takes *any* events DataFrame — batch or streaming — with
-  * columns (event_id, user_id, event_type, value, event_ts:timestamp) and
-  * declares the same logical plan the batch EventTime module uses; on a
-  * readStream source Spark runs it incrementally with state in the
-  * configured state store. StreamingSpec drives them through MemoryStream
-  * and asserts streaming output == the batch run (exactly-once append).
+  * columns (event_id, user_id, event_type, value, event_ts:timestamp); on
+  * a readStream source Spark runs it incrementally with state in the
+  * configured state store. [[tumbling]], [[sliding]], [[session]],
+  * [[sessionDynamic]] and [[enrich]] ARE the registered batch plans of
+  * t01/t02/t03/t14/t13 (and t06): EventTime runs them on the batch events,
+  * where the optimizer's EliminateEventTimeWatermark drops the watermark,
+  * so one implementation serves both modes. StreamingSpec drives them
+  * through MemoryStream and asserts streaming output == the registered
+  * batch query (exactly-once append).
   *
   * Scale posture: watermarks bound state (old windows/sessions are
   * evicted); keys partition the state store, so a 1000-executor cluster

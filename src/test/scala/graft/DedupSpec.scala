@@ -72,17 +72,16 @@ class DedupSpec extends SparkSuite {
   }
 
   test("scaled SimHash agrees with the fixture on this corpus's near-dup pairs") {
-    // at 500 docs the scaled width floors to the fixture's 12 bits, so
-    // the two variants differ only in hash sourcing (seed-prefixed md5
-    // words) — they must surface substantially the same near-dup mass
-    val fixture = pairs(Dedup.l02c(spark, sf))
-    val scaled = pairs(Dedup.simHashNearDupPairsScaled(
-      Tables.documents(spark, sf)))
+    // at 500 docs the scaled width floors to the fixture's 12 bits, and
+    // the scaled path IS l02c's path at that width (word 0 is the
+    // unprefixed md5 word) — so the pairs and distances are identical
+    val docs = Tables.documents(spark, sf)
+    assert(Dedup.scaledSimBandBits(docs.count()) === 12)
+    val fixture = Dedup.l02c(spark, sf).collect().toSeq
+    val scaled = Dedup.simHashNearDupPairsScaled(docs).collect().toSeq
     assert(scaled.nonEmpty)
-    val overlap = fixture.intersect(scaled).size
-    info(s"fixture=${fixture.size} scaled=${scaled.size} overlap=$overlap")
-    assert(overlap * 2 >= fixture.size,
-      s"scaled SimHash lost the fixture's near-dups: $overlap/${fixture.size}")
+    info(s"fixture=${fixture.size} scaled=${scaled.size}")
+    assert(scaled === fixture)
   }
 
   test("l02d n-gram Jaccard is exact on candidates: spot-check one pair against direct computation") {

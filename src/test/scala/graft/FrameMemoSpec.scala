@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    while older entries keep serving;
   *  - the beginWindow/preHitCount accounting distinguishes hits on
   *    pre-window state from hits on entries built inside the window;
-  *  - a driver-side value memo (trainMemo, CorpusStats) overflows by
+  *  - a driver-side value memo (trainMemo) overflows by
   *    dropping its oldest entry and never throws;
   *  - a Lakehouse log memo rebuilds a hit whose version pointer is gone,
   *    and a frame memo one whose blocks a caller released;
@@ -153,7 +153,7 @@ class FrameMemoSpec extends SparkSuite {
   }
 
   test("a value memo that overflows drops its oldest entry and never throws") {
-    // CorpusStats' shape (plan -> count) at a small capacity, churned far
+    // a (plan -> count) value memo at a small capacity, churned far
     // past FrameMemo.MaxRetired: values hold no blocks, so nothing is
     // retired and the frame memo's hard cap never applies
     val memo = new FrameMemo[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long](

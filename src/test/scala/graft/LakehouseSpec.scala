@@ -146,11 +146,11 @@ class LakehouseSpec extends SparkSuite {
     assert(morRows.toSeq === cowRows.toSeq)
     assert(morRows.length === (perFile.map(_._2).sum - nDel).toInt)
     // the apply retires base + DV: vacuum them via s22's set algebra
-    import spark.implicits._
     val dvFiles = files(dv)
     assert(dvFiles.nonEmpty)
-    val manifest = ((baseFiles ++ dvFiles).toSeq.map(p => (1, p)) ++
-      files(applied).toSeq.map(p => (2, p))).toDF("snapshot", "path")
+    val manifest = operators.Lakehouse.manifest(spark,
+      (baseFiles ++ dvFiles).toSeq.map(p => (1, p)) ++
+        files(applied).toSeq.map(p => (2, p)), "snapshot", mor.schema)
     val (pruned, deleted) = operators.Lakehouse.s22Vacuum(spark, manifest, 2)
     assert(deleted === (baseFiles.size + dvFiles.size).toLong)
     assert(files(s"$root/base").isEmpty && files(dv).isEmpty)
@@ -778,11 +778,17 @@ class LakehouseSpec extends SparkSuite {
     val jobs = Harness.listen(spark)
     try {
       val files = manifest.collect()
-      // s22AsOf's planning read (its parquet read then infers the schema)
+      // s22AsOf's planning read
       manifest.filter(col("snapshot") === 3).select("path").collect()
+      // and the snapshot frame itself: read under the schema the commit
+      // recorded, so building it reads no parquet footer
+      val snap3 = operators.Lakehouse.s22AsOf(spark, manifest, 3)
       org.apache.spark.GraftSparkBridge.waitListenerBusEmpty(sc, 10000L)
       assert(files.nonEmpty)
-      assert(jobs.take().isEmpty, "collecting the manifest ran a Spark job")
+      assert(snap3.columns.toSeq ===
+        Seq("l_orderkey", "l_shipdate", "l_extendedprice", "ship_month"))
+      assert(jobs.take().isEmpty,
+        "collecting the manifest or building the snapshot ran a Spark job")
     } finally sc.removeSparkListener(jobs)
   }
 }

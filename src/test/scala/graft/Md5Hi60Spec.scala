@@ -122,7 +122,10 @@ class Md5Hi60Spec extends SparkSuite {
       chainRe.findFirstIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
         .map(m => s"$p: $m")
     }
-    assert(sources.size > 50)
+    // the walk reached the tree: the files that hash with md5 are in it
+    assert(sources.size > 40)
+    assert(Seq("Md5Hi60.scala", "Llm.scala", "Dedup.scala")
+      .forall(n => sources.exists(_.getFileName.toString == n)), sources.mkString("\n"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -424,32 +424,6 @@ class ScalePatternsSpec extends SparkSuite {
     assert(c10 <= c1 * 4, s"candidate pairs should not track row count: $c1 -> $c10")
   }
 
-  test("corpus-size probe memoizes per input frame: composed stages rescan once") {
-    val sc = spark.sparkContext
-    llm.CorpusStats.clear()
-    // a frame shape no other test derives, so the memo is provably cold;
-    // both frames built OUTSIDE the job groups (spark.read.parquet's own
-    // listing/schema job must not count against the probe)
-    val docs = Tables.documents(spark, sf).filter(col("doc_id") >= -987654L)
-    // a DIFFERENT DataFrame object over the same logical frame — the
-    // composed-pipeline shape (each stage re-derives its input)
-    val docs2 = Tables.documents(spark, sf).filter(col("doc_id") >= -987654L)
-    sc.setJobGroup("cs-first", "first corpus-size probe")
-    val n1 = llm.CorpusStats.n(docs)
-    sc.clearJobGroup()
-    sc.setJobGroup("cs-second", "second probe over an equal frame")
-    val n2 = llm.CorpusStats.n(docs2)
-    sc.clearJobGroup()
-    assert(n1 === n2)
-    assert(sc.statusTracker.getJobIdsForGroup("cs-first").nonEmpty,
-      "cold probe must run a count job")
-    assert(sc.statusTracker.getJobIdsForGroup("cs-second").isEmpty,
-      "second stage over the same frame must hit the memo, not rescan")
-    // distinct inputs still probe independently (no cross-frame hit)
-    val other = Tables.embeddings(spark, sf).filter(col("vec_id") >= -987654L)
-    assert(llm.CorpusStats.n(other) === other.count())
-  }
-
   // shared records-read instrument for the growth-law tests: total task
   // input records across every job the body runs (listener-bus flushed
   // on both sides so attribution never leaks across measurements)

@@ -77,6 +77,10 @@ class StreamingSpec extends SparkSuite {
       batchEvents.withColumn("event_ts", timestamp_millis(col("ts_ms"))))
     assert(sortedRows(streamed, "win_start_ms", "event_type", "n", "sum_value") ===
       sortedRows(batch, "win_start_ms", "event_type", "n", "sum_value"))
+    // and the stream agrees with the registered batch query
+    assert(sortedRows(streamed, "win_start_ms", "event_type", "n", "sum_value") ===
+      sortedRows(operators.EventTime.t01(spark, sf),
+        "win_start_ms", "event_type", "n", "sum_value"))
   }
 
   test("OHLC bars: streaming append == batch == t17") {
@@ -112,6 +116,10 @@ class StreamingSpec extends SparkSuite {
       batchEvents.withColumn("event_ts", timestamp_millis(col("ts_ms"))))
     assert(sortedRows(streamed, "user_id", "session_start_ms", "n_events", "sum_value") ===
       sortedRows(batch, "user_id", "session_start_ms", "n_events", "sum_value"))
+    // and the stream agrees with the registered batch query
+    assert(sortedRows(streamed, "user_id", "session_start_ms", "n_events", "sum_value") ===
+      sortedRows(operators.EventTime.t03(spark, sf),
+        "user_id", "session_start_ms", "n_events", "sum_value"))
   }
 
   test("dynamic-gap sessions: streaming append == batch == t14") {
@@ -125,6 +133,7 @@ class StreamingSpec extends SparkSuite {
     // and the lift agrees with the registered batch query
     val t14 = operators.EventTime.t14(spark, sf)
     assert(sortedRows(batch, cols: _*) === sortedRows(t14, cols: _*))
+    assert(sortedRows(streamed, cols: _*) === sortedRows(t14, cols: _*))
   }
 
   test("stateful dedup: duplicated input deduplicates to the original set") {
@@ -717,6 +726,9 @@ class StreamingSpec extends SparkSuite {
       batchEvents.withColumn("event_ts", timestamp_millis(col("ts_ms"))))
     assert(sortedRows(streamed, "win_start_ms", "n", "sum_value") ===
       sortedRows(batch, "win_start_ms", "n", "sum_value"))
+    // and the stream agrees with the registered batch query
+    assert(sortedRows(streamed, "win_start_ms", "n", "sum_value") ===
+      sortedRows(operators.EventTime.t02(spark, sf), "win_start_ms", "n", "sum_value"))
   }
 
   test("late data: an event behind the watermark is dropped, not recounted") {

@@ -8,9 +8,15 @@ as a DuckDB view, runs every oracle SQL, and compares against the Spark
 result parquet at <verifyOutDir>/<name>/ — columns sorted by name, values
 normalized (timestamps → ns ints, floats compared exactly after float64
 cast, Decimal → float64). Exit code 1 if any query mismatches.
+
+DuckDB spills to a fresh directory under the system temp dir, removed at
+exit, and may use at most TEMP_LIMIT there: an oracle that would spill
+past it prints DUCK-ERR and the run goes on with the next query.
 """
 import json
+import shutil
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
@@ -18,6 +24,7 @@ import pandas as pd
 import numpy as np
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TEMP_LIMIT = "8GB"
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -57,7 +64,20 @@ def main():
     oracle = json.loads(Path(out_dir, "oracle_sql.json").read_text())
     if only:
         oracle = {k: v for k, v in oracle.items() if k in only}
+    spill = tempfile.mkdtemp(prefix="check_oracle_duckdb_")
+    try:
+        failed = check(sf_dir, out_dir, oracle, spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+    print(f"\n{len(oracle) - len(failed)}/{len(oracle)} oracled queries OK")
+    sys.exit(1 if failed else 0)
+
+
+def check(sf_dir, out_dir, oracle, spill):
+    """Run every oracle against its Spark output; returns the failed names."""
     con = duckdb.connect()
+    con.execute(f"SET temp_directory = '{spill}'")
+    con.execute(f"SET max_temp_directory_size = '{TEMP_LIMIT}'")
     for t in TABLES:
         p = Path(sf_dir, f"{t}.parquet")
         if p.exists():
@@ -100,8 +120,8 @@ def main():
                     print(f"  col={c} row={i} spark={a[c].iloc[i]!r} duck={b[c].iloc[i]!r}")
                     break
             failed.append(name)
-    print(f"\n{len(oracle) - len(failed)}/{len(oracle)} oracled queries OK")
-    sys.exit(1 if failed else 0)
+    con.close()
+    return failed
 
 
 if __name__ == "__main__":
