@@ -40,54 +40,66 @@ object Fixpoint {
 
   private val obsId = new AtomicLong(0L)
 
-  /** Read an observation's metrics, with a belt-and-braces fallback: the
-    * listener delivery is asynchronous relative to the eager checkpoint's
-    * return (measured: milliseconds), so obs.get normally returns
-    * instantly; if delivery somehow never fires we fall back to an
-    * explicit job rather than deadlock the driver. */
-  private def observed[T](obs: Observation)(read: Map[String, Any] => T)
-      (fallback: => T): T =
-    try read(Await.result(Future(obs.get)(ExecutionContext.global), 120.seconds))
-    catch { case _: TimeoutException => fallback }
+  /** The probe row a materialization observed, read from its
+    * observation. Listener delivery is asynchronous relative to the eager
+    * checkpoint's return (measured: milliseconds), so obs.get normally
+    * returns instantly; if delivery somehow never fires we fall back to
+    * an explicit aggregation of the materialized frame rather than
+    * deadlock the driver. */
+  private def observed(obs: Observation, df: DataFrame, probe: Seq[Column])
+      : Map[String, Any] =
+    try Await.result(Future(obs.get)(ExecutionContext.global), 120.seconds)
+    catch { case _: TimeoutException =>
+      val r = df.agg(probe.head, probe.tail: _*).head()
+      r.schema.fieldNames.zip(r.toSeq).toMap
+    }
 
-  /** One observed Long metric; a null metric (sum over an empty iterate)
-    * reads as 0 = converged. */
-  private def observedLong(obs: Observation, fallback: => Long): Long =
-    observed(obs)(_.valuesIterator.toSeq.headOption.flatMap(Option(_)) match {
-      case Some(l: java.lang.Long) => l.longValue()
-      case Some(l: Long) => l
-      case _ => 0L
-    })(fallback)
+  /** The one fixpoint loop. Materializes `init`, then each `step` of the
+    * current iterate, with localCheckpoint; the `probe` aggregates are an
+    * observe() computed BY each checkpoint's job, init included, so the
+    * loop runs exactly one Spark job per iteration (FixpointSpec
+    * listener-counts this). It iterates at most `cap(init probe)` times
+    * and stops early once `done(previous probe, next probe)` holds.
+    * Returns the final iterate (still persisted), the iteration count and
+    * whether `done` fired. All superseded iterates, and on failure the
+    * current one, are released eagerly. Ownership: a caller returns its
+    * result as a plan over the final iterate, not a copy of it;
+    * Fixpoint.release(result) frees it. */
+  private def loop(init: DataFrame, probe: Seq[Column], cap: Map[String, Any] => Int)
+      (step: DataFrame => DataFrame)
+      (done: (Map[String, Any], Map[String, Any]) => Boolean)
+      : (DataFrame, Int, Boolean) = {
+    def materialize(df: DataFrame): (DataFrame, Map[String, Any]) = {
+      val obs = Observation(s"graft_fix_${obsId.incrementAndGet()}")
+      val m = df.observe(obs, probe.head, probe.tail: _*).localCheckpoint()
+      try (m, observed(obs, m, probe))
+      catch { case t: Throwable => release(m); throw t }
+    }
+    var (cur, curProbe) = materialize(init)
+    var iters = 0
+    var converged = false
+    try {
+      val max = cap(curProbe)
+      while (!converged && iters < max) {
+        val (next, nextProbe) = materialize(step(cur))
+        converged = done(curProbe, nextProbe)
+        release(cur) // superseded — next is materialized
+        cur = next
+        curProbe = nextProbe
+        iters += 1
+      }
+      (cur, iters, converged)
+    } catch { case t: Throwable => release(cur); throw t }
+  }
 
-  /** Iterate `step` from `init` until no output row satisfies
-    * `changedPred` or `maxIter`. The convergence probe is an observe()
-    * aggregate computed BY the job that materializes each iterate's
-    * localCheckpoint — exactly one Spark job per iteration
-    * (FixpointSpec listener-counts this). Returns the final iterate
-    * (still persisted) and the iteration count. All superseded
-    * iterates, and on failure the current one, are released eagerly.
-    * Ownership: a caller returns its result as a plan over the final
-    * iterate, not a copy of it; Fixpoint.release(result) frees it. */
+  /** [[loop]] until no output row satisfies `changedPred`, or `maxIter`
+    * iterations. Returns the final iterate and the iteration count. */
   def loopObserved(init: DataFrame, maxIter: Int)
                   (step: DataFrame => DataFrame)
                   (changedPred: Column): (DataFrame, Int) = {
-    var cur = init.localCheckpoint()
-    var iters = 0
-    var go = true
-    try {
-      while (go && iters < maxIter) {
-        val obs = Observation(s"graft_fix_${obsId.incrementAndGet()}")
-        val next = step(cur)
-          .observe(obs, sum(when(changedPred, 1L).otherwise(0L)).as("changed"))
-          .localCheckpoint()
-        try go = observedLong(obs, next.filter(changedPred).count()) > 0
-        catch { case t: Throwable => release(next); throw t }
-        release(cur) // superseded — next is materialized
-        cur = next
-        iters += 1
-      }
-      (cur, iters)
-    } catch { case t: Throwable => release(cur); throw t }
+    val (fin, iters, _) = loop(init, Seq(count(when(changedPred, true)).as("changed")),
+      _ => maxIter)(step)((_, next) => next("changed") == 0L)
+    (fin, iters)
   }
 
   /** Connected components by alternating large-star / small-star
@@ -178,56 +190,32 @@ object Fixpoint {
       coalesce(sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")),
         lit(java.math.BigDecimal.ZERO)).as("sig_h"))
 
-    def observedSig(obs: Observation, edges: DataFrame): (Long, java.math.BigDecimal) =
-      observed(obs)(m =>
-        (m.get("sig_n").flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L),
-          m.get("sig_h").flatMap(Option(_)).map(_.asInstanceOf[java.math.BigDecimal])
-            .getOrElse(java.math.BigDecimal.ZERO))) {
-        val r = edges.agg(sigCols.head, sigCols.tail: _*).head()
-        (r.getLong(0), r.getDecimal(1))
-      }
-
-    val initObs = Observation(s"graft_cc_${obsId.incrementAndGet()}")
-    var cur = init.observe(initObs, sigCols.head, sigCols.tail: _*).localCheckpoint()
-    var curSig = observedSig(initObs, cur)
-    val cap = if (maxIter > 0) maxIter else adaptiveCcCap(curSig._1)
-    var iters = 0
-    var go = curSig._1 > 0
-    try {
-      while (go && iters < cap) {
-        val obs = Observation(s"graft_cc_${obsId.incrementAndGet()}")
-        val next = star(star(cur, large = true), large = false)
-          .observe(obs, sigCols.head, sigCols.tail: _*)
-          .localCheckpoint()
-        val nextSig =
-          try observedSig(obs, next)
-          catch { case t: Throwable => release(next); throw t }
-        go = nextSig != curSig
-        release(cur)
-        cur = next
-        curSig = nextSig
-        iters += 1
-      }
-      // Cap-hit without convergence = the labeling would be WRONG
-      // (components split across labels), not slow. The adaptive cap is
-      // the published O(log² n) bound, but Kiveris et al.'s constant is
-      // not literally 1 — if an adversarial graph ever needs more
-      // rounds, fail loudly so the caller can raise maxIter, instead of
-      // silently emitting split components into a dedup pass.
-      if (go) {
-        // cleanup happens once, in the enclosing catch
-        throw new IllegalStateException(
-          s"star CC hit its round cap ($cap) before the edge-set " +
-            "signature stabilized — labels would be incorrect; rerun " +
-            "with a larger maxIter")
-      }
-    } catch { case t: Throwable => release(cur); throw t }
+    def edgeCount(sig: Map[String, Any]): Long = sig("sig_n").asInstanceOf[Long]
+    // an empty edge set is already the fixpoint: cap 0, no round runs
+    val (fin, iters, converged) = loop(init, sigCols, sig =>
+        if (edgeCount(sig) == 0L) 0
+        else if (maxIter > 0) maxIter
+        else adaptiveCcCap(edgeCount(sig)))(
+      cur => star(star(cur, large = true), large = false))(_ == _)
+    // Cap-hit without convergence = the labeling would be WRONG
+    // (components split across labels), not slow. The adaptive cap is
+    // the published O(log² n) bound, but Kiveris et al.'s constant is
+    // not literally 1 — if an adversarial graph ever needs more
+    // rounds, fail loudly so the caller can raise maxIter, instead of
+    // silently emitting split components into a dedup pass.
+    if (!converged && iters > 0) {
+      release(fin)
+      throw new IllegalStateException(
+        s"star CC hit its round cap ($iters) before the edge-set " +
+          "signature stabilized — labels would be incorrect; rerun " +
+          "with a larger maxIter")
+    }
     // converged stars: every edge is (member, center); centers label themselves
-    val labels = cur.select(col("a").as("id"), col("b").as("label"))
-      .union(cur.select(col("b").as("id"), col("b").as("label")))
+    val labels = fin.select(col("a").as("id"), col("b").as("label"))
+      .union(fin.select(col("b").as("id"), col("b").as("label")))
       .distinct()
       .localCheckpoint()
-    release(cur)
+    release(fin)
     (labels, iters)
   }
 }

@@ -30,7 +30,11 @@ object Features extends QueryModule {
   /** h08's point-in-time join shape: dimension events become an SCD2
     * interval chain per user; each fact binds the state valid AT ITS OWN
     * time (equi user_id join, residual interval filter — a user's
-    * intervals partition time, so no fan-out). */
+    * intervals partition time, so no fan-out). Kept as h08's plan, not
+    * bound to [[graft.operators.Joins.asOf]], for h08's measured reason:
+    * with asOf, l66 read 2.559 s of task time against 1.934 s and l67
+    * 3.044 s against 2.603 s (graft.tools.ProfileQuery, sf0.1,
+    * `local[4]`, 3 alternating pairs, medians). */
   private[graft] def pit(facts: DataFrame, dim: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))
     val scd = dim.withColumn("valid_to_ms", lead(col("ts_ms"), 1).over(w))

@@ -492,7 +492,15 @@ object Pipeline extends QueryModule {
     * sharing itself (the fused run costs fewer jobs than the three legs
     * run separately) and per-leg agreement with l25/l21. Scale posture
     * is the legs' own: nothing here is corpus²; the fusion only REMOVES
-    * two shingle scans and a duplicate band exchange. */
+    * two shingle scans and a duplicate band exchange.
+    *
+    * Job count: a memo-cold run runs 81 or 82 jobs at sf0.1 on
+    * `local[4]`. The varying job belongs to the pair spine's one
+    * materialization (Llm.minHashNearDupPairsWith), a single query on
+    * the calling thread, not to the concurrent legs: AQE re-plans that
+    * query as its stages finish, and depending on which finished first
+    * one join input goes either to a broadcast built from its finished
+    * shuffle stage (an extra job) or to a second shuffle. */
   def l64(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val isNew = (c: Column) => pmod(c, lit(10)) === 0

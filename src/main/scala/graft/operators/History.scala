@@ -246,7 +246,17 @@ object History extends QueryModule {
     * one state row (no fan-out); facts before any state survive as
     * NULL-state rows via the left join. At 100 TB this is one key
     * shuffle of each side, the same plan a feature store's
-    * point-in-time query engine runs. */
+    * point-in-time query engine runs; at sf0.1 AQE turns the join into a
+    * broadcast of the state side at run time, so the facts never
+    * shuffle.
+    *
+    * Not a binding of [[Joins.asOf]]: its `back` over the states gives
+    * the same rows (the max (ts_ms, event_id) state at or before the
+    * fact; equal-ms states get zero-width intervals here), but it
+    * shuffles every fact. Measured with graft.tools.ProfileQuery at
+    * sf0.1, `local[4]`, 3 alternating pairs, task-seconds median:
+    * parent 0.598 s, asOf 1.263 s (8 tasks instead of 6); the
+    * struct-window form of asOf read 0.852 s against 0.600 s. */
   def h08(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
     val w = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))
@@ -282,7 +292,14 @@ object History extends QueryModule {
     * with a residual time filter (a user's intervals partition time — no
     * fan-out); the earliest-version frame is USER-sized and joins on the
     * same key, so the fix rides the existing exchange, adding no
-    * data-sized work. */
+    * data-sized work.
+    *
+    * Not a binding of [[Joins.asOf]]: coalesce(back, fwd) gives the same
+    * rows (a fact with no earlier state has all of its user's states
+    * strictly later, so `fwd` is the first version), but measured slower
+    * at sf0.1 (graft.tools.ProfileQuery, `local[4]`, 3 alternating pairs,
+    * task-seconds median): parent 1.034 s, asOf 1.312 s; the
+    * struct-window form of asOf read 1.059 s against 0.698 s. */
   def h12(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
     val w = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))

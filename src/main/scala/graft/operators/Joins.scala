@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryModule, Tables}
 import graft.Tables.{dec, epochMs}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,9 +14,12 @@ import org.apache.spark.sql.functions._
   *    known-small; never let a 100 TB fact shuffle for a 5-row dim).
   *  - j02/j03 are shuffle joins on the fact keys — the one unavoidable
   *    exchange; AQE handles skew/coalesce at runtime.
-  *  - j10 (as-of) is union+window: ONE shuffle by key, no row explosion —
-  *    the theta-join+row_number alternative is quadratic per key group and
-  *    would not survive 100×.
+  *  - the as-of joins j10/j18/j22 are bindings of [[Joins.asOf]]:
+  *    union+window, ONE shuffle by key, no row explosion — the
+  *    theta-join+row_number alternative is quadratic per key group and
+  *    would not survive 100×. (j19 keeps its own one-sort form of the
+  *    same shape, and History's h08/h12 and Features.pit their interval
+  *    joins; the measured reasons are in their scaladocs.)
   *  - j07/j08 use left_semi/left_anti (no payload materialization, no
   *    distinct-after-join).
   */
@@ -113,55 +116,78 @@ object Joins extends QueryModule {
       .orderBy("r1", "k1", "k2")
   }
 
-  /** As-of join: latest order at-or-before each event's timestamp, per
-    * customer. Union + ordered window with last(ignoreNulls) — one shuffle,
-    * linear. Orders are pre-deduped per (custkey, orderdate) so ties are
-    * deterministic (mirrors DuckDB ASOF's greatest-ts-wins, made total).
-    */
+  /** The one as-of join: each probe row gets, per `key`, the reference
+    * row nearest in `t` in each direction, from ONE union of the two
+    * frames and running windows over its ONE key shuffle — linear, never
+    * a theta-join. Over the candidates ordered by (t, tiebreak):
+    *  - `back` = the max at or before the probe: the running frame of the
+    *    order (t, side, tiebreak), reference rows before probe rows at
+    *    equal `t`; equal-t references resolve to the largest tiebreak;
+    *  - `fwd` = the min strictly after the probe: the running frame of
+    *    the reverse order, probe rows first at equal `t`; equal-t
+    *    references resolve to the smallest tiebreak. (A following frame
+    *    in the forward order gives the same rows, but Spark re-aggregates
+    *    an unbounded-following frame at every row — quadratic per key.)
+    * Each direction counts the references its frame has passed, and
+    * max_by over that count reads the last one's columns; the reference
+    * columns cross the shuffle flat. (max(struct(t, tiebreak, payload…))
+    * gives the same rows, but the optimizer builds the struct below the
+    * union, and the wider shuffle rows cost j10 and h08 more tasks at
+    * sf0.1.) A binding that reads one direction lets column pruning drop
+    * the other's windows. `key` and `t` name columns of both frames;
+    * `tiebreak` and `payload` name columns of `refs`. Returns every probe
+    * row with its own columns plus `back` and `fwd`: struct(t, tiebreak,
+    * payload…) with the reference column names, null when no reference
+    * lies in that direction. */
+  private[graft] def asOf(refs: DataFrame, probes: DataFrame, key: String,
+      t: String, tiebreak: String, payload: String*): DataFrame = {
+    val side = "_asof_side"
+    val ref = (tiebreak +: payload).map(c => c -> s"_asof_$c")
+    val isRef = col(side) === 0
+    def nearest(dir: String, order: Seq[Column])(df: DataFrame): DataFrame = {
+      val (w, n) = (Window.partitionBy(key).orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow), s"_asof_n_$dir")
+      val last = (c: Column) => max_by(c, when(isRef, col(n))).over(w)
+      df.withColumn(n, count(when(isRef, 1)).over(w))
+        .withColumn(dir, when(col(n) > 0, struct(last(col(t)).as(t) +:
+          ref.map { case (c, r) => last(col(r)).as(c) }: _*)))
+        .drop(n)
+    }
+    val tie = col(ref.head._2)
+    probes.withColumn(side, lit(1))
+      .unionByName(refs.select(col(key) +: col(t) +: lit(0).as(side) +:
+        ref.map { case (c, r) => col(c).as(r) }: _*), allowMissingColumns = true)
+      .transform(nearest("back", Seq(col(t), col(side), tie)))
+      .transform(nearest("fwd", Seq(col(t).desc, col(side).desc, tie.desc)))
+      .filter(col(side) === 1)
+      .drop(side +: ref.map(_._2): _*)
+  }
+
+  /** j10: latest order at or before each event's timestamp, per
+    * customer — [[asOf]]'s `back` over orders; equal-date orders resolve
+    * to the max o_orderkey (DuckDB ASOF's greatest-ts-wins, made total). */
   def j10(spark: SparkSession, dir: String): DataFrame = {
-    val ord = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey").as("uid"), col("o_orderdate"))
-      .agg(max("o_orderkey").as("ok"))
-      .select(col("uid"), epochMs(col("o_orderdate")).as("t"),
-        lit(0).as("src"), col("ok"), lit(null).cast("long").as("event_id"))
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id").as("uid"), col("ts_ms").as("t"),
-        lit(1).as("src"), lit(null).cast("long").as("ok"), col("event_id"))
-    val w = Window.partitionBy("uid").orderBy(col("t"), col("src"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ord.unionByName(ev)
-      .withColumn("o_orderkey", last(col("ok"), ignoreNulls = true).over(w))
-      .filter(col("src") === 1)
-      .select(col("event_id"), col("uid").as("user_id"), col("t").as("ts_ms"), col("o_orderkey"))
+    val ord = Tables.orders(spark, dir).select(col("o_custkey").as("user_id"),
+      epochMs(col("o_orderdate")).as("ts_ms"), col("o_orderkey"))
+    val ev = Tables.events(spark, dir).select("event_id", "user_id", "ts_ms")
+    asOf(ord, ev, "user_id", "ts_ms", "o_orderkey")
+      .select(col("event_id"), col("user_id"), col("ts_ms"),
+        col("back.o_orderkey").as("o_orderkey"))
       .orderBy("event_id")
   }
 
   /** j18: FORWARD as-of join (j10's mirror): for each event, the next
     * strictly-later high-value event (value > 90) of the same user —
-    * "time to next conversion". Same union + ordered-window shape, with
-    * first(ignoreNulls) over the FOLLOWING frame; the probe stream sorts
-    * BEFORE base events at equal timestamps (src 0 < 1) so an equal-ts
-    * high-value row falls outside the following frame — strict `>`
-    * semantics, matching the oracle's `e.ts_ms < h.ts_ms` ASOF. Probes
-    * are pre-deduped per (uid, ts) to min event_id for deterministic
-    * ties. One shuffle on uid, linear — never a per-row subquery. */
+    * "time to next conversion". [[asOf]]'s `fwd` over the high-value
+    * events: an equal-ms high-value row is not strictly later (the
+    * oracle's `e.ts_ms < h.ts_ms`), and equal-ms candidates resolve to
+    * the min event_id. */
   def j18(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-      .select(col("user_id").as("uid"), col("ts_ms").as("t"),
-        col("event_id"), col("value"))
-    val hv = ev.filter(col("value") > 90.0)
-      .groupBy("uid", "t").agg(min("event_id").as("hv_id"))
-      .select(col("uid"), col("t"), lit(0).as("src"), col("hv_id"),
-        lit(null).cast("long").as("event_id"))
-    val base = ev.select(col("uid"), col("t"), lit(1).as("src"),
-      lit(null).cast("long").as("hv_id"), col("event_id"))
-    val w = Window.partitionBy("uid").orderBy(col("t"), col("src"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    hv.unionByName(base)
-      .withColumn("next_hv_id", first(col("hv_id"), ignoreNulls = true).over(w))
-      .filter(col("src") === 1)
-      .select(col("event_id"), col("uid").as("user_id"),
-        col("t").as("ts_ms"), col("next_hv_id"))
+      .select("event_id", "user_id", "ts_ms", "value")
+    asOf(ev.filter(col("value") > 90.0), ev, "user_id", "ts_ms", "event_id")
+      .select(col("event_id"), col("user_id"), col("ts_ms"),
+        col("fwd.event_id").as("next_hv_id"))
       .orderBy("event_id")
   }
 
@@ -178,7 +204,15 @@ object Joins extends QueryModule {
     * → strictly-after); both windows share partitioning and ordering so
     * Spark evaluates them on a single sort. Candidate structs are null
     * on probe rows (when(src=0)) so the extremes skip them. Linear at
-    * any scale — never a per-row subquery. */
+    * any scale — never a per-row subquery.
+    *
+    * Not a binding of [[asOf]]: bound to it, j19 read 0.602 s
+    * [0.599, 0.686] of task time against this plan's 0.580 s
+    * [0.567, 0.593] (graft.tools.ProfileQuery, sf0.1, `local[4]`, 5
+    * alternating pairs, median [q1, q3]; lower in 1 of 5), since asOf
+    * sorts the key partitions once per direction. The struct-window
+    * form of asOf read 0.605 s against 0.691 s here but cost j10 more
+    * tasks. */
   def j19(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
       .select(col("user_id").as("uid"), col("ts_ms").as("t"),
@@ -217,33 +251,17 @@ object Joins extends QueryModule {
     * (state_id NULL, fresh 0) while staleness_ms still surfaces for
     * audit. Probes with no prior state at all: staleness NULL, fresh 0.
     *
-    * Scale shape: j19's one-union/one-uid-shuffle window form — the
-    * backward candidate is max(struct(t, id)) over the preceding frame
-    * (equal-ts states sort before probes → at-or-before; struct max
-    * makes equal-ts ties deterministic); the tolerance is a map-side
-    * post-filter on the window result, costing nothing. Never a per-row
-    * subquery or an events×states theta join. */
+    * Scale shape: [[asOf]]'s `back`; the tolerance is a map-side
+    * post-filter on the window result, costing nothing. */
   def j22(spark: SparkSession, dir: String): DataFrame = {
     val tolMs = 2L * 86400000L
     val e = Tables.events(spark, dir)
-      .select(col("user_id").as("uid"), col("ts_ms").as("t"),
-        col("event_id"), col("event_type"))
-    val states = e.filter(col("event_type") === "purchase")
-      .groupBy("uid", "t").agg(max("event_id").as("sid"))
-      .select(col("uid"), col("t"), lit(0).as("src"), col("sid"),
-        lit(null).cast("long").as("event_id"))
-    val probes = e.filter(col("event_type") === "click")
-      .select(col("uid"), col("t"), lit(1).as("src"),
-        lit(null).cast("long").as("sid"), col("event_id"))
-    val w = Window.partitionBy("uid").orderBy(col("t"), col("src"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cand = when(col("src") === 0, struct(col("t").as("st_t"), col("sid").as("st_id")))
-    states.unionByName(probes)
-      .withColumn("back", max(cand).over(w))
-      .filter(col("src") === 1)
-      .withColumn("staleness_ms", col("t") - col("back.st_t"))
-      .select(col("event_id"), col("uid").as("user_id"), col("t").as("ts_ms"),
-        when(col("staleness_ms") <= tolMs, col("back.st_id")).as("state_id"),
+      .select("event_id", "user_id", "ts_ms", "event_type")
+    asOf(e.filter(col("event_type") === "purchase"),
+        e.filter(col("event_type") === "click"), "user_id", "ts_ms", "event_id")
+      .withColumn("staleness_ms", col("ts_ms") - col("back.ts_ms"))
+      .select(col("event_id"), col("user_id"), col("ts_ms"),
+        when(col("staleness_ms") <= tolMs, col("back.event_id")).as("state_id"),
         col("staleness_ms"),
         (col("back").isNotNull && col("staleness_ms") <= tolMs)
           .cast("int").as("fresh"))

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -36,9 +35,8 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
   * order over rows, so column values are never spliced across tied rows
   * (strictly more deterministic than row_number's arbitrary tie pick).
   *
-  * Registered per-session via `spark.experimental.extraOptimizations`
-  * (GraftExtensions does the same through SparkSessionExtensions for
-  * spark.sql.extensions deployment).
+  * A session opts in by appending it to
+  * `spark.experimental.extraOptimizations` (LatestWinsRewriteSpec does).
   */
 object LatestWinsRewrite extends Rule[LogicalPlan] {
 
@@ -70,29 +68,5 @@ object LatestWinsRewrite extends Rule[LogicalPlan] {
         else Alias(MaxBy(a, key).toAggregateExpression(), a.name)(exprId = a.exprId)
       } :+ Alias(Literal(1), alias.name)(exprId = alias.exprId)
       Aggregate(part, aggExprs, child)
-  }
-}
-
-/** spark.sql.extensions entry point: injects the latest-wins rewrite and
-  * the native uuid5 expression into every session built with
-  * `.withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => LatestWinsRewrite)
-    e.injectOptimizerRule(_ => TopKRewrite)
-    e.injectPlannerStrategy(_ => TopKStrategy)
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("uuid5_native"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.Uuid5Expression].getName, "uuid5_native"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.Uuid5Expression(exprs.head, exprs(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.FloatVecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.FloatVecDot(exprs.head, exprs(1))))
   }
 }

@@ -35,7 +35,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *                          needed exchange
   *  - [[TopK.topKPerGroup]] public API (injects the strategy, builds the
   *                          plan via the private[sql] bridge)
-  * Registered session-wide by GraftExtensions (spark.sql.extensions).
+  * TopK.topKPerGroup injects TopKStrategy into its session itself;
+  * TopKRewrite is opt-in through `spark.experimental.extraOptimizations`.
   *
   * Ties: callers must pass a total order (include a unique tiebreak
   * column, as the window idiom also requires for determinism); the heap

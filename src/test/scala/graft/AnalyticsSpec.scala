@@ -102,6 +102,43 @@ class AnalyticsSpec extends SparkSuite {
       .foreach(v => assert(v._1.isEmpty && v._2.get > TolMs))
   }
 
+  test("j10: backward as-of matches a per-event driver replay (equal dates → max orderkey)") {
+    val orders = Tables.orders(spark, sf)
+      .select(col("o_custkey").cast("long"), Tables.epochMs(col("o_orderdate")),
+        col("o_orderkey").cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).groupBy(_._1)
+    val expect = Tables.events(spark, sf).select("event_id", "user_id", "ts_ms")
+      .collect().map { r =>
+        val (eid, uid, ts) = (r.getLong(0), r.getLong(1), r.getLong(2))
+        eid -> orders.getOrElse(uid, Array.empty[(Long, Long, Long)])
+          .filter(_._2 <= ts).map(o => (o._2, o._3)).sorted.lastOption.map(_._2)
+      }.toMap
+    val got = operators.Joins.j10(spark, sf).collect().map { r =>
+      r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3)))
+    }.toMap
+    assert(got === expect)
+    // every test-SF event postdates every order, so each binds its
+    // customer's latest order; AsOfSpec covers probes before any reference
+    assert(got.values.forall(_.isDefined), "an event lost its customer's order")
+  }
+
+  test("j18: forward as-of matches a per-event driver replay (strictly later; equal ms → min id)") {
+    val events = Tables.events(spark, sf)
+      .select("event_id", "user_id", "ts_ms", "value").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    val hv = events.filter(_._4 > 90.0).groupBy(_._2)
+    val expect = events.map { case (eid, uid, ts, _) =>
+      eid -> hv.getOrElse(uid, Array.empty[(Long, Long, Long, Double)])
+        .filter(_._3 > ts).map(h => (h._3, h._1)).sorted.headOption.map(_._2)
+    }.toMap
+    val got = operators.Joins.j18(spark, sf).collect().map { r =>
+      r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3)))
+    }.toMap
+    assert(got === expect)
+    assert(got.values.exists(_.isDefined), "no event has a later high-value event")
+    assert(got.values.exists(_.isEmpty), "every event has a later high-value event")
+  }
+
   test("j19: nearest as-of matches a per-event driver replay (ties go backward)") {
     val events = Tables.events(spark, sf)
       .select("event_id", "user_id", "ts_ms", "event_type").collect()

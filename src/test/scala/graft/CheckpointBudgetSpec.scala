@@ -12,7 +12,7 @@ class CheckpointBudgetSpec extends AnyFunSuite {
   private val callRe = """\.\s*localCheckpoint\s*\(""".r
 
   private val budget = Map(
-    "graft/Fixpoint.scala" -> 5,
+    "graft/Fixpoint.scala" -> 2,
     "graft/llm/Dedup.scala" -> 1,
     "graft/llm/Llm.scala" -> 7,
     "graft/llm/MinHashLshMl.scala" -> 1,

@@ -12,9 +12,17 @@ class PlanSpec extends SparkSuite {
     df.queryExecution.executedPlan.toString
 
   test("j22: tolerance as-of is one union+window — no join operator at all") {
-    val plan = planString(operators.Joins.j22(spark, sf))
-    assert(!plan.contains("Join"), s"as-of must stay window-shaped:\n$plan")
-    assert(plan.contains("Window"), s"expected the uid window:\n$plan")
+    // j10, the other backward as-of binding, is held to the same shape
+    for ((name, df) <- Seq(
+        "j22" -> operators.Joins.j22(spark, sf),
+        "j10" -> operators.Joins.j10(spark, sf))) {
+      val opt = df.queryExecution.optimizedPlan.toString
+      assert(!opt.contains("Join"), s"$name: as-of must stay window-shaped:\n$opt")
+      val plan = planString(df)
+      assert(plan.contains("Window"), s"$name: expected the key window:\n$plan")
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
+      assert(exchanges === 1, s"$name: expected one key exchange, found $exchanges:\n$plan")
+    }
   }
 
   test("l59/l62: source matrices never self-join a corpus-sized frame") {
