@@ -53,8 +53,10 @@ object Md5Hi60Gen {
   private val md = ThreadLocal.withInitial[MessageDigest](
     () => MessageDigest.getInstance("MD5"))
 
-  def eval(bytes: Array[Byte]): Long = {
-    val d = md.get().digest(bytes)
+  def eval(bytes: Array[Byte]): Long = hi60(md.get().digest(bytes))
+
+  /** The top 60 bits of a 16-byte MD5 digest as a non-negative long. */
+  def hi60(d: Array[Byte]): Long = {
     var h = 0L
     var i = 0
     while (i < 7) { h = (h << 8) | (d(i) & 0xffL); i += 1 }

@@ -15,8 +15,12 @@ import org.apache.spark.sql.functions._
   * CAST('0x'||substr(md5(..),1,15) AS BIGINT)), folds via higher-order
   * array functions (left-to-right in both engines).
   *
-  * Scale posture: l02's MinHash-LSH is the standard shingle → K minhashes →
-  * banded buckets → candidate-pair join → exact-Jaccard verify pipeline.
+  * Scale posture: l02's MinHash-LSH runs on ONE ROW PER DOCUMENT:
+  * shingle sets (doc_id, shs) → K minhashes per row by the native
+  * [[graft.functions.MinHashSig]] kernel → a map-side explode into
+  * banded buckets → capped candidate-pair join → exact Jaccard by
+  * array_intersect of the pair's two sets. No stage shuffles or
+  * aggregates shingle rows.
   * Work is linear in corpus size until the bucket join, which only pairs
   * documents sharing a band signature — the 100 TB-safe alternative to the
   * quadratic all-pairs similarity join. Skewed buckets are handled two
@@ -46,76 +50,78 @@ object Llm extends QueryModule {
       .select("keep_id", "n_dups")
       .orderBy("keep_id")
 
-  /** Word-3-shingles of lowered text, distinct per doc, over any
-    * (doc_id, text) frame.
-    *
-    * Dedup is per-doc ((doc_id, sh) rows are what downstream consumes),
-    * so it runs MAP-SIDE as array_distinct over the in-row shingle list
-    * before the explode — a set-identical result with ZERO exchange.
-    * The old global `.distinct()` was semantically the same dedup but
-    * paid a full shuffle of every (doc_id, shingle) row: the largest
-    * exchange in the dedup spine, carried by every consumer (l02 pair
-    * graph, l25/l54 band indexes, l56's truth join, l63-l65 via the
-    * shared spine). At 100 TB that exchange is corpus-shingle-sized;
-    * the map-side form ships nothing. */
   /** Spread a small-scan input across the session's cores before the
-    * shingle/minhash compute. The map-side distinct below removed the
-    * spine's shuffle, but with it went the RE-PARTITIONING that shuffle
-    * provided: a corpus that planner-packs into fewer splits than the
+    * shingle/minhash compute. The sets below carry no shuffle of their
+    * own, so a corpus that planner-packs into fewer splits than the
     * session has cores (the sf0.1 bench: one parquet file = one split)
     * would run the whole extraction+minhash serially. The decision is
     * planner METADATA (no job): when the scan already yields at least
     * half the default parallelism — any at-scale corpus — this is a
-    * no-op and the spine stays exchange-free up to the doc_id partial
-    * agg; when it does not, ONE hash exchange of (doc_id, text) rows
-    * (fewer bytes than the old shingle-row shuffle, ~1/3) restores
-    * parallelism AND pre-partitions by doc_id, so bandSignatures'
-    * groupBy(doc_id) reuses it instead of adding its own. */
+    * no-op; when it does not, ONE hash exchange of (doc_id, text) rows
+    * restores parallelism. */
   private def spreadDocs(docs: DataFrame): DataFrame =
     Tables.spread(docs, "doc_id") // generalized there in r15; one impl
 
-  private[llm] def shinglesOf(docs: DataFrame): DataFrame =
-    spreadDocs(docs)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("w"))
-      // docs under 3 words have no 3-shingles; without the guard
-      // sequence(1, size(w)-2) turns DESCENDING ([1,0]) and element_at(w,0)
-      // is a runtime error (DuckDB's range is empty for the same input)
-      .filter(size(col("w")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', element_at(w,i), element_at(w,i+1), element_at(w,i+2))))"))
-        .as("sh"))
+  /** The one shingling expression: adds `shs`, the distinct word-3-shingle
+    * array of lowered `text`, to every row of `docs` (all other columns
+    * pass through). Dedup is per document, so it runs in-row as
+    * array_distinct — set-identical to a global distinct of
+    * (doc_id, shingle) rows, with no exchange. Docs under 3 words have no
+    * 3-shingles and are dropped: without the guard sequence(1, size(w)-2)
+    * turns DESCENDING ([1,0]) and element_at(w,0) is a runtime error
+    * (DuckDB's range is empty for the same input). */
+  private def withShingleSet(docs: DataFrame): DataFrame =
+    docs.withColumn("_w", split(lower(col("text")), " "))
+      .filter(size(col("_w")) >= 3)
+      .withColumn("shs", expr("array_distinct(transform(sequence(1, size(_w)-2), " +
+        "i -> concat_ws(' ', element_at(_w,i), element_at(_w,i+1), element_at(_w,i+2))))"))
+      .drop("_w")
 
-  private def shingles(spark: SparkSession, dir: String): DataFrame =
-    shinglesOf(Tables.documents(spark, dir))
+  /** Shingle SETS, one (doc_id, shs) row per document of any
+    * (doc_id, text) frame — what the near-dup family reads. One row per
+    * document is the point: the MinHash bands are a per-row kernel over
+    * it and the exact Jaccard is an array intersection of two of its
+    * rows, so no consumer shuffles or aggregates shingle rows. */
+  private[llm] def shingleSetsOf(docs: DataFrame): DataFrame =
+    withShingleSet(spreadDocs(docs)).select("doc_id", "shs")
+
+  private def shingleSets(spark: SparkSession, dir: String): DataFrame =
+    shingleSetsOf(Tables.documents(spark, dir))
+
+  /** (doc_id, sh) shingle rows: the explode of [[shingleSetsOf]]'s sets,
+    * for the consumers that need a shingle-keyed join (l56's exact
+    * truth). */
+  private[llm] def shinglesOf(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), explode(col("shs")).as("sh"))
 
   private[llm] val NumHashes = 8
   private[llm] val RowsPerBand = 2 // 4 bands
 
-  /** MinHash band signatures (doc_id, band, m0, m1) of a distinct-shingle
-    * table. K independent hash functions: seed-prefixed md5, low 60 bits
-    * as long. All K minhashes aggregate in ONE groupBy(doc_id) pass — the
-    * K md5s are map-side column expressions, partial aggregation collapses
-    * each doc to a single K-column row before the exchange. The
-    * alternative (explode(K) + groupBy(doc_id, h) + regroup by band)
-    * shuffles K rows per doc per source partition and pays a second
-    * exchange for the banding — at 100 TB that's K× the shuffle volume for
-    * no information. Bands (RowsPerBand consecutive minhashes each) derive
-    * map-side: 4 rows per doc, no extra shuffle before the candidate
-    * equi-join. */
-  private[llm] def bandSignatures(sh: DataFrame): DataFrame = {
-    graft.functions.Md5Hi60.register(sh.sparkSession)
-    val minsig = sh.groupBy("doc_id").agg(
-      min(expr("md5_hi60(concat('0|', sh))")).as("mh0"),
-      (1 until NumHashes).map(h =>
-        min(expr(s"md5_hi60(concat('$h|', sh))")).as(s"mh$h")): _*)
-    minsig.select(col("doc_id"), explode(array(
-      (0 until NumHashes / RowsPerBand).map(j => struct(
-        lit(j).as("band"),
-        col(s"mh${RowsPerBand * j}").as("m0"),
-        col(s"mh${RowsPerBand * j + 1}").as("m1"))): _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"),
-        col("bs.m0").as("m0"), col("bs.m1").as("m1"))
+  /** Adds (band, m0, m1) to every row of a frame holding `shs`: one row
+    * per band, NumHashes/RowsPerBand rows per input row. The K minhashes
+    * are one [[graft.functions.MinHashSig]] call per row (K seed-prefixed
+    * md5_hi60s folded to a min per hash), and the bands are a map-side
+    * explode of RowsPerBand consecutive minhashes each — no exchange, no
+    * aggregate. All other columns pass through. */
+  private def withBands(sets: DataFrame): DataFrame = {
+    graft.functions.MinHashSig.register(sets.sparkSession)
+    sets
+      .withColumn("_sig", expr(s"minhash_sig(shs, $NumHashes)"))
+      .withColumn("_bs", explode(array(
+        (0 until NumHashes / RowsPerBand).map(j => struct(
+          lit(j).as("band"),
+          col("_sig")(RowsPerBand * j).as("m0"),
+          col("_sig")(RowsPerBand * j + 1).as("m1"))): _*)))
+      .withColumn("band", col("_bs.band"))
+      .withColumn("m0", col("_bs.m0"))
+      .withColumn("m1", col("_bs.m1"))
+      .drop("_sig", "_bs")
   }
+
+  /** MinHash band signatures (doc_id, band, m0, m1) of a shingle-set
+    * frame ([[shingleSetsOf]]): 4 rows per document, map-only. */
+  private[llm] def bandSignatures(sets: DataFrame): DataFrame =
+    withBands(sets).select("doc_id", "band", "m0", "m1")
 
   /** Band buckets whose membership exceeds this never enter a candidate
     * join: a flooded bucket of b docs is b²/2 pairs of work, and a 10⁶-doc
@@ -141,35 +147,15 @@ object Llm extends QueryModule {
       .drop("bsz")
   }
 
-  /** Map-only (ZERO-shuffle) image of [[bandSignatures]]: the same
-    * (band, m0, m1) rows derived per input row with array higher-order
-    * functions — distinct shingles via array_distinct, each minhash an
-    * array_min over the in-row shingle list. Row-for-row equal to the
-    * explode+groupBy path (DedupSpec pins it); exists because a STREAM
-    * can't pay a stateful groupBy just to hash one document: this
-    * version makes band signing a stateless projection, so l02's
+  /** [[bandSignatures]] straight from text: the same (band, m0, m1) rows
+    * per input row of a (doc_id, text, …) frame, through the same
+    * shingling expression and kernel — a stateless projection, so l02's
     * candidate generation lifts onto readStream with state only at the
     * final pair dedup. All other input columns pass through (the
     * streaming caller keeps its event-time column). Docs under 3 words
-    * have no shingles and are dropped, same as [[shinglesOf]]. */
-  private[graft] def withBandSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.Md5Hi60.register(docs.sparkSession)
-    def mh(h: Int) = s"array_min(transform(_shs, s -> md5_hi60(concat('$h|', s))))"
-    docs
-      .withColumn("_w", split(lower(col("text")), " "))
-      .filter(size(col("_w")) >= 3)
-      .withColumn("_shs", expr("array_distinct(transform(sequence(1, size(_w)-2), " +
-        "i -> concat_ws(' ', element_at(_w,i), element_at(_w,i+1), element_at(_w,i+2))))"))
-      .withColumn("_bs", explode(array(
-        (0 until NumHashes / RowsPerBand).map(j => struct(
-          lit(j).as("band"),
-          expr(mh(RowsPerBand * j)).as("m0"),
-          expr(mh(RowsPerBand * j + 1)).as("m1"))): _*)))
-      .withColumn("band", col("_bs.band"))
-      .withColumn("m0", col("_bs.m0"))
-      .withColumn("m1", col("_bs.m1"))
-      .drop("_w", "_shs", "_bs")
-  }
+    * have no shingles and are dropped, same as [[shingleSetsOf]]. */
+  private[graft] def withBandSignatures(docs: DataFrame): DataFrame =
+    withBands(withShingleSet(docs)).drop("shs")
 
   /** The PERSISTABLE band index of a corpus: one (doc_id, band, m0, m1)
     * row per band signature — what l25's "historical side" looks like as
@@ -180,7 +166,7 @@ object Llm extends QueryModule {
     * frame per micro-batch. DedupSpec gates a write→read→probe roundtrip
     * against the in-memory recomputation. */
   def bandIndexOf(docs: DataFrame): DataFrame =
-    bandSignatures(shinglesOf(docs))
+    bandSignatures(shingleSetsOf(docs))
 
   /** A band index with its flooded buckets (membership > cap) removed —
     * what a candidate-generation PROBE should join against.
@@ -194,8 +180,6 @@ object Llm extends QueryModule {
       cap: Int = BandBucketCap): DataFrame =
     capBuckets(index, Seq("band", "m0", "m1"), cap)
 
-  /** Library path for l02 over any (doc_id, text) frame: MinHash banded
-    * candidates (bucket-capped) + exact shingle-Jaccard verify. */
   /** THE production candidate stage — the banded self-join both l02 and
     * the l56 eval score share (one body, so the eval can never silently
     * drift from what l02 actually runs). */
@@ -207,10 +191,26 @@ object Llm extends QueryModule {
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
 
+  /** Exact shingle-set Jaccard of candidate pairs (a, b): each pair joins
+    * its two sets, c = |sa ∩ sb| by array_intersect (the sets are
+    * distinct, so that is the shared-shingle count) and
+    * jaccard = round(c / (|sa| + |sb| − c), 6). Two doc_id joins of
+    * one-row-per-document sets — no shingle-row join, no aggregate. The
+    * verify l02's spine and l25's incremental probe both bind. */
+  private[llm] def exactJaccard(cand: DataFrame, sets: DataFrame): DataFrame = {
+    def side(id: String, s: String) =
+      sets.select(col("doc_id").as(id), col("shs").as(s))
+    cand.join(side("a", "sa"), "a").join(side("b", "sb"), "b")
+      .withColumn("c", size(array_intersect(col("sa"), col("sb"))))
+      .select(col("a"), col("b"),
+        round(col("c") / (size(col("sa")) + size(col("sb")) - col("c")), 6)
+          .as("jaccard"))
+  }
+
   /** Session-scoped memo for the verified pair graph (graft.FrameMemo):
     * the pair list is localCheckpoint-materialized and tiny, while
-    * deriving it (shingle → band → capped self-join → exact-Jaccard
-    * verify) is the dedup family's dominant shared cost. A composed
+    * deriving it (sets → kernel bands → capped self-join → array verify)
+    * is the dedup family's dominant shared cost. A composed
     * pipeline running l02 → l21 → l53 over one corpus — or the sweep's
     * registered queries doing the same — pays it once: dedupClusterLabels'
     * cold path calls straight through here. Keyed by (docs plan, jaccMin,
@@ -220,6 +220,8 @@ object Llm extends QueryModule {
 
   def clearPairsMemo(): Unit = pairsMemo.clear()
 
+  /** Library path for l02 over any (doc_id, text) frame: MinHash banded
+    * candidates (bucket-capped) + exact shingle-Jaccard verify. */
   def minHashNearDupPairs(docs: DataFrame, jaccMin: Double = 0.4,
       bucketCap: Int = BandBucketCap): DataFrame =
     pairsMemo.getOrCompute((docs.sparkSession,
@@ -228,20 +230,20 @@ object Llm extends QueryModule {
     }
 
   /** [[minHashNearDupPairs]] for a caller that ALREADY holds the spine's
-    * cached (shingles, bands) — the fused day-close (Pipeline.l64),
-    * which needs the bands for its other legs anyway. Same memo, same
-    * key, same result: the cold build runs the one shared
-    * [[verifiedPairsFrom]] body over the caller's frames (sh/bands are
+    * cached (sets, bands) — the fused day-close (Pipeline.l64), which
+    * needs the bands for its other legs anyway. Same memo, same key,
+    * same result: the cold build runs the one shared
+    * [[verifiedPairsFrom]] body over the caller's frames (sets/bands are
     * themselves pure functions of `docs`, so whichever caller populates
     * the entry, the frame is identical); a hit skips the candidate join
     * + exact-Jaccard verify entirely — the dedup family's dominant
     * shared cost, now shared by the composition too, tagged memo_pre
     * like every other cross-query ride. */
-  private[llm] def minHashNearDupPairsWith(docs: DataFrame, sh: DataFrame,
+  private[llm] def minHashNearDupPairsWith(docs: DataFrame, sets: DataFrame,
       bands: DataFrame, jaccMin: Double, bucketCap: Int): DataFrame =
     pairsMemo.getOrCompute((docs.sparkSession,
       docs.queryExecution.normalized, (jaccMin, bucketCap))) {
-      verifiedPairsFrom(sh, bands, jaccMin, bucketCap)
+      verifiedPairsFrom(sets, bands, jaccMin, bucketCap)
         .orderBy("a", "b")
         .localCheckpoint()
     }
@@ -253,46 +255,38 @@ object Llm extends QueryModule {
     * the spine's exchange structure. Same [[pairSpine]] body as the real
     * path, so the two cannot drift. Not used by any registered query. */
   def pairSpineForPlan(docs: DataFrame): DataFrame =
-    pairSpine(shinglesOf(docs), 0.4, BandBucketCap)
+    pairSpine(shingleSetsOf(docs), 0.4, BandBucketCap)
 
-  private def pairSpine(sh: DataFrame, jaccMin: Double,
+  private def pairSpine(sets: DataFrame, jaccMin: Double,
       bucketCap: Int): DataFrame =
-    verifiedPairsFrom(sh, bandSignatures(sh), jaccMin, bucketCap)
+    verifiedPairsFrom(sets, bandSignatures(sets), jaccMin, bucketCap)
       .orderBy("a", "b")
 
   private def minHashNearDupPairsUncached(docs: DataFrame, jaccMin: Double,
       bucketCap: Int): DataFrame = {
-    // scoped cache: 5 consumers inside the spine; released before
-    // returning — the (tiny) result is localCheckpoint-materialized so
-    // the returned plan reads stored blocks, not the unpersisted shingles
-    val sh = shinglesOf(docs).cache()
-    val out = pairSpine(sh, jaccMin, bucketCap).localCheckpoint()
-    sh.unpersist(blocking = false)
+    // scoped cache: the bands and both verify sides read the sets;
+    // released before returning — the (tiny) result is
+    // localCheckpoint-materialized so the returned plan reads stored
+    // blocks, not the unpersisted sets
+    val sets = shingleSetsOf(docs).cache()
+    val out = pairSpine(sets, jaccMin, bucketCap).localCheckpoint()
+    sets.unpersist(blocking = false)
     out
   }
 
-  /** The verified-pair spine from a PRECOMPUTED (shingles, bands) pair —
-    * ONE body shared by [[minHashNearDupPairsUncached]] and the fused
-    * day-close (Pipeline.l64), so the capped candidate join + exact
-    * Jaccard verify can never drift between the memoized path and a
-    * composition that also needs the bands for other legs. */
-  private[llm] def verifiedPairsFrom(sh: DataFrame, bands: DataFrame,
-      jaccMin: Double, bucketCap: Int): DataFrame = {
-    val cand = bandedCandidatePairs(
-      capBuckets(bands, Seq("band", "m0", "m1"), bucketCap))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val common = cand
-      .join(sh.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
-      .join(sh.select(col("doc_id").as("b2"), col("sh").as("shb")),
-        col("b") === col("b2") && col("sha") === col("shb"))
-      .groupBy("a", "b").agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), "b")
-      .withColumn("jaccard", round(col("c") / (col("na") + col("nb") - col("c")), 6))
-      .filter(col("jaccard") >= jaccMin)
-      .select("a", "b", "jaccard")
-  }
+  /** The verified-pair spine from PRECOMPUTED (sets, bands) — ONE body
+    * shared by [[minHashNearDupPairsUncached]] and the fused day-close
+    * (Pipeline.l64), so the capped candidate join + exact Jaccard verify
+    * can never drift between the memoized path and a composition that
+    * also needs the bands for other legs. */
+  private[llm] def verifiedPairsFrom(sets: DataFrame, bands: DataFrame,
+      jaccMin: Double, bucketCap: Int): DataFrame =
+    exactJaccard(
+      bandedCandidatePairs(capBuckets(bands, Seq("band", "m0", "m1"), bucketCap)),
+      sets)
+      // a pair sharing no shingle has no row in a shingle-keyed count;
+      // keep it out here too, whatever jaccMin is
+      .filter(col("jaccard") >= jaccMin && col("jaccard") > 0)
 
   /** l56: DEDUP-PIPELINE EVALUATION — l55's "measure, don't guess"
     * discipline applied to the near-dup stack: how good are l02's banded
@@ -338,8 +332,9 @@ object Llm extends QueryModule {
     // match the oracle's fresh count(*) exactly — a stale n across a
     // modulus boundary would silently probe a different sample.
     val m = probeModulus(docs.count())
-    val sh = shinglesOf(docs).cache()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val sets = shingleSetsOf(docs).cache()
+    val sh = shinglesOf(sets)
+    val sizes = sets.select(col("doc_id"), size(col("shs")).as("n"))
     val isProbe = (c: org.apache.spark.sql.Column) => pmod(c, lit(m)) === 0
     // exact probe-side truth: all pairs touching a probe, exact jaccard
     val common = sh.filter(isProbe(col("doc_id"))).select(col("doc_id").as("p"), col("sh"))
@@ -376,7 +371,7 @@ object Llm extends QueryModule {
     // Materialized once (consumed by two aggregates).
     val wB = org.apache.spark.sql.expressions.Window
       .partitionBy("band", "m0", "m1")
-    val bands0 = bandSignatures(sh)
+    val bands0 = bandSignatures(sets)
       .withColumn("bsz", count(lit(1)).over(wB))
     val allCand = bands0.filter(isProbe(col("doc_id"))).as("x")
       .join(bands0.as("y"),
@@ -413,7 +408,7 @@ object Llm extends QueryModule {
       .unionByName(score("uncapped", candidates(capped = false)))
       .orderBy("config")
       .localCheckpoint()
-    sh.unpersist(blocking = false)
+    sets.unpersist(blocking = false)
     Seq(truth, allCand).foreach(graft.Fixpoint.release)
     out
   }
@@ -442,7 +437,7 @@ object Llm extends QueryModule {
     * discovered in a sweep. */
   def truthJoinWork(docs: DataFrame): Long = {
     val m = probeModulus(docs.count()) // fresh, like dedupEval's
-    val sh = shinglesOf(docs)
+    val sh = shinglesOf(shingleSetsOf(docs))
     sh.groupBy("sh")
       .agg(sum(when(pmod(col("doc_id"), lit(m)) === 0, 1L).otherwise(0L))
         .as("cp"), count(lit(1)).as("ca"))
@@ -456,7 +451,7 @@ object Llm extends QueryModule {
     * pipeline can sink next to its pairs output. */
   def minHashBucketAudit(docs: DataFrame,
       bucketCap: Int = BandBucketCap): DataFrame =
-    bandSignatures(shinglesOf(docs))
+    bandIndexOf(docs)
       .groupBy("band", "m0", "m1").agg(count(lit(1)).as("bsz"))
       .withColumn("dropped", col("bsz") > bucketCap)
 
@@ -974,8 +969,8 @@ object Llm extends QueryModule {
       .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
       .join(exactIdx, Seq("h"), "left")
       .select(col("doc_id"), col("hist_id").as("exact_of"))
-    val sh = shingles(spark, dir).cache() // scoped: released before return
-    val bands = bandSignatures(sh)
+    val sets = shingleSets(spark, dir).cache() // scoped: released before return
+    val bands = bandSignatures(sets)
     val histBands = bands.filter(!(col("doc_id") % 10 === 0))
     val newBands = bands.filter(col("doc_id") % 10 === 0)
     val cand = histBands.as("y")
@@ -984,16 +979,8 @@ object Llm extends QueryModule {
           && col("x.m1") === col("y.m1"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val common = cand
-      .join(sh.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
-      .join(sh.select(col("doc_id").as("b2"), col("sh").as("shb")),
-        col("b") === col("b2") && col("sha") === col("shb"))
-      .groupBy("a", "b").agg(count(lit(1)).as("c"))
-    val near = common
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), "b")
-      .filter(round(col("c") / (col("na") + col("nb") - col("c")), 6) >= 0.4)
+    val near = exactJaccard(cand, sets)
+      .filter(col("jaccard") >= 0.4)
       .groupBy("a").agg(min(col("b")).as("near_of"))
     val out = newExact
       .join(near, col("doc_id") === col("a"), "left")
@@ -1004,7 +991,7 @@ object Llm extends QueryModule {
         coalesce(col("exact_of"), col("near_of")).as("dup_of"))
       .orderBy("doc_id")
       .localCheckpoint()
-    sh.unpersist(blocking = false)
+    sets.unpersist(blocking = false)
     out
   }
 
@@ -1021,7 +1008,7 @@ object Llm extends QueryModule {
     * counts on the bucket key; the join is delta-bucket-sized; nothing
     * is corpus-sized after the two signature scans. */
   def l54(spark: SparkSession, dir: String): DataFrame = {
-    val bands = bandSignatures(shingles(spark, dir))
+    val bands = bandSignatures(shingleSets(spark, dir))
     val newMark = col("doc_id") % 10 === 0
     val hist = bands.filter(!newMark).groupBy("band", "m0", "m1")
       .agg(count(lit(1)).as("n_hist"), min("doc_id").as("min_hist_doc"))

@@ -471,8 +471,9 @@ object Pipeline extends QueryModule {
     * a single shingle pass and a single banded candidate join feed all
     * three legs instead of each registered query re-deriving them.
     *
-    *  - shared spine: shingles → band signatures (both cached for the
-    *    plan's lifetime), capped candidate join, exact-Jaccard verify —
+    *  - shared spine: shingle sets → kernel band signatures (both
+    *    cached for the plan's lifetime), capped candidate join, array
+    *    exact-Jaccard verify —
     *    ONE pair graph serves the probe verdicts AND the CC delta edges;
     *  - probe leg (l25): per new doc (doc_id%10==0), exact_dup via the
     *    historical md5 index, near_dup via the shared pair graph's
@@ -494,21 +495,21 @@ object Pipeline extends QueryModule {
     * is the legs' own: nothing here is corpus²; the fusion only REMOVES
     * two shingle scans and a duplicate band exchange.
     *
-    * Job count: a memo-cold run runs 81 or 82 jobs at sf0.1 on
-    * `local[4]`. The varying job belongs to the pair spine's one
-    * materialization (Llm.minHashNearDupPairsWith), a single query on
-    * the calling thread, not to the concurrent legs: AQE re-plans that
-    * query as its stages finish, and depending on which finished first
-    * one join input goes either to a broadcast built from its finished
-    * shuffle stage (an extra job) or to a second shuffle. */
+    * Job count: a memo-cold run runs 79 jobs at sf0.1 on `local[4]`,
+    * in each of 6 runs in one JVM and of 7 runs in separate JVMs. With
+    * the shingle-row verify it ran 81 or 82: AQE re-planned one join
+    * input of the spine's materialization (Llm.minHashNearDupPairsWith)
+    * either as a broadcast built from its finished shuffle stage (an
+    * extra job) or as a second shuffle, depending on which stage
+    * finished first. The array verify has no such join. */
   def l64(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val isNew = (c: Column) => pmod(c, lit(10)) === 0
-    val sh = Llm.shinglesOf(docs).cache() // scoped: released before return
-    val bands = Llm.bandSignatures(sh).cache() // ditto
+    val sets = Llm.shingleSetsOf(docs).cache() // scoped: released before return
+    val bands = Llm.bandSignatures(sets).cache() // ditto
     // ONE shared spine body with the memoized l02 path — THROUGH the
     // same pairsMemo entry (same key, same result; the cold build uses
-    // the sh/bands cached above, which the probe legs need anyway): a
+    // the sets/bands cached above, which the probe legs need anyway): a
     // composed pipeline that already ran l02 over this corpus folds the
     // day-close without re-running the candidate join + Jaccard verify,
     // the dedup family's dominant shared cost. Tagged memo_pre in the
@@ -516,7 +517,7 @@ object Pipeline extends QueryModule {
     // consumers below (CC's historical edges, the delta contraction,
     // the near-probe leg) read the one materialized frame.
     val pairs = Llm
-      .minHashNearDupPairsWith(docs, sh, bands, 0.4, Llm.BandBucketCap)
+      .minHashNearDupPairsWith(docs, sets, bands, 0.4, Llm.BandBucketCap)
       .select("a", "b")
     val exactIdx = docs.filter(!isNew(col("doc_id")))
       .groupBy(md5(col("text").cast("binary")).as("h"))
@@ -569,7 +570,7 @@ object Pipeline extends QueryModule {
     // pairs is NOT released — the memo owns that frame (l02's contract)
     Seq(newExact, near, newBuckets).foreach(graft.Fixpoint.release)
     bands.unpersist(blocking = false)
-    sh.unpersist(blocking = false)
+    sets.unpersist(blocking = false)
     out
   }
 

@@ -222,7 +222,7 @@ object EventTime extends QueryModule {
     * resample default). Same aggregate-first scale shape as t10: ONE
     * events scan collapses to the |types|·|hours| grid, and BOTH
     * bracketing observations come from two frames of the same
-    * event_type sort (one window sort, no self-join). Bracketing
+    * event_type partitioning (no self-join). Bracketing
     * (hour, value) pairs travel as structs so prev-value and prev-hour
     * can never desynchronize. The interpolation itself is the one
     * textually-pinned double expression
@@ -242,14 +242,19 @@ object EventTime extends QueryModule {
     val grid = hourly.select("event_type").distinct()
       .crossJoin(broadcast(bounds))
       .select(col("event_type"), explode(expr("sequence(h0, h1)")).as("hour"))
-    val base = Window.partitionBy("event_type").orderBy("hour")
-    val wp = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wf = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    // both brackets are running frames; the next one runs over the
+    // reversed hour order (hours are unique per type). A `currentRow →
+    // unboundedFollowing` frame re-aggregates at every row.
+    val byType = Window.partitionBy("event_type")
+    val wp = byType.orderBy(col("hour"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wf = byType.orderBy(col("hour").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val obs = when(col("sum_value").isNotNull,
       struct(col("hour").as("h"), col("sum_value").as("v")))
     val out = grid.join(hourly, Seq("event_type", "hour"), "left")
       .withColumn("p", last(obs, ignoreNulls = true).over(wp))
-      .withColumn("nx", first(obs, ignoreNulls = true).over(wf))
+      .withColumn("nx", last(obs, ignoreNulls = true).over(wf))
       .select(col("event_type"), (col("hour") * hourMs).as("hour_start_ms"),
         coalesce(col("n"), lit(0L)).as("n"),
         col("sum_value").isNotNull.as("observed"),

@@ -209,21 +209,28 @@ object Windows extends QueryModule {
   /** w07: IGNORE-NULLS gap fill — the sensor/telemetry idiom: a sparse
     * signal (here value surfaces only on every 5th event) forward-fills
     * from the last observation and back-fills from the next, per entity
-    * in event-time order. last/first with ignoreNulls over one-sided
-    * frames — ONE user-key shuffle carries both directions; no self-join,
-    * no as-of. (t10 is the time-GRID resample; this is the row-aligned
-    * fill that keeps the original event spine.) */
+    * in event-time order. last(ignoreNulls) over RUNNING frames, the
+    * back-fill in the reversed order — ONE user-key shuffle carries both
+    * directions; no self-join, no as-of. A `currentRow →
+    * unboundedFollowing` frame would re-aggregate at every row (quadratic
+    * per user); the order (ts_ms, event_id) is unique, so reversing it
+    * reads the same next observation. (t10 is the time-GRID resample;
+    * this is the row-aligned fill that keeps the original event spine.) */
   def w07(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))
+    val byUser = Window.partitionBy("user_id")
+    val running = byUser.orderBy(col("ts_ms"), col("event_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val reversed = byUser.orderBy(col("ts_ms").desc, col("event_id").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.spread(Tables.events(spark, dir), "user_id") // §2.5 window pin
       .withColumn("v_sparse",
         when(pmod(col("event_id"), lit(5)) === 0, col("value")))
       .select(col("user_id"), col("event_id"), col("ts_ms"), col("v_sparse"),
         last(col("v_sparse"), ignoreNulls = true)
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+          .over(running)
           .as("v_ffill"),
-        first(col("v_sparse"), ignoreNulls = true)
-          .over(w.rowsBetween(Window.currentRow, Window.unboundedFollowing))
+        last(col("v_sparse"), ignoreNulls = true)
+          .over(reversed)
           .as("v_bfill"))
       .orderBy("user_id", "ts_ms", "event_id")
   }

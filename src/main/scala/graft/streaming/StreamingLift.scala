@@ -179,7 +179,7 @@ object StreamingLift {
   /** Streaming NEAR-dup candidate generation — l02's front half as a
     * continuous stream. Each arriving document (doc_id, text, doc_ts) is
     * band-signed by the map-only [[graft.llm.Llm.withBandSignatures]]
-    * (array minhashes — a stateless projection, so signing needs NO
+    * (the minhash_sig kernel — a stateless projection, so signing needs NO
     * streaming aggregation), then probes the PERSISTED historical band
     * index ([[graft.llm.Llm.bandIndexOf]] written as a bucketed table;
     * re-broadcast per micro-batch here). A doc sharing several buckets

@@ -219,6 +219,54 @@ class DedupSpec extends SparkSuite {
     assert(viaRow.nonEmpty)
   }
 
+  test("MinHash kernel bands equal the eight-min groupBy reference row-for-row") {
+    // the reference is the per-shingle-row form the kernel replaced: K
+    // seed-prefixed md5_hi60 minima in one groupBy(doc_id), banded by
+    // consecutive pairs
+    graft.functions.Md5Hi60.register(spark)
+    val docs = Tables.documents(spark, sf)
+    val sh = docs.select(col("doc_id"), split(lower(col("text")), " ").as("w"))
+      .filter(size(col("w")) >= 3)
+      .select(col("doc_id"), explode(expr("array_distinct(transform(sequence(1, size(w)-2), " +
+        "i -> concat_ws(' ', element_at(w,i), element_at(w,i+1), element_at(w,i+2))))")).as("sh"))
+    val minsig = sh.groupBy("doc_id").agg(
+      min(expr("md5_hi60(concat('0|', sh))")).as("mh0"),
+      (1 until 8).map(h => min(expr(s"md5_hi60(concat('$h|', sh))")).as(s"mh$h")): _*)
+    val reference = minsig.collect().flatMap(r => (0 until 4).map(j =>
+      Seq[Any](r.getLong(0), j, r.getLong(1 + 2 * j), r.getLong(2 + 2 * j)))).toSet
+    val viaKernel = Llm.bandIndexOf(docs)
+      .select("doc_id", "band", "m0", "m1").collect().map(_.toSeq).toSet
+    assert(viaKernel === reference)
+    assert(viaKernel.nonEmpty)
+  }
+
+  test("pair spine runs on one row per document: no shingle-row Generate, no aggregate over shingle rows") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val df = Llm.pairSpineForPlan(Tables.documents(spark, sf))
+    df.collect() // the executed plan is AQE's final one
+    val plan = df.queryExecution.executedPlan
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val strings = (o: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]) =>
+      o.exists(a => a.dataType == StringType)
+    val generates = helper.collect(plan) { case g: GenerateExec => g }
+    assert(generates.nonEmpty, s"the band explode is missing:\n$plan")
+    assert(!generates.exists(g => strings(g.generatorOutput)),
+      s"a Generate emits shingle rows:\n$plan")
+    val joins = helper.collect(plan) { case j: BaseJoinExec => j }
+    assert(joins.nonEmpty, plan.toString)
+    assert(!joins.exists(j => helper.collect(j) { case g: GenerateExec => g }
+      .exists(g => strings(g.generatorOutput))), s"a join reads exploded shingles:\n$plan")
+    val aggs = helper.collect(plan) { case a: BaseAggregateExec => a }
+    assert(!aggs.exists(a => strings(a.child.output)),
+      s"an aggregate reads shingle rows:\n$plan")
+    // the sets travel as arrays: the verify's joins read (doc_id, shs)
+    assert(joins.exists(_.output.exists(_.dataType.isInstanceOf[ArrayType])), plan.toString)
+    assert(plan.toString.contains("minhash_sig("), plan.toString)
+  }
+
   test("persisted band index roundtrip: write, read back, probe with the delta == in-memory recompute") {
     val docs = Tables.documents(spark, sf)
     val hist = docs.filter(!(col("doc_id") % 10 === 0))

@@ -102,7 +102,7 @@ class DriverToolsSpec extends SparkSuite {
     val Seq(a01, spine) = written.map(Files.readString)
     assert(a01.startsWith("== Physical Plan =="), a01)
     assert(a01.contains("HashAggregate"), a01)
-    assert(spine.contains("md5_hi60("), spine)
+    assert(spine.contains("minhash_sig("), spine)
   }
 
   test("Plans.dump rejects an unknown id by name and writes nothing") {

@@ -97,9 +97,11 @@ class Md5Hi60Spec extends SparkSuite {
   }
 
   test("l02's physical plan carries no conv( or md5( — the MinHash runs md5_hi60") {
+    // the MinHash is minhash_sig, which folds each digest with
+    // md5_hi60's own fold (MinHashSigSpec pins the values)
     val plan = llm.Llm.pairSpineForPlan(Tables.documents(spark, sf))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("md5_hi60("), plan)
+    assert(plan.contains("minhash_sig("), plan)
     assert(!plan.contains("conv("), plan)
     assert(!plan.contains("md5("), plan)
   }
