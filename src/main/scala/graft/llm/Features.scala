@@ -95,7 +95,7 @@ object Features extends QueryModule {
     // the change feed names the touched keys — delta-sized by design
     val changed = Lakehouse.s28Cdf(spark, log, 0, 1, "event_id")
       .select("user_id").distinct()
-    val inc = spark.read.parquet(s"$root/ft0")
+    val inc = Lakehouse.scan(spark, Seq(s"$root/ft0"))
       .join(changed, Seq("user_id"), "left_anti") // untouched rows carry over
       .unionByName(pit(
         facts.join(changed, Seq("user_id"), "left_semi"),
@@ -156,25 +156,23 @@ object Features extends QueryModule {
       () => states.filter(delta)
         .coalesce(1).write.mode("overwrite").parquet(s"$root/dim1delta")))
     val dim0Adds = Lakehouse.listDataFiles(s"$root/dim0").map(("dim.add", _))
-    pit(facts, spark.read.parquet(s"$root/dim0"))
+    pit(facts, Lakehouse.scan(spark, Seq(s"$root/dim0")))
       .repartition(2).write.mode("overwrite").parquet(s"$root/ft0")
     val ft0Adds = Lakehouse.listDataFiles(s"$root/ft0").map(("feat.add", _))
     Lakehouse.s28Commit(spark, log, 0, dim0Adds ++ ft0Adds)
-    val changed = spark.read.parquet(s"$root/dim1delta")
+    val changed = Lakehouse.scan(spark, Seq(s"$root/dim1delta"))
       .select("user_id").distinct() // delta-sized by construction
     // feature maintenance as merge-on-read: changed users' stale rows
     // tombstoned by POSITION (s25's DV form — untouched rows' files are
     // never rewritten), re-joined rows appended; both inputs to the PIT
     // re-join are semi-joined to the changed keys (delta-sized)
-    spark.read.parquet(Lakehouse.listDataFiles(s"$root/ft0"): _*)
-      .withColumn("file_path", col("_metadata.file_path"))
-      .withColumn("row_index", col("_metadata.row_index"))
-      .join(broadcast(changed), Seq("user_id"), "left_semi")
-      .select("file_path", "row_index")
+    Lakehouse.positionsOf(
+        Lakehouse.scan(spark, Lakehouse.listDataFiles(s"$root/ft0"), positions = true)
+          .join(broadcast(changed), Seq("user_id"), "left_semi"))
       .write.mode("overwrite").parquet(s"$root/featdv1")
-    val nReplaced = spark.read.parquet(s"$root/featdv1").count()
-    val dimFull = spark.read.parquet(s"$root/dim0")
-      .unionByName(spark.read.parquet(s"$root/dim1delta"))
+    val nReplaced = Lakehouse.scan(spark, Seq(s"$root/featdv1")).count()
+    val dimFull = Lakehouse.scan(spark, Seq(s"$root/dim0"))
+      .unionByName(Lakehouse.scan(spark, Seq(s"$root/dim1delta")))
     pit(facts.join(changed, Seq("user_id"), "left_semi"),
         dimFull.join(changed, Seq("user_id"), "left_semi"))
       .coalesce(1).write.mode("overwrite").parquet(s"$root/ftadd1")
@@ -202,8 +200,7 @@ object Features extends QueryModule {
     * statement itself. */
   def l67(spark: SparkSession, dir: String): DataFrame = {
     val (log, _, nReplaced) = l67Build(spark, dir)
-    Lakehouse.snapshotOfKind(spark,
-        Lakehouse.readManifest(log, 1), "feat.")
+    Lakehouse.snapshotOf(spark, Lakehouse.readManifest(log, 1), "feat.")
       .withColumn("state_type", coalesce(col("state_type"), lit("none")))
       .groupBy("fact_type", "state_type")
       .agg(count(lit(1)).as("n_rows"),

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
 /** Table-format lifecycle operators (SURVEY.md §2.2 s22-s24): snapshot
   * retention/vacuum, compaction↔manifest consistency, and optimistic
@@ -24,6 +24,15 @@ import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructType}
   * driver loop); and commits are O(1) atomic pointer creations, so
   * writer concurrency costs conflicts + retries, never locks held over
   * data writes.
+  *
+  * One reader: every read of committed data in the family — snapshots,
+  * merge-on-read, change-feed pre/post-images, sidecars, and the l66/l67
+  * and t30/t31 consumers — goes through [[scan]]. It plans the files
+  * under the schema their Spark writer recorded in the parquet footer
+  * (read once on the driver, never a footer-inference job) and subtracts
+  * positional deletion vectors, whose sidecars all carry the constant
+  * schema (file_path STRING, row_index BIGINT), with one broadcast
+  * anti-join. [[positionsOf]] is the one projection that builds a DV.
   */
 object Lakehouse extends QueryModule {
 
@@ -55,47 +64,103 @@ object Lakehouse extends QueryModule {
         .repartition(2)
         .write.mode("overwrite").parquet(s"$root/commit=2")))
     val snap2Files = listDataFiles(s"$root/commit=1") ++ listDataFiles(s"$root/commit=2")
-    spark.read.schema(li.schema).parquet(snap2Files: _*)
+    scan(spark, snap2Files)
       .repartitionByRange(3, col("l_orderkey"))
       .write.mode("overwrite").parquet(s"$root/commit=3")
     val rows =
       listDataFiles(s"$root/commit=1").flatMap(p => Seq((1, p), (2, p))) ++
         listDataFiles(s"$root/commit=2").map(p => (2, p)) ++
         listDataFiles(s"$root/commit=3").map(p => (3, p))
-    manifest(spark, rows, "snapshot", li.schema)
+    manifest(spark, rows, "snapshot")
   }
 
   /** A commit's (key, path) file manifest — planner metadata (KBs per
     * thousand files in production), held by the driver as a local
-    * relation. The path column's metadata records the schema the commit
-    * wrote, the way a table format's metadata file does, so
-    * [[readSnapshot]] plans without reading a footer. */
+    * relation. */
   private[graft] def manifest(spark: SparkSession, rows: Seq[(Int, String)],
-      key: String, schema: StructType): DataFrame = {
+      key: String): DataFrame = {
     import spark.implicits._
-    rows.toDF(key, "path").withColumn("path", col("path").as("path",
-      new MetadataBuilder().putString("schema", schema.json).build()))
+    rows.toDF(key, "path")
   }
 
-  /** Snapshot read: plan exactly the manifest files `keep` selects, under
-    * the schema the commit recorded — no footer-inference job. The sorted
-    * driver-side file list is planning metadata (what a table format's
-    * scan planner produces from its manifest); an empty slice fails with
-    * `missing`, the snapshot contract named, not a file-not-found or
-    * schema error at scan time. */
-  private[graft] def readSnapshot(spark: SparkSession, manifest: DataFrame,
-      keep: Column, missing: => String): DataFrame = {
-    val files = manifest.filter(keep).select("path").collect().map(_.getString(0)).sorted
+  /** The manifest files `keep` selects, sorted — the driver-side file
+    * list a table format's scan planner produces from its manifest. An
+    * empty slice fails with `missing`, the snapshot contract named, not
+    * a file-not-found or schema error at scan time. */
+  private[graft] def plannedFiles(manifest: DataFrame, keep: Column,
+      missing: => String): Seq[String] = {
+    val files = manifest.filter(keep).select("path").collect()
+      .map(_.getString(0)).sorted.toIndexedSeq
     require(files.nonEmpty, missing)
-    val schema = DataType.fromJson(manifest.schema("path").metadata.getString("schema"))
-    spark.read.schema(schema.asInstanceOf[StructType]).parquet(files.toIndexedSeq: _*)
+    files
   }
+
+  // ------------------------------------------------------------- reader
+
+  /** The schema every positional deletion-vector sidecar carries. */
+  private val DvSchema = new StructType()
+    .add("file_path", StringType).add("row_index", LongType)
+
+  /** THE reader of committed data. `files` (data files, or directories
+    * of them) are planned under the schema their writer recorded
+    * ([[footerSchema]] — no footer-inference job); the positions the
+    * `dvs` sidecars name are subtracted by one broadcast anti-join on
+    * (file_path, row_index) — the DV side is sidecar-sized, so the read
+    * costs one scan plus a map-side probe (why DVs beat copy-on-write for
+    * low-selectivity deletes at 100 TB). `positions` keeps each
+    * surviving row's (file_path, row_index) columns, the input of
+    * [[positionsOf]]; `basePath` surfaces partition directories (`k=v`)
+    * as columns. */
+  private[graft] def scan(spark: SparkSession, files: Seq[String],
+      dvs: Seq[String] = Nil, positions: Boolean = false,
+      basePath: String = null): DataFrame = {
+    require(files.nonEmpty, "a snapshot read needs at least one data file")
+    val reader = spark.read.schema(footerSchema(spark, files.head))
+    val data = Option(basePath).fold(reader)(reader.option("basePath", _))
+      .parquet(files: _*)
+    if (dvs.isEmpty && !positions) data
+    else {
+      val placed = data
+        .withColumn("file_path", col("_metadata.file_path"))
+        .withColumn("row_index", col("_metadata.row_index"))
+      val live = if (dvs.isEmpty) placed
+        else placed.join(broadcast(spark.read.schema(DvSchema).parquet(dvs: _*)),
+          Seq("file_path", "row_index"), "left_anti")
+      if (positions) live else live.drop("file_path", "row_index")
+    }
+  }
+
+  /** The schema a Spark writer records in every parquet footer it writes
+    * (key `org.apache.spark.sql.parquet.row.metadata`, the one Spark's own
+    * inference reads first): one driver-side footer read, no Spark job.
+    * A directory resolves to its first data file. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    val file =
+      if (!new java.io.File(path).isDirectory) path
+      else listDataFiles(path).headOption
+        .getOrElse(sys.error(s"no data file under $path"))
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+    try {
+      val json = footer.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      require(json != null, s"$file records no Spark schema in its footer")
+      DataType.fromJson(json).asInstanceOf[StructType]
+    } finally footer.close()
+  }
+
+  /** The (file_path, row_index) rows of a positioned [[scan]] — what a
+    * positional DV sidecar stores (Iceberg positional deletes / Delta
+    * deletion vectors). */
+  private[graft] def positionsOf(df: DataFrame): DataFrame =
+    df.select("file_path", "row_index")
 
   /** s22's snapshot read: a VACUUMED (or never-committed) snapshot fails
     * with the retention contract named. */
   def s22AsOf(spark: SparkSession, manifest: DataFrame, n: Int): DataFrame =
-    readSnapshot(spark, manifest, col("snapshot") === n,
-      s"snapshot $n is expired or was never committed — not readable")
+    scan(spark, plannedFiles(manifest, col("snapshot") === n,
+      s"snapshot $n is expired or was never committed — not readable"))
 
   /** VACUUM: expire snapshots below `retainFrom`, physically delete every
     * file no RETAINED snapshot references, return (pruned manifest,
@@ -194,7 +259,7 @@ object Lakehouse extends QueryModule {
     * basePath lets partition discovery type the ship_month dir key even
     * though the scan is planned from leaf files. */
   private[graft] def fileStats(spark: SparkSession, root: String, files: Seq[String]): DataFrame =
-    spark.read.option("basePath", root).parquet(files: _*)
+    scan(spark, files, basePath = root)
       .groupBy(col("ship_month"), col("_metadata.file_path").as("path"))
       .agg(count(lit(1)).as("n_rows"),
         min("l_orderkey").as("min_orderkey"),
@@ -274,7 +339,7 @@ object Lakehouse extends QueryModule {
     val fragFiles = listMonthFiles(root)
     val frag97 = v1.filter(col("ship_month").startsWith("1997"))
       .select("path").collect().map(_.getString(0)).sorted.toIndexedSeq
-    spark.read.option("basePath", root).parquet(frag97: _*)
+    scan(spark, frag97, basePath = root)
       .repartition(col("ship_month"))
       .write.mode("append").partitionBy("ship_month").parquet(root)
     val newFiles = listMonthFiles(root).diff(fragFiles)
@@ -465,8 +530,8 @@ object Lakehouse extends QueryModule {
   private[graft] def s24Read(spark: SparkSession, log: String, version: Int): DataFrame = {
     val p = java.nio.file.Paths.get(log).resolve(ptrName(version))
     require(java.nio.file.Files.exists(p), s"no committed version $version in $log")
-    spark.read.parquet(new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8))
+    scan(spark, Seq(new String(java.nio.file.Files.readAllBytes(p),
+      java.nio.charset.StandardCharsets.UTF_8)))
   }
 
   /** The manifest's monoid merge (s20's shape): counts add, min/max
@@ -563,10 +628,8 @@ object Lakehouse extends QueryModule {
       .repartition(4)
       .write.mode("overwrite").parquet(s"$root/base")
     val dv = Tables.scratchPath("s25_dv", dir)
-    spark.read.parquet(s"$root/base")
-      .filter(s25Deleted)
-      .select(col("_metadata.file_path").as("file_path"),
-        col("_metadata.row_index").as("row_index"))
+    positionsOf(scan(spark, Seq(s"$root/base"), positions = true)
+      .filter(s25Deleted))
       .write.mode("overwrite").parquet(dv)
     (root, dv)
   }
@@ -576,27 +639,12 @@ object Lakehouse extends QueryModule {
   private def s25Deleted: org.apache.spark.sql.Column =
     col("l_quantity") < 5.0 || pmod(col("l_orderkey"), lit(97)) === 0
 
-  /** Merge-on-read: the logical table = base files ANTI-JOINED with the
-    * deletion vector on (file, position). The DV side is sidecar-sized
-    * (positions of deleted rows only) and broadcast, so the read costs
-    * one base scan + a map-side hash probe — the reason DVs beat
-    * copy-on-write for low-selectivity deletes at 100 TB (no terabyte
-    * rewrite to delete 0.1% of rows). */
-  def s25MorRead(spark: SparkSession, root: String,
-      dvPath: String): DataFrame =
-    spark.read.parquet(s"$root/base")
-      .withColumn("file_path", col("_metadata.file_path"))
-      .withColumn("row_index", col("_metadata.row_index"))
-      .join(broadcast(spark.read.parquet(dvPath)),
-        Seq("file_path", "row_index"), "left_anti")
-      .drop("file_path", "row_index")
-
   /** Copy-on-write APPLY (the compaction that retires a DV): rewrite the
-    * merge-on-read view into clean files; the base files + DV become
-    * vacuum-able. Returns the rewritten directory. */
+    * merge-on-read view (base files minus the DV) into clean files; the
+    * base files + DV become vacuum-able. Returns the rewritten directory. */
   def s25Apply(spark: SparkSession, root: String,
       dvPath: String): String = {
-    s25MorRead(spark, root, dvPath)
+    scan(spark, Seq(s"$root/base"), Seq(dvPath))
       .repartition(2)
       .write.mode("overwrite").parquet(s"$root/applied")
     s"$root/applied"
@@ -615,7 +663,7 @@ object Lakehouse extends QueryModule {
     * each other and with the logical DELETE. */
   def s25(spark: SparkSession, dir: String): DataFrame = {
     val (root, dv) = s25Commit(spark, dir)
-    val nDeleted = spark.read.parquet(dv).count()
+    val nDeleted = scan(spark, Seq(dv)).count()
     def stats(df: DataFrame, phase: String): DataFrame = df
       .groupBy(col("l_quantity").cast("int").as("qty_band"))
       .agg(count(lit(1)).as("n_rows"),
@@ -624,8 +672,8 @@ object Lakehouse extends QueryModule {
       .withColumn("phase", lit(phase))
       .withColumn("n_deleted", lit(nDeleted))
     val applied = s25Apply(spark, root, dv)
-    stats(s25MorRead(spark, root, dv), "mor")
-      .unionByName(stats(spark.read.parquet(applied), "cow"))
+    stats(scan(spark, Seq(s"$root/base"), Seq(dv)), "mor")
+      .unionByName(stats(scan(spark, Seq(applied)), "cow"))
       .select("phase", "qty_band", "n_rows", "key_sum", "sum_price", "n_deleted")
       .orderBy("phase", "qty_band")
   }
@@ -666,12 +714,11 @@ object Lakehouse extends QueryModule {
         .parquet(s"$root/base"),
       () => updates.unionByName(inserts)
         .repartition(2).write.mode("overwrite").parquet(s"$root/commit2")))
-    spark.read.parquet(s"$root/base").filter(matched)
-      .select(col("_metadata.file_path").as("file_path"),
-        col("_metadata.row_index").as("row_index"))
+    positionsOf(scan(spark, Seq(s"$root/base"), positions = true)
+      .filter(matched))
       .write.mode("overwrite").parquet(dv)
-    s25MorRead(spark, root, dv)
-      .unionByName(spark.read.parquet(s"$root/commit2"))
+    scan(spark, Seq(s"$root/base"), Seq(dv))
+      .unionByName(scan(spark, Seq(s"$root/commit2")))
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_rows"),
         sum("o_orderkey").cast("bigint").as("key_sum"),
@@ -709,7 +756,7 @@ object Lakehouse extends QueryModule {
     // generation A predates partitioning: its month zone maps genuinely
     // live in the files' contents (range boundaries came from sampling),
     // so they are read back — 4 files, one small scan
-    val mA = spark.read.parquet(s"$root/genA")
+    val mA = scan(spark, Seq(s"$root/genA"))
       .groupBy(col("_metadata.file_path").as("path"))
       .agg(min("ship_month").as("min_month"), max("ship_month").as("max_month"))
       .withColumn("gen", lit("A"))
@@ -748,11 +795,11 @@ object Lakehouse extends QueryModule {
     val cols = Seq("l_orderkey", "l_shipdate", "l_extendedprice", "ship_month")
     val (fa, fb) = (planned("A"), planned("B"))
     val a = if (fa.isEmpty) None
-      else Some(spark.read.parquet(fa: _*).select(cols.map(col): _*))
+      else Some(scan(spark, fa).select(cols.map(col): _*))
     val b = if (fb.isEmpty) None
-      else Some(spark.read.option("basePath", s"$root/genB").parquet(fb: _*)
+      else Some(scan(spark, fb, basePath = s"$root/genB")
         .select(cols.map(col): _*))
-    val scan = (a, b) match {
+    val window = (a, b) match {
       case (Some(x), Some(y)) => x.unionByName(y)
       case (Some(x), None) => x
       case (None, Some(y)) => y
@@ -760,12 +807,12 @@ object Lakehouse extends QueryModule {
       // violation — yield a 0-row frame whose schema is DERIVED from the
       // table itself (genB is always non-empty at build time), so it can
       // never drift from the parquet fixtures or the ship_month derivation
-      case _ => spark.read.option("basePath", s"$root/genB")
-        .parquet(s"$root/genB").select(cols.map(col): _*).limit(0)
+      case _ => scan(spark, listMonthFiles(s"$root/genB"),
+        basePath = s"$root/genB").select(cols.map(col): _*).limit(0)
     }
     // zone maps prune FILES; the row predicate still applies (an A file
     // can span the boundary)
-    scan.filter(col("ship_month").between(lo, hi))
+    window.filter(col("ship_month").between(lo, hi))
   }
 
   /** s26: PARTITION-SPEC EVOLUTION — the layout analogue of s18b's
@@ -850,25 +897,13 @@ object Lakehouse extends QueryModule {
     (manifestPaths(m, prefix + "add") ++ manifestPaths(m, prefix + "addnc"))
       .sorted
 
-  /** Snapshot of one parsed manifest: its data files (add ∪ addnc),
-    * merge-on-read anti-joined with every DV sidecar it carries (s25's
-    * positional form). */
+  /** Snapshot of one parsed manifest: its data files (add ∪ addnc) minus
+    * every DV sidecar it carries (s25's positional form) — for one member
+    * TABLE of a multi-table manifest when `table` names its kind prefix
+    * (l67's 'dim.' / 'feat.'). */
   private[graft] def snapshotOf(spark: SparkSession,
-      m: Seq[(String, String)]): DataFrame = snapshotOfKind(spark, m, "")
-
-  /** [[snapshotOf]] for one member TABLE of a multi-table manifest. */
-  private[graft] def snapshotOfKind(spark: SparkSession,
-      m: Seq[(String, String)], prefix: String): DataFrame = {
-    val base = spark.read.parquet(addPathsK(m, prefix): _*)
-    val dvs = manifestPaths(m, prefix + "dv")
-    if (dvs.isEmpty) base
-    else base
-      .withColumn("file_path", col("_metadata.file_path"))
-      .withColumn("row_index", col("_metadata.row_index"))
-      .join(broadcast(dvs.map(spark.read.parquet(_)).reduce(_ unionByName _)),
-        Seq("file_path", "row_index"), "left_anti")
-      .drop("file_path", "row_index")
-  }
+      m: Seq[(String, String)], table: String = ""): DataFrame =
+    scan(spark, addPathsK(m, table), manifestPaths(m, table + "dv"))
 
   /** Snapshot at `version` of the log. */
   private[graft] def s28Snapshot(spark: SparkSession, log: String,
@@ -935,9 +970,6 @@ object Lakehouse extends QueryModule {
     val newAdds = (toAdds -- fromAdds).toSeq.sorted
     val newDvs = (paths(mT, "dv") -- paths(mF, "dv")).toSeq.sorted
     val oldDvs = paths(mF, "dv").toSeq.sorted
-    def readDvs(ps: Seq[String]): Option[DataFrame] =
-      if (ps.isEmpty) None
-      else Some(ps.map(spark.read.parquet(_)).reduce(_ unionByName _))
     // pre-images: positions newly tombstoned in the window = new DV rows
     // minus positions already dead at vFrom, RESTRICTED to files that
     // were part of vFrom's snapshot — a position in a file added after
@@ -951,12 +983,13 @@ object Lakehouse extends QueryModule {
     // drift must never silently drop pre-images.
     val fromAddsFs = fromAdds.map(asFsPath)
     val toAddsFs = toAdds.map(asFsPath)
-    val removed = readDvs(newDvs) match {
-      case None => None
-      case Some(nd) =>
-        val dead = readDvs(oldDvs)
-          .map(od => nd.join(od, Seq("file_path", "row_index"), "left_anti"))
-          .getOrElse(nd)
+    val removed =
+      if (newDvs.isEmpty) None
+      else {
+        val nd = scan(spark, newDvs)
+        val dead =
+          if (oldDvs.isEmpty) nd
+          else nd.join(scan(spark, oldDvs), Seq("file_path", "row_index"), "left_anti")
         // one distinct-file fetch (planner metadata, delta-sized), then
         // classify each file: vFrom add → pre-image source; vTo-only add →
         // internal churn (excluded); neither → corrupt sidecar / drift
@@ -968,31 +1001,18 @@ object Lakehouse extends QueryModule {
           s"DV rows reference files in neither manifest of $window " +
             s"(path-spelling drift or corrupt sidecar): ${stray.take(3).mkString(", ")}")
         if (touched.isEmpty) None
-        else Some(spark.read.parquet(touched.map(asFsPath): _*)
-          .withColumn("file_path", col("_metadata.file_path"))
-          .withColumn("row_index", col("_metadata.row_index"))
+        else Some(scan(spark, touched.map(asFsPath), positions = true)
           .join(broadcast(dead.filter(col("file_path").isin(touched: _*))),
             Seq("file_path", "row_index"), "left_semi")
           .drop("file_path", "row_index"))
-    }
+      }
     // post-images: rows of the new add-files still live at vTo. Only the
     // WINDOW's new DVs can tombstone them — a DV committed at or before
     // vFrom references only vFrom-era files, disjoint from newAdds — so
     // the anti-join side stays delta-sized even on a long-lived table
     // whose accumulated DV history keeps growing.
     val added =
-      if (newAdds.isEmpty) None
-      else {
-        val a = spark.read.parquet(newAdds: _*)
-        Some(readDvs(newDvs) match {
-          case None => a
-          case Some(dv) => a
-            .withColumn("file_path", col("_metadata.file_path"))
-            .withColumn("row_index", col("_metadata.row_index"))
-            .join(broadcast(dv), Seq("file_path", "row_index"), "left_anti")
-            .drop("file_path", "row_index")
-        })
-      }
+      if (newAdds.isEmpty) None else Some(scan(spark, newAdds, newDvs))
     def keysOf(df: Option[DataFrame]): DataFrame = df match {
       case Some(d) => d.select(col(key).as("_cdf_k")).distinct()
       case None => spark.range(0).select(lit(null).cast("long").as("_cdf_k"))
@@ -1017,46 +1037,6 @@ object Lakehouse extends QueryModule {
     }
   }
 
-  /** Build the s28 versioned table: v0 = the base orders table; v1 = a
-    * MERGE commit in s27's merge-on-read form — one DV sidecar
-    * tombstoning the deleted (o_orderkey%5==0, unless updated) and
-    * updated (o_orderkey%7==0) rows by position, plus one appended file
-    * carrying the updated versions (+1000.0) and the brand-new keys
-    * (%13, shifted, status 'N'). Returns the commit-log path. */
-  private[graft] def s28Build(spark: SparkSession, dir: String): String = {
-    val root = Tables.scratchPath("s28_table", dir)
-    val log = s"$root/log"
-    wipeLog(log)
-    val orders = Tables.orders(spark, dir)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    val updated = pmod(col("o_orderkey"), lit(7)) === 0
-    val deleted = pmod(col("o_orderkey"), lit(5)) === 0 && !updated
-    // base and the v1 append both derive from the source relation —
-    // independent writes, overlapped (guide §2.6); the DV waits for base
-    // (it references written positions). Pointer commits land in version
-    // order afterwards — driver-side pointer IO, same committed bytes.
-    graft.Harness.inParallel(Seq(
-      () => orders.repartition(4).write.mode("overwrite")
-        .parquet(s"$root/base"),
-      () => orders.filter(updated)
-        .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
-        .unionByName(orders.filter(pmod(col("o_orderkey"), lit(13)) === 0)
-          .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
-            lit("N").as("o_orderstatus"), col("o_totalprice")))
-        .repartition(2).write.mode("overwrite").parquet(s"$root/add1")))
-    spark.read.parquet(s"$root/base")
-      .filter(updated || deleted)
-      .select(col("_metadata.file_path").as("file_path"),
-        col("_metadata.row_index").as("row_index"))
-      .write.mode("overwrite").parquet(s"$root/dv1")
-    val baseAdds = listDataFiles(s"$root/base").map(("add", _))
-    s28Commit(spark, log, 0, baseAdds)
-    s28Commit(spark, log, 1,
-      baseAdds ++ listDataFiles(s"$root/add1").map(("add", _))
-        :+ (("dv", s"$root/dv1")))
-    log
-  }
-
   /** Session memo over a deterministic log build, keyed by input dir:
     * one build per dir per session, shared by every registered consumer
     * of the same table the way l21 rides l02's pair graph (Bench tags
@@ -1073,10 +1053,16 @@ object Lakehouse extends QueryModule {
   /** Memo for the 2-version s28 table (consumers: s28, h14). */
   private val S28BuildMemo = logMemo(0 to 1)
 
-  /** Memoized [[s28Build]] — what the registered consumers (s28, h14)
-    * call; a composed pipeline builds its source table once. */
+  /** The s28 versioned table, memoized — what the registered consumers
+    * (s28, h14) call; a composed pipeline builds its source table once.
+    * v0 = the base orders table; v1 = the first [[s28MergeStep]] of the
+    * chain (s27's merge-on-read MERGE form): one DV sidecar tombstoning
+    * the deleted (o_orderkey%5==0, unless updated) and updated
+    * (o_orderkey%7==0) rows by position, plus one appended file carrying
+    * the updated versions (+1000.0) and the brand-new keys (%13,
+    * shifted, status 'N'). */
   private[graft] def s28Table(spark: SparkSession, dir: String): String =
-    S28BuildMemo.getOrCompute(dir)(s28Build(spark, dir))
+    S28BuildMemo.getOrCompute(dir)(s28BuildSteps(spark, dir, "s28_table", 1))
 
   /** One MERGE step over the CURRENT snapshot of an s28-style log:
     * tombstone the deleted (key%pDel==0, unless updated) and updated
@@ -1093,9 +1079,7 @@ object Lakehouse extends QueryModule {
     val m = readManifest(log, v)
     val (adds, dvs) = (manifestPaths(m, "add"), manifestPaths(m, "dv"))
     // current snapshot WITH positions (merge-on-read over accumulated DVs)
-    val scan = spark.read.parquet(adds: _*)
-      .withColumn("file_path", col("_metadata.file_path"))
-      .withColumn("row_index", col("_metadata.row_index"))
+    val s = scan(spark, adds, dvs, positions = true)
     // LAZY snapshot relation: the DV write prunes to (file_path,
     // row_index, key) and the append prunes to the data columns — two
     // column-pruned parquet scans running CONCURRENTLY (guide §2.6 /
@@ -1106,17 +1090,13 @@ object Lakehouse extends QueryModule {
     // step is O(table), the pruned scans are O(columns used). The KB
     // DV broadcast is rebuilt by each write — planner metadata, not a
     // scan.
-    val s = if (dvs.isEmpty) scan
-      else scan.join(
-        broadcast(dvs.map(spark.read.parquet(_)).reduce(_ unionByName _)),
-        Seq("file_path", "row_index"), "left_anti")
     val upd = pmod(col("o_orderkey"), lit(pUpd)) === 0
     val del = pmod(col("o_orderkey"), lit(pDel)) === 0 && !upd
     val sData = s.drop("file_path", "row_index")
-    // DV and append both project the one materialized snapshot and land
+    // DV and append both project the one snapshot relation and land
     // in different directories — overlapped (guide §2.6)
     graft.Harness.inParallel(Seq(
-      () => s.filter(upd || del).select("file_path", "row_index")
+      () => positionsOf(s.filter(upd || del))
         .write.mode("overwrite").parquet(s"$root/dv$step"),
       () => sData.filter(upd)
         .withColumn("o_totalprice", col("o_totalprice") + priceDelta)
@@ -1129,13 +1109,25 @@ object Lakehouse extends QueryModule {
         ++ dvs.map(("dv", _)) :+ (("dv", s"$root/dv$step")))
   }
 
-  /** Build the multi-step table for h15: v0 = base orders, then THREE
-    * successive MERGE commits, each deriving its deletes/updates/inserts
-    * from the snapshot the previous commit left (DVs accumulate across
-    * base and earlier append files; inserted keys shift into disjoint
-    * ranges so the chain stays key-unique). Returns the log path. */
-  private[graft] def s28BuildSteps(spark: SparkSession, dir: String): String = {
-    val root = Tables.scratchPath("s28m_table", dir)
+  /** The MERGE chain's steps as (pDel, pUpd, priceDelta, pIns, shift,
+    * status): delta-sized daily feeds (≤ ~15% of keys touched per step —
+    * CDC deltas are small relative to the table; that is the premise the
+    * incremental consumers exist for). */
+  private val MergeChain = Seq(
+    (5, 7, 1000.0, 13, 100000000L, "N"),
+    (11, 9, 500.0, 17, 200000000L, "Q"),
+    (23, 15, 250.0, 29, 400000000L, "R"))
+
+  /** Build a MERGE-chain table under the scratch `name`: v0 = base
+    * orders, then the first `steps` of [[MergeChain]] as successive
+    * MERGE commits, each deriving its deletes/updates/inserts from the
+    * snapshot the previous commit left (DVs accumulate across base and
+    * earlier append files; inserted keys shift into disjoint ranges so
+    * the chain stays key-unique). The s28 table is its first step, h15's
+    * table all three. Returns the log path. */
+  private[graft] def s28BuildSteps(spark: SparkSession, dir: String,
+      name: String = "s28m_table", steps: Int = 3): String = {
+    val root = Tables.scratchPath(name, dir)
     val log = s"$root/log"
     wipeLog(log)
     Tables.orders(spark, dir)
@@ -1143,12 +1135,9 @@ object Lakehouse extends QueryModule {
       .repartition(4).write.mode("overwrite").parquet(s"$root/base")
     s28Commit(spark, log, 0,
       listDataFiles(s"$root/base").map(("add", _)))
-    // delta-sized daily feeds (≤ ~15% of keys touched per step — CDC
-    // deltas are small relative to the table; that is the premise the
-    // incremental consumers exist for)
-    s28MergeStep(spark, root, log, 1, 5, 7, 1000.0, 13, 100000000L, "N")
-    s28MergeStep(spark, root, log, 2, 11, 9, 500.0, 17, 200000000L, "Q")
-    s28MergeStep(spark, root, log, 3, 23, 15, 250.0, 29, 400000000L, "R")
+    for (((pDel, pUpd, delta, pIns, shift, status), i) <-
+        MergeChain.take(steps).zipWithIndex)
+      s28MergeStep(spark, root, log, i + 1, pDel, pUpd, delta, pIns, shift, status)
     log
   }
 
@@ -1212,21 +1201,17 @@ object Lakehouse extends QueryModule {
         .filter(pmod(col("l_orderkey"), lit(19)) === 0)
         .select("l_orderkey").distinct()
         .write.mode("overwrite").parquet(s"$root/eq")))
-    val base = spark.read.parquet(s"$root/base")
-    base.filter(col("l_quantity") < 3.0)
-      .select(col("_metadata.file_path").as("file_path"),
-        col("_metadata.row_index").as("row_index"))
+    val base = scan(spark, Seq(s"$root/base"), positions = true)
+    positionsOf(base.filter(col("l_quantity") < 3.0))
       .write.mode("overwrite").parquet(s"$root/dv")
     // both deletion counts ride ONE classification pass (left joins keep
     // every base row, flags mark which sidecar claimed it) and attach to
     // the survivors' aggregate as a broadcast 1-row frame — the counts
     // materialize inside the query's own job instead of two extra
     // driver-blocking count() jobs ahead of it
-    val dvDf = spark.read.parquet(s"$root/dv")
-    val eqDf = spark.read.parquet(s"$root/eq")
+    val dvDf = scan(spark, Seq(s"$root/dv"))
+    val eqDf = scan(spark, Seq(s"$root/eq"))
     val counts = base
-      .withColumn("file_path", col("_metadata.file_path"))
-      .withColumn("row_index", col("_metadata.row_index"))
       .join(broadcast(dvDf.withColumn("pos_del", lit(1))),
         Seq("file_path", "row_index"), "left")
       .join(broadcast(eqDf.withColumn("eq_del", lit(1))),
@@ -1235,7 +1220,12 @@ object Lakehouse extends QueryModule {
         sum(when(col("pos_del") === 1, 1L).otherwise(0L)).as("n_pos_del"),
         sum(when(col("pos_del").isNull && col("eq_del") === 1, 1L)
           .otherwise(0L)).as("n_eq_del"))
-    s29MorRead(spark, root)
+    // mixed-sidecar merge-on-read: base minus the positional DV (on
+    // position) minus the equality deletes (on the equality column set);
+    // anti-joins commute, so the order is immaterial — LakehouseSpec pins
+    // both orders equal
+    scan(spark, Seq(s"$root/base"), Seq(s"$root/dv"))
+      .join(broadcast(eqDf), Seq("l_orderkey"), "left_anti")
       .groupBy(col("l_quantity").cast("int").as("qty_band"))
       .agg(count(lit(1)).as("n_rows"),
         sum("l_orderkey").cast("bigint").as("key_sum"),
@@ -1272,7 +1262,7 @@ object Lakehouse extends QueryModule {
       dvPath: String): Seq[String] = {
     val current = manifestPaths(readManifest(log, s24Current(log)), "add")
       .map(asFsPath).toSet
-    spark.read.parquet(dvPath).select("file_path").distinct()
+    scan(spark, Seq(dvPath)).select("file_path").distinct()
       .collect().map(r => asFsPath(r.getString(0)))
       .filterNot(current).sorted.toIndexedSeq
   }
@@ -1319,11 +1309,9 @@ object Lakehouse extends QueryModule {
     // concurrently (guide §2.6): B derives its positional DV against
     // the v0 snapshot it read while A rewrites the first two files
     graft.Harness.inParallel(Seq(
-      () => spark.read.parquet(v0Adds: _*).filter(pred)
-        .select(col("_metadata.file_path").as("file_path"),
-          col("_metadata.row_index").as("row_index"))
+      () => positionsOf(scan(spark, v0Adds, positions = true).filter(pred))
         .write.mode("overwrite").parquet(s"$root/dv_b0"),
-      () => spark.read.parquet(rewritten: _*)
+      () => scan(spark, rewritten)
         .repartitionByRange(1, col("o_orderkey"))
         .write.mode("overwrite").parquet(s"$root/compact")))
     val v1Adds = listDataFiles(s"$root/compact") ++ untouched
@@ -1335,9 +1323,7 @@ object Lakehouse extends QueryModule {
     // retry path: validate, find the compacted files stale, re-derive
     val stale = s30StaleFiles(spark, log, s"$root/dv_b0")
     require(stale.nonEmpty, "the compaction must invalidate B's DV")
-    spark.read.parquet(v1Adds: _*).filter(pred)
-      .select(col("_metadata.file_path").as("file_path"),
-        col("_metadata.row_index").as("row_index"))
+    positionsOf(scan(spark, v1Adds, positions = true).filter(pred))
       .write.mode("overwrite").parquet(s"$root/dv_b1")
     s28Commit(spark, log, 2,
       v1Adds.map(("add", _)) :+ (("dv", s"$root/dv_b1")))
@@ -1351,20 +1337,6 @@ object Lakehouse extends QueryModule {
       .withColumn("stale_files", lit(stale.size))
       .orderBy("o_orderstatus")
   }
-
-  /** Mixed-sidecar merge-on-read: base minus positional DV (on
-    * position) minus equality deletes (on the equality column set).
-    * Anti-joins commute, so the application order is immaterial —
-    * LakehouseSpec pins both orders equal. */
-  private[graft] def s29MorRead(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/base")
-      .withColumn("file_path", col("_metadata.file_path"))
-      .withColumn("row_index", col("_metadata.row_index"))
-      .join(broadcast(spark.read.parquet(s"$root/dv")),
-        Seq("file_path", "row_index"), "left_anti")
-      .drop("file_path", "row_index")
-      .join(broadcast(spark.read.parquet(s"$root/eq")),
-        Seq("l_orderkey"), "left_anti")
 
   // ---------------------------------------------------------------- s31
 
@@ -1467,7 +1439,10 @@ object Lakehouse extends QueryModule {
     *   v3  MERGE against the compacted files: %11-deletes, %9-updates
     *       (+500), %17-inserts (fresh ids) — positions in the REWRITTEN
     *       files, pre-images recovered with their original row ids.
-    * Returns the log path. */
+    * The MERGE steps are written here, not through [[s28MergeStep]]:
+    * every row carries `_row_id` (post-images keep their insert-time id,
+    * inserts mint one from the key), so the shared step would have to
+    * branch on its caller. Returns the log path. */
   private[graft] def s31Build(spark: SparkSession, dir: String): String = {
     val root = Tables.scratchPath("s31_table", dir)
     val log = s"$root/log"
@@ -1493,10 +1468,8 @@ object Lakehouse extends QueryModule {
     val baseAdds = listDataFiles(s"$root/base").map(("add", _))
     s28Commit(spark, log, 0, baseAdds)
     // v1 MERGE
-    spark.read.parquet(s"$root/base")
-      .filter(upd || del)
-      .select(col("_metadata.file_path").as("file_path"),
-        col("_metadata.row_index").as("row_index"))
+    positionsOf(scan(spark, Seq(s"$root/base"), positions = true)
+      .filter(upd || del))
       .write.mode("overwrite").parquet(s"$root/dv1")
     s28Commit(spark, log, 1,
       baseAdds ++ listDataFiles(s"$root/add1").map(("add", _))
@@ -1511,15 +1484,13 @@ object Lakehouse extends QueryModule {
     // v3 MERGE against the compacted files
     val upd2 = pmod(col("o_orderkey"), lit(9)) === 0
     val del2 = pmod(col("o_orderkey"), lit(11)) === 0 && !upd2
-    val snap2 = spark.read.parquet(s"$root/compact")
+    val snap2 = scan(spark, Seq(s"$root/compact"), positions = true)
     // the v3 DV and append both read the compacted files and land in
     // different directories — overlapped (guide §2.6)
     graft.Harness.inParallel(Seq(
-      () => snap2.filter(upd2 || del2)
-        .select(col("_metadata.file_path").as("file_path"),
-          col("_metadata.row_index").as("row_index"))
+      () => positionsOf(snap2.filter(upd2 || del2))
         .write.mode("overwrite").parquet(s"$root/dv3"),
-      () => snap2.filter(upd2)
+      () => snap2.drop("file_path", "row_index").filter(upd2)
         .withColumn("o_totalprice", col("o_totalprice") + 500.0)
         .unionByName(snap2.filter(pmod(col("o_orderkey"), lit(17)) === 0)
           .select((col("o_orderkey") + 200000000L).as("o_orderkey"),
@@ -1824,14 +1795,12 @@ object Lakehouse extends QueryModule {
     })
     // v7's COMPACTION reads chunks 0-2, so it runs after the fan-out
     val rewritten = (0 to 2).flatMap(i => listDataFiles(s"$root/chunk$i"))
-    spark.read.parquet(rewritten: _*)
+    scan(spark, rewritten)
       .repartitionByRange(1, col("l_orderkey"))
       .write.mode("overwrite").parquet(s"$root/compact012")
     // v8: positional DELETE in the compacted file (quantity < 2)
-    spark.read.parquet(listDataFiles(s"$root/compact012"): _*)
-      .filter(col("l_quantity") < 2.0)
-      .select(col("_metadata.file_path").as("file_path"),
-        col("_metadata.row_index").as("row_index"))
+    positionsOf(scan(spark, listDataFiles(s"$root/compact012"), positions = true)
+      .filter(col("l_quantity") < 2.0))
       .write.mode("overwrite").parquet(s"$root/dv8")
     // pointer commits, in version order (driver-side, no Spark jobs):
     // v0..v6 chunk appends, v7 compaction (rm+add), v8 the DV, v9 append

@@ -430,7 +430,7 @@ object Scans extends QueryModule {
     // (the write-time-manifest move every table format makes; the old
     // form paid a full scan + distinct exchange just to list files)
     Lakehouse.manifest(spark, (1 to 2).flatMap(b =>
-      Lakehouse.listDataFiles(s"$root/batch=$b").map(p => (b, p))), "batch", li.schema)
+      Lakehouse.listDataFiles(s"$root/batch=$b").map(p => (b, p))), "batch")
   }
 
   /** Snapshot read: plan exactly the files the manifest attributes to
@@ -438,8 +438,8 @@ object Scans extends QueryModule {
     * contract named. */
   private[graft] def s21AsOf(spark: SparkSession, manifest: DataFrame,
       n: Int): DataFrame =
-    Lakehouse.readSnapshot(spark, manifest, col("batch") <= n,
-      s"no manifest files at batch <= $n — snapshot predates the first commit")
+    Lakehouse.scan(spark, Lakehouse.plannedFiles(manifest, col("batch") <= n,
+      s"no manifest files at batch <= $n — snapshot predates the first commit"))
 
   /** s13: JSON-lines sink/source round-trip — the lingua franca of
     * training-data interchange. Write documents as JSONL, read back under

@@ -71,7 +71,7 @@ object StreamCommit extends QueryModule {
       .agg(count(lit(1)).cast("bigint").as("n_rows"),
         min("value").as("min_price"), max("value").as("max_price"))
     val q = spark.readStream
-      .schema(spark.read.parquet(chunks).schema)
+      .schema(graft.operators.Lakehouse.footerSchema(spark, chunks))
       .option("maxFilesPerTrigger", 1)
       .parquet(chunks)
       .writeStream
@@ -158,7 +158,7 @@ object StreamCommit extends QueryModule {
     val hist = graft.operators.History
     for (w <- t31Applied(root) + 1 to v)
       hist.cdfFold(
-          spark.read.parquet(s"$root/state/v${w - 1}"),
+          graft.operators.Lakehouse.scan(spark, Seq(s"$root/state/v${w - 1}")),
           hist.cdfSigned(graft.operators.Lakehouse
             .s28Cdf(spark, log, w - 1, w, "o_orderkey")))
         .coalesce(1).write.mode("overwrite").parquet(s"$root/state/v$w")
@@ -173,7 +173,7 @@ object StreamCommit extends QueryModule {
   private[graft] def t31Consume(spark: SparkSession, root: String,
       log: String): Unit = {
     val q = spark.readStream
-      .schema(spark.read.parquet(s"$root/notify").schema)
+      .schema(graft.operators.Lakehouse.footerSchema(spark, s"$root/notify"))
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/notify")
       .writeStream
@@ -217,7 +217,7 @@ object StreamCommit extends QueryModule {
     val applied = t31Applied(root)
     require(applied == 3, s"the stream stopped at version $applied of 3")
     graft.operators.History
-      .cdfSurface(spark.read.parquet(s"$root/state/v$applied"))
+      .cdfSurface(graft.operators.Lakehouse.scan(spark, Seq(s"$root/state/v$applied")))
       .withColumn("final_version", lit(applied))
   }
 

@@ -58,8 +58,8 @@ class FeatureStoreSpec extends SparkSuite {
     assert(nReplaced > 0L, "the delta must touch some users")
     for (v <- 0 to 1) {
       val m = operators.Lakehouse.readManifest(log, v)
-      val dim = operators.Lakehouse.snapshotOfKind(spark, m, "dim.")
-      val feat = operators.Lakehouse.snapshotOfKind(spark, m, "feat.")
+      val dim = operators.Lakehouse.snapshotOf(spark, m, "dim.")
+      val feat = operators.Lakehouse.snapshotOf(spark, m, "feat.")
       val want = Tables.orderAll(llm.Features.pit(facts, dim))
       val got = Tables.orderAll(feat)
       assert(got.collect().toSeq === want.collect().toSeq,

@@ -135,7 +135,7 @@ class LakehouseSpec extends SparkSuite {
     val nDel = perFile.map(_._1).sum
     assert(spark.read.parquet(dv).count() === nDel)
     // merge-on-read: broadcast LEFT ANTI against the sidecar, one base scan
-    val mor = operators.Lakehouse.s25MorRead(spark, root, dv)
+    val mor = operators.Lakehouse.scan(spark, Seq(s"$root/base"), Seq(dv))
     val plan = mor.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
       s"MOR read must broadcast-anti-join the DV:\n${plan.take(600)}")
@@ -150,7 +150,7 @@ class LakehouseSpec extends SparkSuite {
     assert(dvFiles.nonEmpty)
     val manifest = operators.Lakehouse.manifest(spark,
       (baseFiles ++ dvFiles).toSeq.map(p => (1, p)) ++
-        files(applied).toSeq.map(p => (2, p)), "snapshot", mor.schema)
+        files(applied).toSeq.map(p => (2, p)), "snapshot")
     val (pruned, deleted) = operators.Lakehouse.s22Vacuum(spark, manifest, 2)
     assert(deleted === (baseFiles.size + dvFiles.size).toLong)
     assert(files(s"$root/base").isEmpty && files(dv).isEmpty)
@@ -207,7 +207,7 @@ class LakehouseSpec extends SparkSuite {
     val orders = Tables.orders(spark, sf)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     // the physical merged table, read back MOR ∪ commit2
-    val got = operators.Lakehouse.s25MorRead(spark, root, dv)
+    val got = operators.Lakehouse.scan(spark, Seq(s"$root/base"), Seq(dv))
       .unionByName(spark.read.parquet(s"$root/commit2"))
     // the logical merge computed directly on frames
     val expect = orders.filter(pmod(col("o_orderkey"), lit(7)) =!= 0)
@@ -291,7 +291,7 @@ class LakehouseSpec extends SparkSuite {
 
   test("s28: CDF ∘ apply == snapshot diff (v0 + changes == v1 row-for-row); " +
       "classification partitions the delta; expired versions refuse the feed") {
-    val log = operators.Lakehouse.s28Build(spark, sf)
+    val log = operators.Lakehouse.s28BuildSteps(spark, sf, "s28_table", 1)
     val snap0 = operators.Lakehouse.s28Snapshot(spark, log, 0)
     val snap1 = operators.Lakehouse.s28Snapshot(spark, log, 1)
     val cdf = operators.Lakehouse.s28Cdf(spark, log, 0, 1, "o_orderkey")
@@ -359,7 +359,9 @@ class LakehouseSpec extends SparkSuite {
       .join(broadcast(spark.read.parquet(s"$root/dv")),
         Seq("file_path", "row_index"), "left_anti")
       .drop("file_path", "row_index")
-    val posFirst = operators.Lakehouse.s29MorRead(spark, root)
+    val posFirst = operators.Lakehouse
+      .scan(spark, Seq(s"$root/base"), Seq(s"$root/dv"))
+      .join(broadcast(spark.read.parquet(s"$root/eq")), Seq("l_orderkey"), "left_anti")
     assert(posFirst.exceptAll(eqFirst).count() === 0L)
     assert(eqFirst.exceptAll(posFirst).count() === 0L)
     // conservation: every base row is survivor, positionally deleted, or
@@ -773,22 +775,38 @@ class LakehouseSpec extends SparkSuite {
   }
 
   test("s22's manifest is driver-local: reading it runs no Spark job") {
-    val manifest = operators.Lakehouse.s22Commit(spark, sf)
+    val lake = operators.Lakehouse
+    val manifest = lake.s22Commit(spark, sf)
+    // the reader's other shapes: an mf1 snapshot carrying a DV (s28 v1),
+    // an action-log replay (s33 v5) and one member of a multi-table
+    // manifest (l67's feature table, also carrying a DV)
+    val s28 = lake.readManifest(lake.s28Table(spark, sf), 1)
+    val s33 = lake.s33Manifest(lake.s33Build(spark, sf, "s33_table"), 5)
+    val l67 = lake.readManifest(llm.Features.l67Build(spark, sf)._1, 1)
+    assert(s28.exists(_._1 == "dv") && l67.exists(_._1 == "feat.dv"))
     val sc = spark.sparkContext
     val jobs = Harness.listen(spark)
     try {
       val files = manifest.collect()
       // s22AsOf's planning read
       manifest.filter(col("snapshot") === 3).select("path").collect()
-      // and the snapshot frame itself: read under the schema the commit
-      // recorded, so building it reads no parquet footer
-      val snap3 = operators.Lakehouse.s22AsOf(spark, manifest, 3)
+      // and the snapshot frames themselves: planned under the schema the
+      // writer recorded in the footer (read on the driver), DVs read
+      // under their constant schema, so building them runs no job
+      val snap3 = lake.s22AsOf(spark, manifest, 3)
+      val frames = Seq(lake.snapshotOf(spark, s28), lake.snapshotOf(spark, s33),
+        lake.snapshotOf(spark, l67, "feat."))
       org.apache.spark.GraftSparkBridge.waitListenerBusEmpty(sc, 10000L)
       assert(files.nonEmpty)
       assert(snap3.columns.toSeq ===
         Seq("l_orderkey", "l_shipdate", "l_extendedprice", "ship_month"))
+      assert(frames.map(_.columns.toSeq) === Seq(
+        Seq("o_orderkey", "o_orderstatus", "o_totalprice"),
+        Seq("l_orderkey", "l_quantity", "l_extendedprice", "ship_month"),
+        Seq("user_id", "fact_id", "fact_type", "fact_ts_ms", "state_type",
+          "state_value")))
       assert(jobs.take().isEmpty,
-        "collecting the manifest or building the snapshot ran a Spark job")
+        "collecting the manifest or building a snapshot ran a Spark job")
     } finally sc.removeSparkListener(jobs)
   }
 }

@@ -17,10 +17,11 @@ under it, keyed by the SF dir only, and two checkouts sharing one would
 read each other's tables. The environment (SPARK_GRAFT_CPUS,
 SPARK_DRIVER_MEM, SBT_OPTS, ...) passes through to sbt unchanged.
 
-Output, per id: jobs, tasks and task-seconds of each side's profiled
-runs as median [q1, q3], and in how many pairs the change's task-seconds
-were lower. The `=== id wall= jobs= tasks= compiles= taskSum= ===`
-headers are the only input read from ProfileQuery's output.
+Output, per id: jobs, tasks, Janino compiles and task-seconds of each
+side's profiled runs as median [q1, q3], and in how many pairs the
+change's task-seconds were lower. The
+`=== id wall= jobs= tasks= compiles= taskSum= ===` headers are the only
+input read from ProfileQuery's output.
 """
 import os
 import re
@@ -31,17 +32,17 @@ import sys
 import tempfile
 
 HEADER = re.compile(r"=== (\S+)\s+wall=[\d.]+ s\s+jobs=(\d+)\s+tasks=(\d+)"
-                    r"\s+compiles=\d+\s+taskSum=([\d.]+) s ===")
+                    r"\s+compiles=(\d+)\s+taskSum=([\d.]+) s ===")
 
 
 def profile(checkout, tmpdir, sf_dir, ids):
-    """One ProfileQuery run: {id: (jobs, tasks, task_s)}."""
+    """One ProfileQuery run: {id: (jobs, tasks, task_s, compiles)}."""
     env = dict(os.environ, _JAVA_OPTIONS=f"-Djava.io.tmpdir={tmpdir}")
     out = subprocess.run(
         ["sbt", "--batch", "-Dsbt.log.noformat=true",
          f"runMain graft.tools.ProfileQuery {sf_dir} {ids}"],
         cwd=checkout, env=env, capture_output=True, text=True)
-    got = {m[0]: (int(m[1]), int(m[2]), float(m[3]))
+    got = {m[0]: (int(m[1]), int(m[2]), float(m[4]), int(m[3]))
            for m in HEADER.findall(out.stdout)}
     if out.returncode != 0 or len(got) != len(ids.split(",")):
         sys.exit(f"ProfileQuery failed in {checkout} (exit {out.returncode}):\n"
@@ -69,7 +70,7 @@ def main():
             for s in order:
                 runs[s].append(profile(sides[s], tmp[s], sf_dir, ids))
                 print(f"pair {i + 1} {s}: " + "  ".join(
-                    f"{k} jobs={v[0]} task_s={v[2]:.3f}"
+                    f"{k} jobs={v[0]} compiles={v[3]} task_s={v[2]:.3f}"
                     for k, v in runs[s][-1].items()), file=sys.stderr, flush=True)
     finally:
         for d in tmp.values():
@@ -80,6 +81,7 @@ def main():
             rows = [r[qid] for r in runs[s]]
             print(f"  {s:6}  jobs {summary([r[0] for r in rows])}"
                   f"  tasks {summary([r[1] for r in rows])}"
+                  f"  compiles {summary([r[3] for r in rows])}"
                   f"  task_s {summary([r[2] for r in rows])}")
         lower = sum(c[qid][2] < p[qid][2]
                     for p, c in zip(runs["parent"], runs["change"]))
